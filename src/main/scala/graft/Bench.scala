@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark entrypoint: runs every registered query on
   * `SPARK_GRAFT_SF_DIR`, writes the full per-query steady-state seconds
@@ -23,6 +23,10 @@ import org.apache.spark.sql.SparkSession
   *      that mis-attribution is what made `p10_pending_filter` read
   *      4.14 s in round 2 while the query itself was unchanged.
   *
+  * A query that throws (non-fatally) in any pass is listed under
+  * `failed` and left out of every timing map and total: a failure must
+  * never read as a fast query. Fatal JVM errors end the run.
+  *
   * Output values are rounded to 3 decimals and keys sorted so the line
   * stays short and stable for the driver's parser.
   */
@@ -31,51 +35,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE's byte-based coalescing collapses the parallelism of
-      // byte-small but CPU-heavy stages: the dedup verify joins shuffle
-      // (long, long) candidate pairs whose per-row cost is a shingle
-      // merge scan, and the 1 MiB default floor folded 32 partitions to
-      // ~4 at mid-size, tripling d3's wall time (BASELINE.md round-7
-      // ScalingCheck isolation). 64 KiB keeps the floor below
-      // total/parallelism wherever per-row compute still matters.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // split single-file scans: the sf fixtures are one parquet file
-      // per table (lineitem sf0.1 ≈ 11 MB), so the 128 MB default makes
-      // every scan stage ONE task and serializes map-side work (s19's
-      // z-key ran at ~1× parallelism on 32 cores). 4 MB mimics the
-      // many-split layout a real table has at cluster scale; a real
-      // deployment keeps the default — this tunes LOCAL parallelism,
-      // not the plan shape.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // sorted bucket scans: expose sortBy order from one-file-per-bucket
-      // tables (s18) so bucketed merge joins need neither Exchange nor Sort
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    // Dev-only A/B knob (unset for the driver's runs): extra
-    // "key=value;key=value" session confs, so config experiments run
-    // against the identical bench without a recompile.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).filter(_.nonEmpty)
-      .foreach { kv =>
-        // fail loudly on malformed entries (r17 advisor: a dropped or
-        // empty-keyed token makes an A/B run silently measure the
-        // baseline), and log each applied pair so the run's log proves
-        // the conf landed
-        val Array(k, v) = kv.split("=", 2) match {
-          case ok @ Array(key, _) if key.nonEmpty => ok
-          case _ => sys.error(s"SPARK_GRAFT_EXTRA_CONF: malformed entry '$kv' (want key=value)")
-        }
-        System.err.println(s"[bench] extra conf: $k=$v")
-        builder.config(k, v)
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build()
 
     // Dev-only subset filter (unset for the driver's full runs).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -93,9 +53,22 @@ object Bench {
     // fresh steady state is seconds.
     queries.Caches.release(spark, sfDir)
 
+    // Runs one query to completion; a non-fatal failure marks it
+    // failed (logged once) and it is never run or timed again.
+    val failed = scala.collection.mutable.SortedSet.empty[String]
+    def run(name: String, fn: queries.QueryFn): Boolean =
+      !failed(name) && {
+        try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+          false
+        }
+      }
+
     val warmSecs = ordered.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).queryExecution.toRdd.count() catch { case _: Throwable => }
+      run(name, fn)
       name -> (System.nanoTime() - t0) / 1e9
     }.toMap
     // The difflib-parity UDF loops need ~3 executions before C2 settles
@@ -103,9 +76,7 @@ object Bench {
     // slow after the first keeps the measured minimum honest instead of
     // JIT-state-dependent across bench invocations.
     ordered.foreach { case (name, fn) =>
-      if (warmSecs.getOrElse(name, 0.0) > 2.0) {
-        try fn(spark, sfDir).queryExecution.toRdd.count() catch { case _: Throwable => }
-      }
+      if (warmSecs(name) > 2.0) run(name, fn)
     }
 
     // Process-CPU seconds per query alongside wall seconds: on a
@@ -121,10 +92,10 @@ object Bench {
       ordered.foreach { case (name, fn) =>
         val c0 = osBean.getProcessCpuTime
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).queryExecution.toRdd.count() } catch { case _: Throwable => }
+        val ok = run(name, fn)
         val sec = (System.nanoTime() - t0) / 1e9
         val cpuSec = (osBean.getProcessCpuTime - c0) / 1e9
-        if (sec < best.getOrElse(name, Double.MaxValue)) {
+        if (ok && sec < best.getOrElse(name, Double.MaxValue)) {
           best(name) = sec
           bestCpu(name) = cpuSec // CPU of the SAME pass as the reported wall
         }
@@ -143,8 +114,7 @@ object Bench {
       ordered.foreach { case (name, fn) =>
         queries.Caches.release(spark, sfDir)
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).queryExecution.toRdd.count() catch { case _: Throwable => }
-        cold(name) = (System.nanoTime() - t0) / 1e9
+        if (run(name, fn)) cold(name) = (System.nanoTime() - t0) / 1e9
       }
     }
 
@@ -156,24 +126,19 @@ object Bench {
     // the committed record (load >> cpus while wall inflates under flat
     // CPU = contention, not regression).
     val loadAvg = osBean.getSystemLoadAverage
-    val qs = ordered.map { case (name, _) =>
-      s"\"$name\":${fmt(best(name))}"
-    }.mkString("{", ",", "}")
-    val qsCpu = ordered.map { case (name, _) =>
-      s"\"$name\":${fmt(bestCpu(name))}"
-    }.mkString("{", ",", "}")
-    val total = best.values.sum
-    val cpuTotal = bestCpu.values.sum
-    val coldTotal = cold.values.sum
-    val qsCold =
-      if (cold.isEmpty) "{}"
-      else ordered.map { case (name, _) =>
-        s"\"$name\":${fmt(cold(name))}"
-      }.mkString("{", ",", "}")
+    val ok = ordered.map(_._1).filterNot(failed)
+    def obj(m: String => Double): String =
+      ok.map(name => s"\"$name\":${fmt(m(name))}").mkString("{", ",", "}")
+    val total = ok.map(best).sum
+    val cpuTotal = ok.map(bestCpu).sum
+    val coldTotal = cold.values.sum // a failed query is never run cold
+    val qsCold = if (cold.isEmpty) "{}" else obj(cold)
+    val failedJson = failed.map(n => s"\"$n\"").mkString("[", ",", "]")
     val full =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpu_total":${fmt(cpuTotal)},""" +
         s""""cold_total":${fmt(coldTotal)},"load_avg":${fmt(loadAvg)},""" +
-        s""""queries":$qs,"queries_cpu":$qsCpu,"queries_cold":$qsCold,"sf":"$sfDir"}"""
+        s""""queries":${obj(best)},"queries_cpu":${obj(bestCpu)},"queries_cold":$qsCold,""" +
+        s""""failed":$failedJson,"sf":"$sfDir"}"""
     Files.write(Paths.get("bench_results.json"), full.getBytes(StandardCharsets.UTF_8))
 
     // The FULL contract line ({"metric",...,"queries":{...}}) goes to
@@ -189,14 +154,15 @@ object Bench {
     // mid-JSON: "parsed": null — the head of the line was cut, so the
     // tail never contained a complete '{"metric"...' candidate. With
     // full-then-short, the short line is the only complete candidate
-    // in the tail; a full-stream consumer can prefer the first.)
-    val slowest = best.toSeq.sortBy(-_._2).take(5)
+    // in the tail.) Its own metric key keeps a consumer that takes the
+    // last "metric":"total" line on the full record.
+    val slowest = ok.map(n => n -> best(n)).sortBy(-_._2).take(5)
       .map { case (n, v) => s"""{"query":"$n","sec":${fmt(v)}}""" }
       .mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
+    val line = s"""{"metric":"total_summary","value":${fmt(total)},"unit":"sec",""" +
       s""""cpu_total":${fmt(cpuTotal)},"cold_total":${fmt(coldTotal)},""" +
       s""""load_avg":${fmt(loadAvg)},""" +
-      s""""n_queries":${best.size},"slowest":$slowest,"sf":"$sfDir",""" +
+      s""""n_queries":${ok.size},"n_failed":${failed.size},"slowest":$slowest,"sf":"$sfDir",""" +
       s""""detail":"bench_results.json"}"""
     println(line)
     spark.stop()

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -75,18 +74,17 @@ object FuzzyJoin {
     // pair; the wide columns re-attach in the final join-back below.
     val cSlim = c.select(col("_cand_id"), col("_cand_lc"), col("_cand_len"))
     // Declarative similarity-join shape: crossJoin + threshold filter on
-    // the native graft_similarity expression. In a session with
-    // GraftExtensions installed (Verify/Bench), SimilarityJoinRule
-    // rewrites this into the whole-operator SimilarityJoinExec — the
-    // candidate side is collected ONCE (it is small by construction and
-    // size-guarded by autoBroadcastJoinThreshold) and names are
-    // lowercased once per ROW, not once per pair. Elsewhere the plan
-    // stays a nested-loop join whose And(band, sim ≥ t) short-circuits
-    // the quadratic ratio behind the codegen'd length band. The ratio
+    // the native graft_similarity expression, which GraftSession's
+    // extensions resolve. SimilarityJoinRule rewrites it into the
+    // whole-operator SimilarityJoinExec — the candidate side is
+    // collected ONCE (it is small by construction and size-guarded by
+    // autoBroadcastJoinThreshold) and names are lowercased once per
+    // ROW, not once per pair. Over that size guard the plan stays a
+    // nested-loop join whose And(band, sim ≥ t) short-circuits the
+    // quadratic ratio behind the codegen'd length band. The ratio
     // returned at or above the threshold is exact in both paths, so
     // `_sim` and the argmax agree with the UDF formulation this
     // replaces (MatchSpec pins that equivalence).
-    GraftExtensions.register(cands.sparkSession)
     val simCol = expr("graft_similarity(_cand_lc, _base_lc)")
     val scored = cSlim.crossJoin(b)
       .where(band && simCol >= lit(threshold))

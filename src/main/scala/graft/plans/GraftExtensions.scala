@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Add, And, Cast, Expression, ExpressionInfo, GreaterThan, GreaterThanOrEqual, Least, Length, LessThanOrEqual, Literal, Lower, Multiply}
@@ -10,10 +9,9 @@ import org.apache.spark.sql.types.DoubleType
 
 /** Engine extension point (SparkSessionExtensions): registers the
   * native [[GraftSimilarity]] expression as SQL `graft_similarity` and
-  * injects [[SimilarityBandRule]]. Install with
-  * `spark.sql.extensions=graft.plans.GraftExtensions`, or call
-  * [[GraftExtensions.register]] on a live session (function only —
-  * optimizer rules are builder-time).
+  * injects [[SimilarityBandRule]] and the native similarity-join
+  * rules. Installed once per session by `graft.GraftSession`
+  * (`spark.sql.extensions=graft.plans.GraftExtensions`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -69,14 +67,6 @@ object GraftExtensions {
         require(children.length == 2, "graft_l2sq(a, b) takes exactly 2 arguments")
         GraftL2Sq(children.head, children(1))
       })
-
-  /** Register the SQL functions on an already-built session. */
-  def register(spark: SparkSession): Unit =
-    Seq(similarityFunction, rollingHashFunction, shinglesFunction,
-        dotFunction, l2sqFunction).foreach {
-      case (id, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
 }
 
 /** Optimizer rule: a filter `graft_similarity(a, b) >= t` (or `>`) with a

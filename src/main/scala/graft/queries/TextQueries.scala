@@ -1440,15 +1440,13 @@ object TextQueries {
       winnowedFingerprints(Tables.documents(s, dir))
         .orderBy("doc_id", "fp_pos", "fp_h")),
 
-    "t5_rolling_hash" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
+    "t5_rolling_hash" -> ((s, dir) =>
       Tables.documents(s, dir)
         .select(col("doc_id"), expr("graft_rolling_hash(text)").as("_rh"))
         .select(col("doc_id"),
           expr("_rh[0]").as("doc_hash"),
           expr("_rh[1]").as("min_gram_hash"))
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
 
     // ---- T7: composite quality-rule filter — the published
     // Gopher/C4-style heuristic gate a corpus pipeline applies before

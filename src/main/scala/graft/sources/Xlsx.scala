@@ -330,11 +330,13 @@ object Xlsx {
     val dbf = javax.xml.parsers.DocumentBuilderFactory.newInstance()
     dbf.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
     val doc = dbf.newDocumentBuilder().parse(new java.io.ByteArrayInputStream(xml))
-    val cells = doc.getElementsByTagName("c")
+    // Snapshot the live NodeList once: every DOM mutation below
+    // invalidates its cache, and indexing it afterwards re-walks the
+    // document from the start — O(updates × cells) on a big sheet.
+    val live = doc.getElementsByTagName("c")
+    val cells = Array.tabulate(live.getLength)(i => live.item(i).asInstanceOf[org.w3c.dom.Element])
     val remaining = scala.collection.mutable.Set.empty[String] ++ updates.keySet
-    var i = 0
-    while (i < cells.getLength) {
-      val c = cells.item(i).asInstanceOf[org.w3c.dom.Element]
+    cells.foreach { c =>
       val ref = c.getAttribute("r")
       updates.get(ref).foreach { v =>
         c.removeAttribute("t") // numeric cell: no type attribute
@@ -344,7 +346,6 @@ object Xlsx {
         c.appendChild(ve)
         remaining -= ref
       }
-      i += 1
     }
     require(remaining.isEmpty,
       s"rewrite targets not present in sheet: ${remaining.toSeq.sorted.mkString(", ")}")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.sources.Xlsx
-import org.apache.spark.sql.SparkSession
 
 /** One-off fixture generator: converts `fixtures/raw_vitya.csv` (the
   * committed raw-workbook-shaped CSV) into `fixtures/raw_vitya.xlsx`
@@ -10,11 +9,7 @@ import org.apache.spark.sql.SparkSession
   * construction, and the gate fails if either codec drifts. */
 object MakeXlsxFixture {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build(logLevel = "WARN")
     val raw = spark.read
       .option("header", "true").option("multiLine", "true")
       .csv("fixtures/raw_vitya.csv")

@@ -3,12 +3,10 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool (r17 optimization round): dump `explain("formatted")` for a
-  * list of queries to `plans/<tag>/<query>_<suffix>.txt`, under the SAME
-  * session configuration as [[graft.Bench]] so the captured shapes are
-  * the ones the bench times.
+/** The one plan printer: dump `explain("formatted")` for a list of
+  * queries to `plans/<tag>/<query>_<suffix>.txt`, in the
+  * [[graft.GraftSession]] that Bench and Verify run, so the captured
+  * shapes are the ones the bench times.
   *
   * Usage: `SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=... \
   *   sbt "runMain graft.tools.PlanDump <suffix> <q1> <q2> ..."`
@@ -19,18 +17,7 @@ object PlanDump {
     val suffix = args.headOption.getOrElse("before")
     val names = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build()
     Files.createDirectories(Paths.get("plans/r17"))
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)

@@ -3,11 +3,11 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiling harness (optimization rounds): runs the named queries
-  * with the EXACT Bench session configuration and, per query, splits
-  * the steady-state wall into construct (query-fn eager work: memo
+  * in Bench's session ([[graft.GraftSession]], so a `-Dspark.*` A/B
+  * conf applies here too) and, per query, splits the steady-state
+  * wall into construct (query-fn eager work: memo
   * builds, counts, checkpoints), plan (toRdd), and execute, alongside
   * scheduler-side counters (jobs / stages / tasks / summed task time /
   * executor run time / GC) from a listener. The per-phase deltas make
@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * timed region is paying driver-side eager actions.
   *
   * Usage: SPARK_GRAFT_ONLY=a,b,c sbt "runMain graft.tools.Profile"
-  * (args also accepted; default = 15 slowest from the last bench map).
+  * (args also accepted; default = all queries, sorted by name).
   */
 object Profile {
   private class Counters extends SparkListener {
@@ -48,18 +48,7 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build()
     val listener = new Counters
     spark.sparkContext.addSparkListener(listener)
 

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Similarity
-import graft.plans.{GraftExtensions, GraftSimilarity, SimilarityBandRule}
+import graft.plans.{GraftSimilarity, SimilarityBandRule}
 import org.apache.spark.sql.catalyst.dsl.expressions._
 import org.apache.spark.sql.catalyst.dsl.plans._
 import org.apache.spark.sql.catalyst.expressions.{And, GreaterThanOrEqual, Literal}
@@ -14,7 +14,6 @@ class ExtensionsSpec extends AnyFunSuite {
   import SparkTestBase.spark
 
   test("graft_similarity evaluates through SQL with codegen, matching the JVM function") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val pairs = Seq(
       ("Power bank black", "power bank blue"),
@@ -47,7 +46,6 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("band rule rewrite preserves query results end-to-end") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq(
       ("power bank black 12000mah", "power bank blue 12000mah"),

@@ -1,19 +1,26 @@
 package graft
 
-import graft.plans.{BestSimilarityMatchRule, GraftExtensions, SimilarityJoinRule, SimilarityJoinStrategy}
+import graft.plans.{BestSimilarityMatchRule, SimilarityJoinRule}
 import graft.queries.Fixture
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The whole-operator extension path: declarative crossJoin + threshold
-  * filter transparently rewritten (Rule) into the custom logical node and
-  * planned (Strategy) into the native blocked similarity-join exec. */
-class SimilarityJoinSpec extends AnyFunSuite {
-  import SparkTestBase.{spark, sfDir}
+object SimilarityJoinSpec {
+  /** Runs `body` with SimilarityJoinRule excluded from the optimizer:
+    * the reference plan is the plain nested-loop join + expression
+    * filter, with no SimilarityJoin node for BestSimilarityMatchRule to
+    * rewrite either. Plans must be built and run inside `body`. */
+  def reference[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, SimilarityJoinRule.ruleName)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 
-  private def declarativeQuery() = {
-    GraftExtensions.register(spark)
+  /** FuzzyJoin's declarative shape over the fixture pair: crossJoin +
+    * similarity threshold filter. */
+  def declarativeQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val cands = Fixture.supplierSide(spark, sfDir)
       .filter(col("article") % 97 === 0)
       .select(col("article"), Fixture.supplierName(col("article")).as("cname"))
@@ -24,89 +31,73 @@ class SimilarityJoinSpec extends AnyFunSuite {
       .where(expr("graft_similarity(cname, bname) >= 0.62"))
       .select("article", "base_article")
   }
+}
 
-  private def withNativeJoin[T](body: => T): T = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ SimilarityJoinRule
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies :+ SimilarityJoinStrategy
-    try body finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == SimilarityJoinRule)
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies.filterNot(_ == SimilarityJoinStrategy)
-    }
-  }
+/** The whole-operator extension path: declarative crossJoin + threshold
+  * filter transparently rewritten (Rule) into the custom logical node and
+  * planned (Strategy) into the native blocked similarity-join exec. The
+  * engine session installs both; the reference side of each equivalence
+  * test runs with the rule excluded. */
+class SimilarityJoinSpec extends AnyFunSuite {
+  import SparkTestBase.{spark, sfDir}
+  import SimilarityJoinSpec.reference
+
+  private def declarativeQuery() = SimilarityJoinSpec.declarativeQuery(spark, sfDir)
+  private def pairs(df: DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("rule + strategy plan the declarative shape into the native exec") {
-    withNativeJoin {
-      val df = declarativeQuery()
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("SimilarityJoinExec") || plan.contains("SimilarityJoin"),
-        s"native operator not planned:\n$plan")
-      assert(!plan.contains("BroadcastNestedLoopJoin"),
-        s"cross join survived the rewrite:\n$plan")
-    }
+    val plan = declarativeQuery().queryExecution.executedPlan.toString
+    assert(plan.contains("SimilarityJoin"), s"native operator not planned:\n$plan")
+    assert(!plan.contains("BroadcastNestedLoopJoin"),
+      s"cross join survived the rewrite:\n$plan")
   }
 
   test("native similarity join returns exactly the expression-filtered cross join") {
-    val expected = declarativeQuery() // no extras: plain BNL join + expression filter
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val expected = reference(spark)(pairs(declarativeQuery()))
     assert(expected.nonEmpty, "threshold too high — test would be vacuous")
-    val native = withNativeJoin {
-      declarativeQuery().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    assert(native === expected)
+    assert(pairs(declarativeQuery()) === expected)
   }
 
   test("build side over autoBroadcastJoinThreshold falls back to the banded cross join") {
-    val expected = declarativeQuery() // plain BNL join + expression filter
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    withNativeJoin {
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1") // nothing fits
-      try {
-        val df = declarativeQuery()
-        val plan = df.queryExecution.executedPlan.toString
-        assert(!plan.contains("SimilarityJoinExec"),
-          s"driver-collect build side must not plan over the broadcast cap:\n$plan")
-        val rows = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        assert(rows === expected, "fallback plan changed results")
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    }
+    val expected = reference(spark)(pairs(declarativeQuery()))
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1") // nothing fits
+    try {
+      val df = declarativeQuery()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("SimilarityJoinExec"),
+        s"driver-collect build side must not plan over the broadcast cap:\n$plan")
+      assert(pairs(df) === expected, "fallback plan changed results")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("strict > excludes exact-threshold ties; >= keeps them") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     // ratio("abcd","abcf") = 2*3/(4+4) = 0.75 exactly
     val l = Seq("abcd").toDF("cname")
     val r = Seq("abcf").toDF("bname")
     def q(op: String) =
       l.crossJoin(r).where(expr(s"graft_similarity(cname, bname) $op 0.75"))
-    withNativeJoin {
-      val ge = q(">=")
-      assert(ge.queryExecution.executedPlan.toString.contains("SimilarityJoin"))
-      assert(ge.count() === 1L, ">= 0.75 must keep the exact-tie pair")
-      val gt = q(">")
-      assert(gt.queryExecution.executedPlan.toString.contains("SimilarityJoin"),
-        "strict > should still plan natively (with the strict flag)")
-      assert(gt.count() === 0L, "> 0.75 must exclude the exact-tie pair")
-    }
+    val ge = q(">=")
+    assert(ge.queryExecution.executedPlan.toString.contains("SimilarityJoin"))
+    assert(ge.count() === 1L, ">= 0.75 must keep the exact-tie pair")
+    val gt = q(">")
+    assert(gt.queryExecution.executedPlan.toString.contains("SimilarityJoin"),
+      "strict > should still plan natively (with the strict flag)")
+    assert(gt.count() === 0L, "> 0.75 must exclude the exact-tie pair")
   }
 
   test("j2's gated fuzzy-probe shape plans the native exec under the engine rules") {
-    withNativeJoin {
-      val df = graft.queries.MatchQueries.queries("j2_fuzzy_probe")(spark, sfDir)
-      // SparkPlan.nodeName strips the Exec suffix, so the physical node
-      // renders as "SimilarityJoin" too — assert the cross join is gone.
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("SimilarityJoin"),
-        s"FuzzyJoin's declarative shape must go native in an engine session:\n$plan")
-      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
-        s"cross join survived the rewrite:\n$plan")
-      assert(df.count() > 0)
-    }
+    val df = graft.queries.MatchQueries.queries("j2_fuzzy_probe")(spark, sfDir)
+    // SparkPlan.nodeName strips the Exec suffix, so the physical node
+    // renders as "SimilarityJoin" too — assert the cross join is gone.
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("SimilarityJoin"),
+      s"FuzzyJoin's declarative shape must go native in an engine session:\n$plan")
+    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+      s"cross join survived the rewrite:\n$plan")
+    assert(df.count() > 0)
   }
 
   // ---- BestSimilarityMatchRule shape guards: the partial-best rewrite
@@ -114,23 +105,9 @@ class SimilarityJoinSpec extends AnyFunSuite {
   // every almost-matching shape must fall back to the banded path with
   // identical rows. ----
 
-  private def withBestMatch[T](body: => T): T = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ SimilarityJoinRule :+ BestSimilarityMatchRule
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies :+ SimilarityJoinStrategy
-    try body finally {
-      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations
-        .filterNot(r => r == SimilarityJoinRule || r == BestSimilarityMatchRule)
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies.filterNot(_ == SimilarityJoinStrategy)
-    }
-  }
-
   /** FuzzyJoin's argmax shape over the fixture pair, parameterized on the
     * aggregate list and an optional extra residual conjunct. */
   private def argmaxShape(aggs: Seq[Column], extraResidual: Option[Column] = None): DataFrame = {
-    GraftExtensions.register(spark)
     val cands = Fixture.supplierSide(spark, sfDir)
       .filter(col("article") % 97 === 0)
       .select(col("article"), Fixture.supplierName(col("article")).as("cname"))
@@ -152,30 +129,26 @@ class SimilarityJoinSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
   test("canonical argmax shape rewrites to the partial-best exec") {
-    val expected = keyOf(argmaxShape(Seq(canonicalAgg))) // plain session: BNL + filter
+    val expected = reference(spark)(keyOf(argmaxShape(Seq(canonicalAgg))))
     assert(expected.nonEmpty)
-    withBestMatch {
-      val df = argmaxShape(Seq(canonicalAgg))
-      val plan = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      assert(plan.contains("PartialBestSimilarityJoin"),
-        s"canonical shape must go partial-best:\n$plan")
-      assert(keyOf(df) === expected)
-    }
+    val df = argmaxShape(Seq(canonicalAgg))
+    val plan = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0)
+    assert(plan.contains("PartialBestSimilarityJoin"),
+      s"canonical shape must go partial-best:\n$plan")
+    assert(keyOf(df) === expected)
   }
 
   test("two max-structs fall back to the banded path with identical rows") {
     val twoAggs = Seq(canonicalAgg,
       max(struct(col("base_article").as("k2"))).as("_b2"))
-    val expected = keyOf(argmaxShape(twoAggs)) // plain session: BNL + filter
+    val expected = reference(spark)(keyOf(argmaxShape(twoAggs)))
     assert(expected.nonEmpty)
-    withBestMatch {
-      val df = argmaxShape(twoAggs)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("PartialBestSimilarityJoin"),
-        s"two max-structs must NOT rewrite:\n$plan")
-      assert(keyOf(df) === expected, "fallback rows diverged")
-    }
+    val df = argmaxShape(twoAggs)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("PartialBestSimilarityJoin"),
+      s"two max-structs must NOT rewrite:\n$plan")
+    assert(keyOf(df) === expected, "fallback rows diverged")
   }
 
   test("rule declines nondeterministic residual and struct fields (rule-level)") {
@@ -188,7 +161,6 @@ class SimilarityJoinSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Max}
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter => LFilter}
     import graft.plans.{GraftSimilarity, PartialBestSimilarityJoin, SimilarityJoin}
-    GraftExtensions.register(spark)
     val candsPlan = Fixture.supplierSide(spark, sfDir)
       .filter(col("article") % 97 === 0)
       .select(col("article"), Fixture.supplierName(col("article")).as("cname"))
@@ -225,36 +197,32 @@ class SimilarityJoinSpec extends AnyFunSuite {
   }
 
   test("argmax shape over a too-big build side falls back with identical rows") {
-    val expected = keyOf(argmaxShape(Seq(canonicalAgg)))
-    withBestMatch {
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1") // nothing fits
-      try {
-        val df = argmaxShape(Seq(canonicalAgg))
-        val plan = df.queryExecution.executedPlan.toString
-        assert(!plan.contains("PartialBestSimilarityJoin") &&
-          !plan.contains("SimilarityJoinExec"),
-          s"over-threshold build side must not collect on the driver:\n$plan")
-        assert(keyOf(df) === expected, "fallback rows diverged")
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    }
+    val expected = reference(spark)(keyOf(argmaxShape(Seq(canonicalAgg))))
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1") // nothing fits
+    try {
+      val df = argmaxShape(Seq(canonicalAgg))
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("PartialBestSimilarityJoin") &&
+        !plan.contains("SimilarityJoinExec"),
+        s"over-threshold build side must not collect on the driver:\n$plan")
+      assert(keyOf(df) === expected, "fallback rows diverged")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("residual conjuncts survive as a filter above the native join") {
-    withNativeJoin {
-      val cands = Fixture.supplierSide(spark, sfDir)
-        .filter(col("article") % 97 === 0)
-        .select(col("article"), Fixture.supplierName(col("article")).as("cname"))
-      val base = Fixture.baseSide(spark, sfDir)
-        .select(col("article").as("base_article"),
-          Fixture.baseName(col("article"), col("name")).as("bname"))
-      val df = cands.crossJoin(base)
-        .where(expr("graft_similarity(cname, bname) >= 0.62 AND base_article % 2 = 0"))
-        .select("article", "base_article")
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("SimilarityJoin"), s"no native join:\n$plan")
-      val rows = df.collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(rows.forall(_._2 % 2 == 0), "residual predicate dropped")
-    }
+    val cands = Fixture.supplierSide(spark, sfDir)
+      .filter(col("article") % 97 === 0)
+      .select(col("article"), Fixture.supplierName(col("article")).as("cname"))
+    val base = Fixture.baseSide(spark, sfDir)
+      .select(col("article").as("base_article"),
+        Fixture.baseName(col("article"), col("name")).as("bname"))
+    val df = cands.crossJoin(base)
+      .where(expr("graft_similarity(cname, bname) >= 0.62 AND base_article % 2 = 0"))
+      .select("article", "base_article")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("SimilarityJoin"), s"no native join:\n$plan")
+    val rows = df.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(rows.forall(_._2 % 2 == 0), "residual predicate dropped")
   }
 }

@@ -169,5 +169,21 @@ class XlsxSpec extends AnyFunSuite {
     val e2 = intercept[IllegalArgumentException](
       Xlsx.rewrite(src, tmp("bad2.xlsx"), Map("B2" -> "1"), sheet = 7))
     assert(e2.getMessage.contains("sheet7"))
+
+    // a whole-column update (the writeback of a repriced list): every
+    // cell of the price column lands, every other cell is unchanged
+    import spark.implicits._
+    val n = 3000
+    val list = (1 to n).map(i => (s"item $i", i.toDouble, s"note $i")).toDF("name", "price", "note")
+    val listSrc = tmp("list.xlsx")
+    val listDst = tmp("list_updated.xlsx")
+    Xlsx.write(Seq(("list", list)), listSrc)
+    Xlsx.rewrite(listSrc, listDst,
+      (1 to n).map(i => s"B${i + 1}" -> s"${i * 10}").toMap)
+    val before = Xlsx.read(spark, listSrc).collect().map(r => (r.getString(0), r.getString(2)))
+    val after = Xlsx.read(spark, listDst).collect()
+    assert(after.length === n)
+    assert(after.map(_.getString(1)).toSeq === (1 to n).map(i => s"${i * 10}"))
+    assert(after.map(r => (r.getString(0), r.getString(2))).toSeq === before.toSeq)
   }
 }

@@ -1,19 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness: instrument the BSP label loop round-by-round. */
 object DevCluster {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build()
     val pairs = graft.SparkEntry.queries("d14_semantic_edges_ivf")(spark, dir)
       .select(col("id1").as("doc1"), col("id2").as("doc2")).cache()
     println(s"pairs: ${pairs.count()}")

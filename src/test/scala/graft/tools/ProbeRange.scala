@@ -1,13 +1,8 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object ProbeRange {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build()
     val df = spark.range(1000000).select(
       ((col("id") * 2654435761L) % 1000003).as("k"), col("id"),
       (col("id") % 997).as("payload"))

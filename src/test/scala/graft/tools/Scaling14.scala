@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off super-linear-growth measurement for d14's IVF-candidate
@@ -26,16 +25,7 @@ object Scaling14 {
   def main(args: Array[String]): Unit = {
     val srcDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val base = java.nio.file.Files.createTempDirectory("graft_scale14").toString
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build()
 
     val ks = Seq(1, 2, 4, 8)
     val src = spark.read.parquet(s"$srcDir/embeddings.parquet")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Wall-time growth measurement for the incremental connected-
@@ -22,16 +21,7 @@ object ScalingCc {
   def main(args: Array[String]): Unit = {
     val srcDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val base = java.nio.file.Files.createTempDirectory("graft_scale_cc").toString
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build()
 
     val ks = Seq(1, 2, 4, 8)
     val d = spark.read.parquet(s"$srcDir/documents.parquet")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off growth measurement for the GlobalOrder prefix-sum family
@@ -12,14 +11,7 @@ import org.apache.spark.sql.functions._
   * through one task — the plan PlanSpec pins out of t21/t24. */
 object ScalingPrefix {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build()
 
     def docs(n: Long) = spark.range(n).select(
       col("id").as("doc_id"),
