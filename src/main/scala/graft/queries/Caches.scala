@@ -1,10 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Central lifecycle registry for the per-(JVM, fixture-dir) state the
   * query modules memoize between invocations: cached DataFrames (BSP
-  * label frames, cascade intermediates, shingle/pair caches),
+  * label frames, the sync dataflow's intermediates, shingle/pair caches),
   * driver-side trained artifacts (PQ codebooks, IVF coarse centroids),
   * and materialized landing directories (s15/s16).
   *
@@ -25,22 +26,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Caches {
 
+  /** Cleanups per dir; each takes [[release]]'s `blocking` flag. */
   private val tracked =
-    new java.util.concurrent.ConcurrentHashMap[String, List[() => Unit]]()
+    new java.util.concurrent.ConcurrentHashMap[String, List[Boolean => Unit]]()
+
+  private def register(dir: String)(cleanup: Boolean => Unit): Unit =
+    tracked.merge(dir, List(cleanup), (older, newer) => newer ::: older)
 
   /** Register a cleanup thunk for a fixture dir, run (once) at
     * [[release]]. Thunks must be idempotent and order-independent. */
   def track(dir: String)(cleanup: () => Unit): Unit =
-    tracked.merge(dir, List(cleanup), (older, newer) => newer ::: older)
+    register(dir)(_ => cleanup())
 
   /** Cache `df` and register its unpersist for the dir's release —
-    * the pattern for query-internal frames that outlive one invocation
-    * (repeat invocations re-register; duplicate unpersists are no-ops
-    * on Spark's side). Returns the cached frame for chaining. */
+    * the pattern for query-internal frames that outlive one invocation.
+    * Spark's CacheManager keys caches by plan, so a repeat invocation
+    * that rebuilds an equal plan finds it cached and registers nothing:
+    * one cleanup per cached plan, however often it is asked for.
+    * Returns `df` for chaining. */
   def trackCached(dir: String, df: DataFrame): DataFrame = {
-    val cached = df.cache()
-    track(dir)(() => { cached.unpersist(); () })
-    cached
+    if (df.storageLevel == StorageLevel.NONE) {
+      df.cache()
+      register(dir)(blocking => { df.unpersist(blocking); () })
+    }
+    df
   }
 
   /** Eagerly localCheckpoint `df` — cutting its lineage to a
@@ -62,7 +71,7 @@ object Caches {
     val cp = df.localCheckpoint()
     cp.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(rdd => track(dir)(() => { rdd.unpersist(blocking = false); () }))
+    }.foreach(rdd => register(dir)(blocking => { rdd.unpersist(blocking); () }))
     cp
   }
 
@@ -85,9 +94,11 @@ object Caches {
       rm(path)
     }
 
-  /** Drop every memo registered for one (session, fixture dir):
-    * run+clear the tracked thunks and the match-cascade context.
-    * Returns the number of cleanups performed. */
+  /** Drop every memo registered for one fixture dir: run and clear
+    * its tracked thunks; cached frames and checkpoints unpersist with
+    * `blocking`. The registry is keyed by dir alone, so `s` does not
+    * narrow what is released. Returns the number of cleanups
+    * performed. */
   def release(s: SparkSession, dir: String, blocking: Boolean = false): Int = {
     val thunks = Option(tracked.remove(dir)).getOrElse(Nil)
     // best-effort: a thunk that throws (e.g. DROP TABLE through an
@@ -99,7 +110,7 @@ object Caches {
     // propagate (the JVM is already broken), and an interrupt is
     // re-flagged so the caller's cancellation still lands.
     thunks.foreach { t =>
-      try t.apply()
+      try t(blocking)
       catch {
         case e: InterruptedException =>
           Thread.currentThread().interrupt()
@@ -108,13 +119,12 @@ object Caches {
           System.err.println(s"[caches] release thunk failed for $dir: ${e.getMessage}")
       }
     }
-    thunks.size + MatchQueries.release(s, dir, blocking)
+    thunks.size
   }
 
   /** Release every dir's memos for a session. */
   def releaseAll(s: SparkSession, blocking: Boolean = false): Int = {
     import scala.jdk.CollectionConverters._
-    tracked.keySet().asScala.toSeq.map(release(s, _, blocking)).sum +
-      MatchQueries.releaseAll(s, blocking)
+    tracked.keySet().asScala.toSeq.map(release(s, _, blocking)).sum
   }
 }

@@ -19,15 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object CoreQueries {
 
-  // Supplier/base fixture analogs shared with the match/mutation suites —
-  // see graft.queries.Fixture (Spark construction + DuckDB SQL twins).
-  private def supplierSide(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Fixture.supplierSide(s, dir)
-  private def baseSide(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Fixture.baseSide(s, dir)
-  private val supplierSideSql = Fixture.supplierSideSql
-  private val baseSideSql = Fixture.baseSideSql
-
   val queries: Map[String, QueryFn] = Map(
     // ---- flagship aggregation (pricing summary à la TPC-H Q1) ----
     "q1_agg" -> ((s, dir) =>
@@ -87,8 +78,8 @@ object CoreQueries {
 
     // ---- J1: article match (last-wins dedup + inner equi-join) ----
     "j1_article_match" -> ((s, dir) => {
-      val sup = supplierSide(s, dir)
-      val base = baseSide(s, dir)
+      val sup = Fixture.supplierSide(s, dir)
+      val base = Fixture.baseSide(s, dir)
       sup.join(broadcast(base), Seq("article"), "inner")
         .select(
           col("article"),
@@ -103,8 +94,8 @@ object CoreQueries {
 
     // ---- J1 miss branch: new items (anti join) ----
     "j1_new_items" -> ((s, dir) => {
-      val sup = supplierSide(s, dir)
-      val base = baseSide(s, dir)
+      val sup = Fixture.supplierSide(s, dir)
+      val base = Fixture.baseSide(s, dir)
       sup.join(broadcast(base), Seq("article"), "left_anti")
         .select("article", "supplier_price")
         .orderBy("article")
@@ -112,8 +103,8 @@ object CoreQueries {
 
     // ---- J6: price-update join (skip |Δ| < 0.001 tolerance) ----
     "j6_price_update" -> ((s, dir) => {
-      val sup = supplierSide(s, dir)
-      val base = baseSide(s, dir)
+      val sup = Fixture.supplierSide(s, dir)
+      val base = Fixture.baseSide(s, dir)
       base.join(sup, Seq("article"), "inner")
         .filter(abs(col("supplier_price") - col("base_price")) >= 0.001)
         .select(
@@ -128,8 +119,8 @@ object CoreQueries {
 
     // ---- A6: match statistics (single-row summary) ----
     "a6_match_stats" -> ((s, dir) => {
-      val joined = supplierSide(s, dir)
-        .join(broadcast(baseSide(s, dir)), Seq("article"), "left")
+      val joined = Fixture.supplierSide(s, dir)
+        .join(broadcast(Fixture.baseSide(s, dir)), Seq("article"), "left")
       joined.agg(
         count(lit(1)).as("supplier_total"),
         count(col("base_price")).as("matched"),
@@ -218,8 +209,8 @@ object CoreQueries {
 
     // ---- O2: top-10 by |price change| (sort + limit) ----
     "o2_top_changes" -> ((s, dir) => {
-      val sup = supplierSide(s, dir)
-      val base = baseSide(s, dir)
+      val sup = Fixture.supplierSide(s, dir)
+      val base = Fixture.baseSide(s, dir)
       sup.join(broadcast(base), Seq("article"), "inner")
         .select(col("article"),
           round(Cleaning.priceChangePct(col("supplier_price"), col("base_price")), 4)
@@ -366,7 +357,7 @@ object CoreQueries {
         |ORDER BY p_partkey""".stripMargin,
 
     "j1_article_match" ->
-      s"""WITH sup AS ($supplierSideSql), base AS ($baseSideSql)
+      s"""WITH sup AS (${Fixture.supplierSideSql}), base AS (${Fixture.baseSideSql})
          |SELECT s.article, s.supplier_price, b.base_price,
          | round(s.supplier_price - b.base_price, 2) AS price_diff,
          | round(CASE WHEN b.base_price > 0
@@ -377,13 +368,13 @@ object CoreQueries {
          |ORDER BY article""".stripMargin,
 
     "j1_new_items" ->
-      s"""WITH sup AS ($supplierSideSql), base AS ($baseSideSql)
+      s"""WITH sup AS (${Fixture.supplierSideSql}), base AS (${Fixture.baseSideSql})
          |SELECT s.article, s.supplier_price FROM sup s
          |WHERE NOT EXISTS (SELECT 1 FROM base b WHERE b.article = s.article)
          |ORDER BY article""".stripMargin,
 
     "j6_price_update" ->
-      s"""WITH sup AS ($supplierSideSql), base AS ($baseSideSql)
+      s"""WITH sup AS (${Fixture.supplierSideSql}), base AS (${Fixture.baseSideSql})
          |SELECT b.article, b.base_price AS old_price,
          | s.supplier_price AS new_price,
          | round(CASE WHEN b.base_price > 0
@@ -394,7 +385,7 @@ object CoreQueries {
          |ORDER BY article""".stripMargin,
 
     "a6_match_stats" ->
-      s"""WITH sup AS ($supplierSideSql), base AS ($baseSideSql)
+      s"""WITH sup AS (${Fixture.supplierSideSql}), base AS (${Fixture.baseSideSql})
          |SELECT count(*) AS supplier_total,
          | count(b.base_price) AS matched,
          | count(*) - count(b.base_price) AS new_items,
@@ -458,7 +449,7 @@ object CoreQueries {
         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
 
     "o2_top_changes" ->
-      s"""WITH sup AS ($supplierSideSql), base AS ($baseSideSql)
+      s"""WITH sup AS (${Fixture.supplierSideSql}), base AS (${Fixture.baseSideSql})
          |SELECT s.article,
          | round(CASE WHEN b.base_price > 0
          |   THEN (s.supplier_price - b.base_price) / b.base_price * 100

@@ -719,11 +719,11 @@ object DedupQueries {
     // memoized per (session, dir) (r17; session added per the r17
     // advisor — a dir-only key would serve a LogicalRDD bound to a
     // stopped session, with unrecoverable truncated lineage, to a new
-    // session that skipped Caches.release; the MatchQueries.ctxCache
-    // convention): every invocation previously cut a FRESH
-    // localCheckpoint — re-featurizing the arrival batch once per
-    // consumer per bench pass; the memo also gives e15/e34 the same
-    // LogicalRDD, so the shared verdict cache below can hit
+    // session that skipped Caches.release): every invocation
+    // previously cut a FRESH localCheckpoint — re-featurizing the
+    // arrival batch once per consumer per bench pass; the memo also
+    // gives e15/e34 the same LogicalRDD, so the shared verdict cache
+    // below can hit
     e15Arrival.computeIfAbsent((s, dir), { case (_, d) =>
       Caches.track(d)(() => { e15Arrival.remove((s, d)); () })
       Caches.checkpointed(d,

@@ -19,14 +19,36 @@ import org.apache.spark.sql.functions._
   * Scale notes: all constructions are per-row expressions (no shuffle);
   * the supplier-side dedup is one hash shuffle on the join key, which the
   * subsequent joins reuse.
+  *
+  * Lifetime: [[plan]] holds no state. The frames its [[SyncPlan]] reuses
+  * are cached through `Caches.trackCached(dir, _)`, so
+  * `Caches.release(s, dir)` is the one call that drops them.
   */
 object Fixture {
 
-  /** Release the cached matching-cascade intermediates built over this
-    * fixture dir (delegates to [[MatchQueries.release]]) — call when a
-    * long-lived session is done with one dir. */
-  def release(s: SparkSession, dir: String, blocking: Boolean = false): Int =
-    MatchQueries.release(s, dir, blocking)
+  /** The sync dataflow over this dir: the two frames [[SyncPlan]] reads,
+    * with every simulated column constructed here, and its reused
+    * intermediates cached under `dir` for [[Caches.release]]. A fresh
+    * value per call — a later call builds equal plans, which Spark's
+    * CacheManager serves from the same caches. */
+  def plan(s: SparkSession, dir: String): SyncPlan = {
+    val article = col("article")
+    val supplier = supplierSide(s, dir).select(
+      article, col("supplier_price"),
+      supplierName(article).as("name"), supplierColor(article).as("color"),
+      // the article cell this list proposes (S7)
+      (article * 10 + 1).as("proposed_vitya"),
+      // the base row a new item is inserted after (O3/S8)
+      (article % 1000).as("anchor"))
+    // every 4th base row's article cell is already occupied (value =
+    // 10·article), the rest are empty — exercises the J8 existing-value
+    // guard (main.py:5961-6051)
+    val base = baseSide(s, dir).select(
+      article, col("base_price"),
+      baseName(article, col("name")).as("name"), baseColor(article).as("color"),
+      when(article % 4 === 0, article * 10).as("existing_vitya"))
+    new SyncPlan(supplier, base, Caches.trackCached(dir, _))
+  }
 
   // ---------------------------------------------------------------- supplier
   /** Supplier price list: lineitem keyed by l_partkey with deterministic

@@ -1,9 +1,6 @@
 package graft.queries
 
 import graft.functions.Cleaning
-import graft.operators.FuzzyJoin
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The reference's matching cascade (SURVEY.md §2.4, §3 E2):
@@ -13,123 +10,11 @@ import org.apache.spark.sql.functions._
   * reference's priority — color∧capacity > color > capacity > first in
   * file order (main.py:2693-2751) — as a scored row_number window.
   *
-  * Scale notes (100 TB):
-  *  - every stage joins on a key (article / extracted code), so the big
-  *    side shuffles at most once per stage and Catalyst picks
-  *    broadcast-hash where the dimension side is small;
-  *  - the cascade's "remove what earlier stages matched" is left_anti on
-  *    the same key — no extra shuffle beyond the stage join;
-  *  - fuzzy probing is the only non-equi stage and runs AFTER the pool
-  *    has been shrunk by the code stages; see
-  *    [[graft.operators.FuzzyJoin]] for the lossless-blocking design.
+  * The stages live in [[SyncPlan]]; each query here reads one of its
+  * frames from a fresh [[Fixture.plan]], whose shared intermediates are
+  * plan-keyed caches that `Caches.release(s, dir)` drops.
   */
 object MatchQueries {
-
-  // ---- builders ----------------------------------------------------------
-  //
-  // The cascade's stages share expensive intermediates (the supplier
-  // dedup window, the coded pools, the stage-1/2 results). Queries run
-  // one at a time but several queries reuse the same subtrees, and e2
-  // references bracket/unified results twice within one plan — so the
-  // intermediates are computed once per (session, sfDir) and CACHED.
-  // All inputs are immutable fixture files, so the cache is sound; at
-  // 100 TB this is the "materialize the match pool once per run"
-  // pattern, not a per-query rebuild.
-
-  private final class CascadeCtx(s: SparkSession, dir: String) {
-    val supplierSide: DataFrame = Fixture.supplierSide(s, dir).cache()
-    val baseSide: DataFrame = Fixture.baseSide(s, dir).cache()
-
-    /** Unmatched pool after the article stage (J1 miss branch). */
-    val newItems: DataFrame = supplierSide
-      .join(broadcast(baseSide.select("article")), Seq("article"), "left_anti")
-
-    /** New supplier rows with constructed name / color / bracket code /
-      * capacity (the inputs of the code-matching stages). */
-    val supCoded: DataFrame = newItems
-      .withColumn("name", Fixture.supplierName(col("article")))
-      .withColumn("color", Fixture.supplierColor(col("article")))
-      .withColumn("code", Cleaning.bracketCode(col("name")))
-      .withColumn("capacity", Cleaning.batteryCapacity(col("name")))
-      .cache()
-
-    /** Base rows with constructed name / color / bracket code / capacity. */
-    val baseCoded: DataFrame = baseSide
-      .select(col("article").as("base_article"), col("base_price"),
-        col("name").as("p_name"))
-      .withColumn("bname", Fixture.baseName(col("base_article"), col("p_name")))
-      .withColumn("bcolor", Fixture.baseColor(col("base_article")))
-      .withColumn("bcode", Cleaning.bracketCode(col("bname")))
-      .withColumn("bcapacity", Cleaning.batteryCapacity(col("bname")))
-      .cache()
-
-    /** J3 — bracket-code stage over the unmatched pool. */
-    val bracketBest: DataFrame =
-      bestPerArticle(supCoded.join(baseCoded, col("code") === col("bcode")), "code").cache()
-
-    /** J4 — unified-code stage over what the bracket stage left. */
-    val unifiedBest: DataFrame = {
-      val rest = supCoded.join(bracketBest.select("article"), Seq("article"), "left_anti")
-      val sup = rest.withColumn("ucode", Cleaning.unifiedCodeExpr(col("name")))
-        .filter(col("ucode").isNotNull)
-      val base = baseCoded.withColumn("bucode", Cleaning.unifiedCodeExpr(col("bname")))
-        .filter(col("bucode").isNotNull)
-      bestPerArticle(sup.join(base, col("ucode") === col("bucode")), "ucode").cache()
-    }
-  }
-
-  private val ctxCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), CascadeCtx]()
-  private def ctx(s: SparkSession, dir: String): CascadeCtx =
-    ctxCache.computeIfAbsent((s, dir), _ => new CascadeCtx(s, dir))
-
-  /** Cache lifecycle: drop and unpersist the cascade intermediates for
-    * one (session, fixture dir). A long-lived session serving many
-    * fixture dirs calls this when a dir's run is done, so old caches
-    * don't pin executor storage forever. Returns the number of
-    * unpersisted frames (0 when nothing was cached). */
-  def release(s: SparkSession, dir: String, blocking: Boolean = false): Int = {
-    val c = ctxCache.remove((s, dir))
-    if (c == null) 0
-    else {
-      val frames = Seq(c.supplierSide, c.baseSide, c.supCoded, c.baseCoded,
-        c.bracketBest, c.unifiedBest)
-      frames.foreach(_.unpersist(blocking))
-      frames.size
-    }
-  }
-
-  /** Release every cached cascade context of a session. */
-  def releaseAll(s: SparkSession, blocking: Boolean = false): Int = {
-    import scala.jdk.CollectionConverters._
-    ctxCache.keySet().asScala.toSeq.collect {
-      case k @ (ks, _) if ks eq s => release(ks, k._2, blocking)
-    }.sum
-  }
-
-  private def newItems(s: SparkSession, dir: String): DataFrame = ctx(s, dir).newItems
-  private def supCoded(s: SparkSession, dir: String): DataFrame = ctx(s, dir).supCoded
-  private def baseCoded(s: SparkSession, dir: String): DataFrame = ctx(s, dir).baseCoded
-  private def bracketBest(s: SparkSession, dir: String): DataFrame = ctx(s, dir).bracketBest
-  private def unifiedBest(s: SparkSession, dir: String): DataFrame = ctx(s, dir).unifiedBest
-
-  /** Reference variant priority: color∧capacity(3) > color(2) >
-    * capacity(1) > first-in-file(0). */
-  private def variantScore =
-    when(Cleaning.safeColor(col("color")) === Cleaning.safeColor(col("bcolor")) &&
-      col("capacity") === col("bcapacity"), 3)
-      .when(Cleaning.safeColor(col("color")) === Cleaning.safeColor(col("bcolor")), 2)
-      .when(col("capacity") === col("bcapacity"), 1)
-      .otherwise(0)
-
-  /** Best base variant per supplier article: score desc, then smallest
-    * base key (the reference's first-variant-wins fallback). */
-  private def bestPerArticle(pairs: DataFrame, codeCol: String): DataFrame = {
-    val w = Window.partitionBy("article").orderBy(col("score").desc, col("base_article").asc)
-    pairs.withColumn("score", variantScore)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("article"), col(codeCol).as("code"), col("base_article"), col("score"))
-  }
 
   // ---- oracle CTE chain (DuckDB twin of the builders above) --------------
 
@@ -199,14 +84,14 @@ object MatchQueries {
 
   val queries: Map[String, QueryFn] = Map(
     // ---- J3: bracket-code match with variant-priority selection ----
-    "j3_bracket_match" -> ((s, dir) => bracketBest(s, dir).orderBy("article")),
+    "j3_bracket_match" -> ((s, dir) => Fixture.plan(s, dir).bracketBest.orderBy("article")),
 
     // ---- J4: unified-code match (bracket > brand > F5 name-code) ----
-    "j4_unified_match" -> ((s, dir) => unifiedBest(s, dir).orderBy("article")),
+    "j4_unified_match" -> ((s, dir) => Fixture.plan(s, dir).unifiedBest.orderBy("article")),
 
     // ---- A7: code-variant grouping (dict-of-lists keyed by code) ----
     "a7_code_variants" -> ((s, dir) =>
-      baseCoded(s, dir).filter(col("bcode").isNotNull)
+      Fixture.plan(s, dir).baseCoded.filter(col("bcode").isNotNull)
         .groupBy(col("bcode").as("code"))
         .agg(count(lit(1)).as("n_variants"),
           array_join(sort_array(collect_list(col("base_article").cast("string"))), ",")
@@ -215,37 +100,22 @@ object MatchQueries {
 
     // ---- E2: the full cascade — per supplier article, which stage
     // matched it (article / bracket / unified) or 'new' ----
-    "e2_cascade" -> ((s, dir) => {
-      val sup = ctx(s, dir).supplierSide
-      val base = ctx(s, dir).baseSide
-      val stage1 = sup.join(broadcast(base.select("article")), Seq("article"), "left_semi")
-        .select(col("article"), lit("article").as("found_by"),
-          col("article").as("base_article"))
-      val bb = bracketBest(s, dir)
-      val ub = unifiedBest(s, dir)
-      val stage2 = bb.select(col("article"), lit("bracket").as("found_by"), col("base_article"))
-      val stage3 = ub.select(col("article"), lit("unified").as("found_by"), col("base_article"))
-      val stage4 = newItems(s, dir)
-        .join(bb.select("article").unionByName(ub.select("article")), Seq("article"), "left_anti")
-        .select(col("article"), lit("new").as("found_by"),
-          lit(null).cast("long").as("base_article"))
-      stage1.unionByName(stage2).unionByName(stage3).unionByName(stage4)
-        .orderBy("article")
-    }),
+    "e2_cascade" -> ((s, dir) => Fixture.plan(s, dir).cascade),
 
     // ---- J7: report-enrichment lookup (matches re-probed against the
     // base for name/color/capacity columns) ----
-    "j7_enrich" -> ((s, dir) =>
-      ctx(s, dir).supplierSide
-        .join(broadcast(baseCoded(s, dir)), col("article") === col("base_article"))
+    "j7_enrich" -> ((s, dir) => {
+      val p = Fixture.plan(s, dir)
+      p.supplier.join(broadcast(p.baseCoded), col("article") === col("base_article"))
         .select(col("article"), col("supplier_price"), col("base_price"),
           col("bname"), col("bcolor"), col("bcapacity"))
-        .orderBy("article")),
+        .orderBy("article")
+    }),
 
     // ---- P14: processed-item removal (left_anti against a processed
     // set derived from the pool itself) ----
     "p14_processed_removal" -> ((s, dir) => {
-      val items = newItems(s, dir)
+      val items = Fixture.plan(s, dir).newItems
       val processed = items.filter(col("article") % 5 === 0).select("article")
       items.join(processed, Seq("article"), "left_anti")
         .select("article", "supplier_price")
@@ -253,34 +123,22 @@ object MatchQueries {
     }),
 
     // ---- U2: membership as a semi-join ----
-    "u2_semi_join" -> ((s, dir) =>
-      ctx(s, dir).supplierSide
-        .join(broadcast(ctx(s, dir).baseSide.select("article")), Seq("article"), "left_semi")
+    "u2_semi_join" -> ((s, dir) => {
+      val p = Fixture.plan(s, dir)
+      p.supplier.join(broadcast(p.base.select("article")), Seq("article"), "left_semi")
         .select("article", "supplier_price")
-        .orderBy("article")),
-
-    // ---- J2: per-new-item fuzzy probe (left: unmatched keep nulls);
-    // difflib-parity ratio → rows-only gate + ScalaTest parity specs ----
-    "j2_fuzzy_probe" -> ((s, dir) => {
-      val cands = supCoded(s, dir).select("article", "name")
-      val base = baseCoded(s, dir).select("base_article", "bname")
-      FuzzyJoin.bestMatch(cands, col("article"), col("name"),
-          base, col("base_article"), col("bname"), 0.33, "fuzzy")
-        .select(col("article"), col("name"),
-          col("fuzzy_key").as("fuzzy_base_article"), col("fuzzy_name"), col("fuzzy_sim"))
         .orderBy("article")
     }),
 
+    // ---- J2: per-new-item fuzzy probe (left: unmatched keep nulls);
+    // difflib-parity ratio → rows-only gate + ScalaTest parity specs ----
+    "j2_fuzzy_probe" -> ((s, dir) => Fixture.plan(s, dir).fuzzy.orderBy("article")),
+
     // ---- J5: batch fuzzy match (inner: matched candidates only) ----
-    "j5_fuzzy_batch" -> ((s, dir) => {
-      val cands = supCoded(s, dir).select("article", "name")
-      val base = baseCoded(s, dir).select("base_article", "bname")
-      FuzzyJoin.bestMatch(cands, col("article"), col("name"),
-          base, col("base_article"), col("bname"), 0.33, "fuzzy")
-        .filter(col("fuzzy_key").isNotNull)
-        .select(col("article"), col("fuzzy_key").as("fuzzy_base_article"), col("fuzzy_sim"))
-        .orderBy("article")
-    })
+    "j5_fuzzy_batch" -> ((s, dir) =>
+      Fixture.plan(s, dir).fuzzy.filter(col("fuzzy_base_article").isNotNull)
+        .select("article", "fuzzy_base_article", "fuzzy_sim")
+        .orderBy("article"))
   )
 
   val oracle: Map[String, String] = Map(

@@ -1,140 +1,38 @@
 package graft.queries
 
-import graft.operators.GlobalOrder
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
 /** The reference's base-mutation surface (SURVEY.md §2.1 S6–S9, §3 E3)
   * re-architected for an append-only engine: in-place Excel cell edits
   * become derive-updates → join-rewrite → write-new-version, and row
   * insertion becomes an anchor-ordered union with auto-numbering. Audit
   * datasets (price_updates_log / changes_log) are first-class outputs.
   *
-  * Scale notes (100 TB):
-  *  - the rewrite is one broadcast-hash join keyed on the base's own key
-  *    (updates side is small) — the base never shuffles and the write is
-  *    a full-scan rewrite, the normal pattern for versioned datasets;
-  *  - auto-numbering inserts only sequences the NEW rows, and does so
-  *    with range-partitioned numbering ([[graft.operators.GlobalOrder]])
-  *    rather than a single-task global window, so even a huge insert
-  *    batch numbers in parallel; the base contributes just
-  *    max(article) — no global sort of the big side;
-  *  - the final "file order" is a merge of two streams sorted on the
-  *    same key, i.e. range-partitionable; nothing requires a single
-  *    partition.
+  * The mutations live in [[SyncPlan]] (see its scale notes); each query
+  * here reads one of its frames from a fresh [[Fixture.plan]].
   */
 object MutationQueries {
-
-  /** J6-derived update set: proposed new price per base article, with the
-    * |Δ| ≥ 0.001 tolerance gate (main.py:7199). */
-  private def priceUpdates(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    Fixture.baseSide(s, dir)
-      .join(Fixture.supplierSide(s, dir), Seq("article"), "left")
-      .select(col("article"), col("base_price"), col("supplier_price"))
-
-  /** Simulated per-supplier article cells: every 4th base row is already
-    * occupied (value = 10·article), the rest are empty — exercises the
-    * J8 existing-value guard (main.py:5961-6051). */
-  private def articleCells(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    Fixture.baseSide(s, dir).select(col("article"),
-      when(col("article") % 4 === 0, col("article") * 10).as("existing_vitya"))
 
   val queries: Map[String, QueryFn] = Map(
     // ---- S6: price-cell update as a join-rewrite (full new base
     // version; cells outside tolerance untouched) ----
-    "s6_price_rewrite" -> ((s, dir) =>
-      priceUpdates(s, dir)
-        .select(
-          col("article"),
-          col("base_price").as("old_price"),
-          when(col("supplier_price").isNotNull &&
-            abs(col("supplier_price") - col("base_price")) >= 0.001, col("supplier_price"))
-            .otherwise(col("base_price")).as("new_price"),
-          (col("supplier_price").isNotNull &&
-            abs(col("supplier_price") - col("base_price")) >= 0.001).as("updated"))
-        .orderBy("article")),
+    "s6_price_rewrite" -> ((s, dir) => Fixture.plan(s, dir).priceRewrite),
 
     // ---- A10: update counters (audit aggregate of S6) ----
-    "a10_update_counters" -> ((s, dir) =>
-      priceUpdates(s, dir).agg(
-        count(lit(1)).as("base_total"),
-        count(when(col("supplier_price").isNotNull &&
-          abs(col("supplier_price") - col("base_price")) >= 0.001, 1)).as("updated"),
-        count(when(col("supplier_price").isNotNull &&
-          abs(col("supplier_price") - col("base_price")) < 0.001, 1)).as("skipped_tolerance"),
-        count(when(col("supplier_price").isNull, 1)).as("not_found"))),
+    "a10_update_counters" -> ((s, dir) => Fixture.plan(s, dir).counters),
 
     // ---- S7 + J8: article-cell fill with existing-value guard ----
-    "s7_article_fill" -> ((s, dir) => {
-      val cells = articleCells(s, dir)
-      val proposals = Fixture.supplierSide(s, dir)
-        .select(col("article"), (col("article") * 10 + 1).as("proposed_vitya"))
-      cells.join(proposals, Seq("article"), "inner")
-        .select(
-          col("article"), col("existing_vitya"), col("proposed_vitya"),
-          when(col("existing_vitya").isNull, lit("article_added"))
-            .otherwise(lit("article_skipped")).as("action"),
-          coalesce(col("existing_vitya"), col("proposed_vitya")).as("final_vitya"))
-        .orderBy("article")
-    }),
+    "s7_article_fill" -> ((s, dir) => Fixture.plan(s, dir).articleFill),
 
     // ---- O3: insertion-order plan — new items sorted by anchor row,
-    // positions assigned (main.py:6196-6210). Numbering is
-    // range-partitioned ([[graft.operators.GlobalOrder]]), not a global
-    // single-task window, so a large insert batch scales. ----
-    "o3_insert_order" -> ((s, dir) => {
-      val newItems = Fixture.supplierSide(s, dir)
-        .join(broadcast(Fixture.baseSide(s, dir).select("article")), Seq("article"), "left_anti")
-        .withColumn("anchor", col("article") % 1000)
-      GlobalOrder.withPosition(newItems, "insert_pos", col("anchor"), col("article"))
-        .select("insert_pos", "anchor", "article", "supplier_price")
-        .orderBy("insert_pos")
-    }),
+    // positions assigned (main.py:6196-6210) ----
+    "o3_insert_order" -> ((s, dir) => Fixture.plan(s, dir).insertOrder),
 
     // ---- S8 + U3 + A2: row insertion — new rows auto-numbered from
     // max(article)+1 in anchor order, merged into the base "file" ----
-    "s8_insert_rows" -> ((s, dir) => {
-      val base = Fixture.baseSide(s, dir)
-      val newItems = Fixture.supplierSide(s, dir)
-        .join(broadcast(base.select("article")), Seq("article"), "left_anti")
-      // max(article) joins in as a broadcast scalar — keeps the plan lazy
-      // (no driver-side collect) and the big side un-shuffled.
-      val maxArt = base.agg(max("article").as("max_article"))
-      val inserted = GlobalOrder.withPosition(
-          newItems.withColumn("anchor", col("article") % 1000),
-          "_pos", col("anchor"), col("article"))
-        .crossJoin(broadcast(maxArt))
-        .withColumn("new_article", col("max_article") + col("_pos"))
-        .select(
-          col("anchor").as("sort_main"), lit(1).as("sort_sub"),
-          col("new_article").as("article"), col("supplier_price").as("price"),
-          lit(true).as("is_new"))
-      val existing = base.select(
-        col("article").as("sort_main"), lit(0).as("sort_sub"),
-        col("article"), col("base_price").as("price"), lit(false).as("is_new"))
-      existing.unionByName(inserted)
-        .orderBy("sort_main", "sort_sub", "article")
-    }),
+    "s8_insert_rows" -> ((s, dir) => Fixture.plan(s, dir).insertRows),
 
     // ---- S5: multi-sheet report bundle — one summary row per sheet
     // (each sheet itself is one of the named queries/sinks) ----
-    "s5_report_summary" -> ((s, dir) => {
-      val sup = Fixture.supplierSide(s, dir)
-      val base = Fixture.baseSide(s, dir)
-      val joined = sup.join(broadcast(base), Seq("article"), "left")
-      val matches = joined.filter(col("base_price").isNotNull)
-      val changes = matches.filter(col("base_price") > 0 &&
-        abs((col("supplier_price") - col("base_price")) / col("base_price") * 100) > 5)
-      val newItems = joined.filter(col("base_price").isNull)
-      val warnings = matches.filter(col("base_price") > 0 &&
-        abs((col("supplier_price") - col("base_price")) / col("base_price") * 100) > 20)
-      matches.agg(count(lit(1)).as("n_rows")).withColumn("sheet", lit("matches"))
-        .unionByName(changes.agg(count(lit(1)).as("n_rows")).withColumn("sheet", lit("price_changes")))
-        .unionByName(newItems.agg(count(lit(1)).as("n_rows")).withColumn("sheet", lit("new_items")))
-        .unionByName(warnings.agg(count(lit(1)).as("n_rows")).withColumn("sheet", lit("warnings")))
-        .select("sheet", "n_rows")
-        .orderBy("sheet")
-    })
+    "s5_report_summary" -> ((s, dir) => Fixture.plan(s, dir).summary)
   )
 
   private def cteBase =

@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.{AnnQueries, Caches, DedupQueries, MatchQueries, PipelineQueries}
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cache lifecycle: [[graft.queries.Caches]] is the one entry point
@@ -19,8 +20,8 @@ class CacheSpec extends AnyFunSuite {
 
     // exercise every memoizing family: BSP clustering (d13: pair cache
     // + final label frame + coarse centroids), PageRank's edge/rank
-    // caches, the PQ codebook, both landing-dir writers, and the match
-    // cascade context
+    // caches, the PQ codebook, both landing-dir writers, and the sync
+    // dataflow's cached frames
     DedupQueries.queries("d13_semantic_clusters")(spark, sfDir).collect()
     DedupQueries.queries("d12_pagerank")(spark, sfDir).collect()
     AnnQueries.queries("x6_pq_assign")(spark, sfDir).collect()
@@ -48,5 +49,19 @@ class CacheSpec extends AnyFunSuite {
     // released state is rebuildable: the queries still answer (memos
     // and landing files regenerate on demand)
     assert(PipelineQueries.queries("s15_partition_prune")(spark, sfDir).count() > 0)
+  }
+
+  test("trackCached registers one cleanup per cached plan") {
+    val sc = spark.sparkContext
+    val dir = s"trackcached-${System.nanoTime()}"
+    def build = spark.range(100).selectExpr("id * 3 AS x")
+    val before = sc.getPersistentRDDs.keySet
+    Caches.trackCached(dir, build).count()
+    Caches.trackCached(dir, build).count()
+    val cached = sc.getPersistentRDDs.keySet -- before
+    assert(cached.size === 1)
+    assert(Caches.release(spark, dir, blocking = true) === 1)
+    assert(build.storageLevel === StorageLevel.NONE)
+    assert(sc.getPersistentRDDs.keySet.intersect(cached).isEmpty)
   }
 }

@@ -100,22 +100,6 @@ class MatchSpec extends AnyFunSuite {
     }
   }
 
-  test("release() frees the cascade's cached storage") {
-    // Materialize the cascade caches for this (session, dir)…
-    MatchQueries.queries("e2_cascade")(spark, sfDir).count()
-    // storageLevel resolves through the session's cache manager by
-    // logical plan, so a freshly-built equivalent frame sees the cache.
-    assert(Fixture.supplierSide(spark, sfDir).storageLevel.useMemory,
-      "cascade run should have cached supplierSide")
-    // …then release: all six intermediates unpersist and the ctx is gone.
-    val n = Fixture.release(spark, sfDir, blocking = true)
-    assert(n === 6, s"expected 6 cached intermediates, released $n")
-    assert(!Fixture.supplierSide(spark, sfDir).storageLevel.useMemory,
-      "supplierSide cache survived release")
-    // A released dir rebuilds transparently on next use.
-    assert(MatchQueries.queries("e2_cascade")(spark, sfDir).count() > 0)
-  }
-
   test("j3/j4 respect cascade order: no article appears in both stages") {
     val j3 = MatchQueries.queries("j3_bracket_match")(spark, sfDir)
       .select("article").collect().map(_.getLong(0)).toSet
