@@ -1,42 +1,128 @@
 package graft.queries
 
+import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Central lifecycle registry for the per-(JVM, fixture-dir) state the
-  * query modules memoize between invocations: cached DataFrames (BSP
-  * label frames, the sync dataflow's intermediates, shingle/pair caches),
-  * driver-side trained artifacts (PQ codebooks, IVF coarse centroids),
-  * and materialized landing directories (s15/s16).
+/** The one registry for what the query modules keep between
+  * invocations: memoized values, frames and driver-side arrays (edge
+  * sets, trained codebooks, centroids) through [[memo]], materialized
+  * landing directories and catalog tables through [[landed]], and the
+  * cached frames and checkpoints behind them through [[trackCached]]
+  * and [[checkpointed]].
   *
   * The memos exist because a bench/serving session replays the same
-  * fixture dir many times — but a long-lived session iterating over
-  * MANY dirs would otherwise grow them without bound and pin executor
-  * storage (the round-5 audit's "operational leak"). This registry is
-  * the one entry point that returns a dir's footprint to baseline:
-  * modules register a cleanup thunk when they create a memo, and
-  * [[release]] drains them.
+  * fixture dir many times; the registry is what returns a dir's
+  * footprint to baseline in a long-lived session iterating over many
+  * dirs.
   *
-  * Invalidation contract: memos are keyed by the fixture dir PATH and
-  * assume its files are immutable while memoized (the steady-state
-  * fixture contract). Regenerating files under a live JVM requires
-  * `Caches.release(spark, dir)` first — otherwise stale codebooks,
-  * centroids, or landing files are served and the oracle comparison
-  * diverges.
+  * Contract:
+  *  - Key: an artifact is memoized per (session, fixture dir, name).
+  *    A second session — `spark.newSession()` included — builds its
+  *    own entry and is never served another session's frames. Each
+  *    artifact is built at most once per key, outside any map lock, so
+  *    a build may serve other artifacts (d9 builds on d2, which builds
+  *    on the shingles frame).
+  *  - Validity: before a landing is served again, its directory must
+  *    still exist and each of its tables must exist in the requesting
+  *    session's catalog; otherwise it is rebuilt.
+  *  - Sweeping: entries of stopped sessions are dropped whenever a new
+  *    entry is inserted.
+  *  - Release: [[release]] drops a dir's entries for every session and
+  *    runs its cleanups — unpersist, landing delete, table drop. Memos
+  *    assume the dir's files are immutable while memoized;
+  *    regenerating them under a live JVM requires a release first.
   */
 object Caches {
 
   /** Cleanups per dir; each takes [[release]]'s `blocking` flag. */
-  private val tracked =
-    new java.util.concurrent.ConcurrentHashMap[String, List[Boolean => Unit]]()
+  private val tracked = new ConcurrentHashMap[String, List[Boolean => Unit]]()
 
   private def register(dir: String)(cleanup: Boolean => Unit): Unit =
     tracked.merge(dir, List(cleanup), (older, newer) => newer ::: older)
 
-  /** Register a cleanup thunk for a fixture dir, run (once) at
-    * [[release]]. Thunks must be idempotent and order-independent. */
-  def track(dir: String)(cleanup: () => Unit): Unit =
-    register(dir)(_ => cleanup())
+  /** One artifact's build, run at most once, and the check its value
+    * must pass before it is served again. */
+  private final class Entry(build: () => Any, val valid: () => Boolean) {
+    @volatile var builder: Thread = _
+    val task = new FutureTask[Any](() => build())
+    def run(): Unit = { builder = Thread.currentThread(); task.run() }
+  }
+
+  /** Entries per dir, keyed by (session, name). */
+  private val entries =
+    new ConcurrentHashMap[String, ConcurrentHashMap[(SparkSession, String), Entry]]()
+
+  private def sweepStopped(): Unit =
+    entries.values().forEach(_.keySet().removeIf(_._1.sparkContext.isStopped))
+
+  private def serve[T](s: SparkSession, dir: String, name: String,
+      valid: () => Boolean)(build: => T): T = {
+    val byKey = entries.computeIfAbsent(dir, _ => new ConcurrentHashMap())
+    val key = (s, name)
+    val fresh = new Entry(() => build, valid)
+    val e = byKey.putIfAbsent(key, fresh) match {
+      case null => sweepStopped(); fresh.run(); fresh
+      case old if old.task.isDone && !old.valid() =>
+        byKey.remove(key, old)
+        return serve(s, dir, name, valid)(build)
+      case old if !old.task.isDone && (old.builder eq Thread.currentThread()) =>
+        throw new IllegalStateException(s"$name for $dir is needed by its own build")
+      case old => old
+    }
+    try e.task.get().asInstanceOf[T]
+    catch {
+      case x: ExecutionException =>
+        byKey.remove(key, e) // a failed build is retried by the next caller
+        throw x.getCause
+    }
+  }
+
+  /** The value `build` returns, built once per (session, dir, name). */
+  def memo[T](s: SparkSession, dir: String, name: String)(build: => T): T =
+    serve(s, dir, name, () => true)(build)
+
+  /** The names of one landing, derived from the artifact name, this
+    * JVM's PID and a digest of the full fixture dir, so concurrent
+    * JVMs and dirs never collide: the directory [[path]]
+    * (`<tmpdir>/graft_<name>_<pid>_<tag>`), one catalog table
+    * `graft_<name>_<part>_<pid>_<tag>` per declared part, and any
+    * [[sidecar]] directories. [[release]] deletes them all. */
+  final class Landing private[Caches] (dir: String, name: String, parts: Seq[String]) {
+    private val suffix = s"${ProcessHandle.current().pid()}_" +
+      java.util.UUID.nameUUIDFromBytes(
+        dir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
+    private def file(stem: String) =
+      new java.io.File(sys.props("java.io.tmpdir"), s"graft_${stem}_$suffix")
+
+    val path: String = file(name).getAbsolutePath
+    val tables: Seq[String] = parts.map(p => s"graft_${name}_${p}_$suffix")
+
+    /** A second directory `graft_<name>_<part>_<pid>_<tag>`, for files
+      * that must not sit inside a table's location. */
+    def sidecar(part: String): String = {
+      val f = file(s"${name}_$part")
+      trackPath(dir, f)
+      f.getAbsolutePath
+    }
+  }
+
+  /** The value `write` returns after landing an artifact, built once
+    * per (session, dir, name) and rebuilt when its directory or one of
+    * its `tables` is gone. `write` must put the artifact under the
+    * landing's [[Landing.path]] and save each of its
+    * [[Landing.tables]]. */
+  def landed[T](s: SparkSession, dir: String, name: String, tables: String*)(
+      write: Landing => T): T = {
+    val l = new Landing(dir, name, tables)
+    serve(s, dir, name,
+      () => new java.io.File(l.path).exists() && l.tables.forall(s.catalog.tableExists)) {
+      register(dir)(_ => dropTables(l.tables))
+      trackPath(dir, new java.io.File(l.path))
+      write(l)
+    }
+  }
 
   /** Cache `df` and register its unpersist for the dir's release —
     * the pattern for query-internal frames that outlive one invocation.
@@ -79,14 +165,15 @@ object Caches {
     * time: a thunk that captured the creating session would both fail
     * after that session stops and pin it against GC. No-op when no
     * session is up (the in-memory catalog died with it anyway). */
-  def dropTables(tbls: String*): Unit =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .filterNot(_.sparkContext.isStopped)
-      .foreach(s => tbls.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t")))
+  private def dropTables(tbls: Seq[String]): Unit =
+    if (tbls.nonEmpty)
+      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+        .filterNot(_.sparkContext.isStopped)
+        .foreach(s => tbls.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t")))
 
-  /** Delete a materialized landing directory at release (s15/s16). */
-  def trackPath(dir: String, path: java.io.File): Unit =
-    track(dir) { () =>
+  /** Delete a landing directory at the dir's release. */
+  private def trackPath(dir: String, path: java.io.File): Unit =
+    register(dir) { _ =>
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm))
         f.delete(); ()
@@ -94,12 +181,13 @@ object Caches {
       rm(path)
     }
 
-  /** Drop every memo registered for one fixture dir: run and clear
-    * its tracked thunks; cached frames and checkpoints unpersist with
-    * `blocking`. The registry is keyed by dir alone, so `s` does not
-    * narrow what is released. Returns the number of cleanups
-    * performed. */
+  /** Drop every entry and cleanup registered for one fixture dir, for
+    * every session: cached frames and checkpoints unpersist with
+    * `blocking`, landings are deleted and their tables dropped. `s`
+    * does not narrow what is released. Returns the number of entries
+    * dropped plus cleanups performed. */
   def release(s: SparkSession, dir: String, blocking: Boolean = false): Int = {
+    val dropped = Option(entries.remove(dir)).fold(0)(_.size)
     val thunks = Option(tracked.remove(dir)).getOrElse(Nil)
     // best-effort: a thunk that throws (e.g. DROP TABLE through an
     // already-stopped session for the s18/d24/d26 catalog landings)
@@ -119,12 +207,13 @@ object Caches {
           System.err.println(s"[caches] release thunk failed for $dir: ${e.getMessage}")
       }
     }
-    thunks.size
+    dropped + thunks.size
   }
 
   /** Release every dir's memos for a session. */
   def releaseAll(s: SparkSession, blocking: Boolean = false): Int = {
     import scala.jdk.CollectionConverters._
-    tracked.keySet().asScala.toSeq.map(release(s, _, blocking)).sum
+    (tracked.keySet().asScala ++ entries.keySet().asScala).toSeq
+      .map(release(s, _, blocking)).sum
   }
 }

@@ -210,14 +210,8 @@ object DedupQueries {
     * correctness-gate fixtures (N=500 → g=3, K2=4, cp=4) the coarse
     * cover is complete, so the two-level ranking degenerates to the
     * flat one; the sub-linear behavior engages as N grows. DuckDB
-    * twins replay the whole two-level spec (AnnQueries.ivfArSql).
-    * Invalidation: keyed by the dir path under the steady-state fixture
-    * contract (regenerating files under a live JVM requires a
-    * [[Caches]] release first). */
+    * twins replay the whole two-level spec (AnnQueries.ivfArSql). */
   private[graft] val MaxProbes = 8
-
-  private val coarseGs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** Fine-cells-per-coarse-group: g = max(1, ⌊√(N/50) + 0.5⌋) — the
     * same double arithmetic the oracle's GREATEST/floor/sqrt computes.
@@ -230,21 +224,16 @@ object DedupQueries {
     * is undefined by contract; the ENGINE side stays correct (it
     * sizes g from the vectors it will actually index). */
   private[queries] def gFor(s: SparkSession, dir: String): Long =
-    coarseGs.computeIfAbsent(dir, d => {
-      Caches.track(d)(() => { coarseGs.remove(d); () })
-      val n = Tables.embeddings(s, d).count()
+    Caches.memo(s, dir, "ivf_g") {
+      val n = Tables.embeddings(s, dir).count()
       math.max(1L, math.floor(math.sqrt(n / 50.0) + 0.5).toLong)
-    }).longValue()
+    }
 
   /** The driver-held coarse level: K2 ≈ √(N/50) group centroids. */
-  private[queries] val coarseCents =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Array[Double], Double)]]()
-
   private[graft] def coarseFor(s: SparkSession, dir: String): Array[(Long, Array[Double], Double)] =
-    coarseCents.computeIfAbsent(dir, d => {
-      Caches.track(d)(() => { coarseCents.remove(d); () })
-      Tables.embeddings(s, d)
-        .filter(col("vec_id") % lit(50L * gFor(s, d)) === 1)
+    Caches.memo(s, dir, "ivf_coarse") {
+      Tables.embeddings(s, dir)
+        .filter(col("vec_id") % lit(50L * gFor(s, dir)) === 1)
         .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
         .collect()
         .map { r =>
@@ -252,28 +241,24 @@ object DedupQueries {
           (r.getLong(0), v, graft.functions.VectorOps.norm2(v))
         }
         .sortBy(_._1)
-    })
+    }
 
   /** Per-vector fine-cell ranking (vec_id, v, n2, cid, arn ∈ 1..8),
     * memoized+cached per (JVM, dir) — the serving family's shared index
     * artifact. One cached frame means every consumer (assignment =
     * arn 1, nprobe-k probe list = arn ≤ k) shares a plan object and the
     * two-level pipeline materializes once per dir. */
-  private val cellRankFrames =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private[graft] def cellRanks(s: SparkSession, dir: String): DataFrame =
-    cellRankFrames.computeIfAbsent(dir, d => {
-      Caches.track(d)(() => { cellRankFrames.remove(d); () })
-      val coarse = coarseFor(s, d)
+    Caches.memo(s, dir, "ivf_cell_ranks") {
+      val coarse = coarseFor(s, dir)
       // Coarse probe width: cover ~3·MaxProbes fine cells (+1 group
       // for the boundary) so the top-MaxProbes fine ranking within the
       // cover tracks the flat global ranking closely on even the
       // adversarial uniform-random fixtures (d16's measured recall
       // floor); asymptotically cp → 2 groups as g = √(N/50) grows, so
       // per-row assignment work stays O(√N · D).
-      val cp = 1 + math.ceil(3.0 * MaxProbes / gFor(s, d)).toInt
-      val emb = Tables.embeddings(s, d)
+      val cp = 1 + math.ceil(3.0 * MaxProbes / gFor(s, dir)).toInt
+      val emb = Tables.embeddings(s, dir)
         .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
         .withColumn("n2", norm2Expr(col("v")))
       // a coarse level can be empty when g > 1 thins the seed stride
@@ -290,12 +275,12 @@ object DedupQueries {
         .withColumn("gid", group1U(col("cv")))
       val probed = emb.withColumn("gid", explode(groupsU(col("v"))))
       val w = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid").asc)
-      Caches.trackCached(d, probed.join(fine, Seq("gid"))
+      Caches.trackCached(dir, probed.join(fine, Seq("gid"))
         .withColumn("ccos", dotExpr(col("v"), col("cv")) / sqrt(col("n2") * col("cn2")))
         .withColumn("arn", row_number().over(w))
         .filter(col("arn") <= MaxProbes)
         .select(col("vec_id"), col("v"), col("n2"), col("cid"), col("arn")))
-    })
+    }
 
   /** The `p` nearest centroids for a vector, ordered by
     * (cosine desc, cid asc) — the family's argmax tie-break — computed
@@ -335,17 +320,6 @@ object DedupQueries {
     * cells — which is the entire premise of IVF. */
   private[queries] val EdgeProbes = MaxProbes
 
-  /** d14's verified edge set, built ONCE per (JVM, dir) — the edge set
-    * is an index artifact (same steady-state contract as the PQ
-    * codebook and the s15 landing write), and memoizing the cached
-    * frame here rather than re-cache()-ing per invocation matters for a
-    * second reason: the probe UDF closure is part of the plan, so a
-    * fresh `udf(...)` per call would defeat plan-equality cache reuse
-    * and every bench pass would re-run the whole candidate+verify
-    * pipeline (measured: d13 at 10.5 s instead of ~2 s at sf0.1). */
-  private val d14Edges =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** d14's candidate stage (probe-list equi-join against cell
     * assignments), shared by the edge builder and the scaling-growth
     * measurement tool (BASELINE.md records the candidate-count
@@ -381,19 +355,26 @@ object DedupQueries {
       .distinct()
   }
 
+  /** d14's verified edge set, built ONCE per (JVM, dir) — the edge set
+    * is an index artifact (same steady-state contract as the PQ
+    * codebook and the s15 landing write), and memoizing the cached
+    * frame here rather than re-cache()-ing per invocation matters for a
+    * second reason: the probe UDF closure is part of the plan, so a
+    * fresh `udf(...)` per call would defeat plan-equality cache reuse
+    * and every bench pass would re-run the whole candidate+verify
+    * pipeline (measured: d13 at 10.5 s instead of ~2 s at sf0.1). */
   private[queries] def d14EdgesFor(s: SparkSession, dir: String): DataFrame =
-    d14Edges.computeIfAbsent(dir, d => {
-      Caches.track(d)(() => { d14Edges.remove(d); () })
-      val e = Tables.embeddings(s, d)
+    Caches.memo(s, dir, "d14_edges") {
+      val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
         .withColumn("n2", norm2Expr(col("v")))
       val av = e.select(col("vec_id").as("id1"), col("v").as("v1"), col("n2").as("n21"))
       val bv = e.select(col("vec_id").as("id2"), col("v").as("v2"), col("n2").as("n22"))
-      Caches.trackCached(d, d14Candidates(s, d).join(av, Seq("id1")).join(bv, Seq("id2"))
+      Caches.trackCached(dir, d14Candidates(s, dir).join(av, Seq("id1")).join(bv, Seq("id2"))
         .withColumn("cosine", dotExpr(col("v1"), col("v2")) / sqrt(col("n21") * col("n22")))
         .filter(col("cosine") >= 0.45)
         .select(col("id1"), col("id2"), round(col("cosine"), 4).as("cosine")))
-    })
+    }
 
   /** d2's verified LSH edge set, built ONCE per (JVM, dir) — the same
     * memo discipline as [[d14EdgesFor]], and for the same two reasons:
@@ -403,13 +384,9 @@ object DedupQueries {
     * band + verify pipeline plans and materializes once per dir
     * instead of once per consuming query (d17 re-planned it twice —
     * directly and through d9 — before this memo existed). */
-  private val d2Edges =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private[queries] def d2EdgesFor(s: SparkSession, dir: String): DataFrame =
-    d2Edges.computeIfAbsent(dir, d => {
-      Caches.track(d)(() => { d2Edges.remove(d); () })
-      val docs = Caches.trackCached(d, docShingles(s, d))
+    Caches.memo(s, dir, "d2_edges") {
+      val docs = Caches.trackCached(dir, docShingles(s, dir))
       val banded = docs.select(col("doc_id"), posexplode(bandKeysUdf(col("sh"))))
         .toDF("doc_id", "band", "key")
       val cand = banded.as("a").join(banded.as("b"),
@@ -417,15 +394,8 @@ object DedupQueries {
             col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
         .distinct()
-      Caches.trackCached(d, verifyJaccard(cand, docs, 0.8))
-    })
-
-  /** d9's converged cluster assignment, memoized like the edge sets:
-    * the BSP fixpoint runs driver-side actions per round, so a second
-    * consumer (d17's rollup) re-running the loop costs real wall time
-    * even with every input frame cached. */
-  private val d9Clusters =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+      Caches.trackCached(dir, verifyJaccard(cand, docs, 0.8))
+    }
 
   /** d27's split assignment: 8/1/1 by the multiplicative hash of the
     * CLUSTER label (t24's cross-engine hash idiom) — exposed so
@@ -447,12 +417,15 @@ object DedupQueries {
           .otherwise("test"))
       .drop("hkey")
 
+  /** d9's converged cluster assignment, memoized like the edge sets:
+    * the BSP fixpoint runs driver-side actions per round, so a second
+    * consumer (d17's rollup) re-running the loop costs real wall time
+    * even with every input frame cached. */
   private def d9ClustersFor(s: SparkSession, dir: String): DataFrame =
-    d9Clusters.computeIfAbsent(dir, d => {
-      Caches.track(d)(() => { d9Clusters.remove(d); () })
-      val pairs = d2EdgesFor(s, d).select("doc1", "doc2")
-      Caches.trackCached(d, minLabelClusters(pairs, d))
-    })
+    Caches.memo(s, dir, "d9_clusters") {
+      val pairs = d2EdgesFor(s, dir).select("doc1", "doc2")
+      Caches.trackCached(dir, minLabelClusters(pairs, dir))
+    }
 
   private val T = 0.5 // Jaccard threshold for d3 (planted dups are ≥0.9)
 
@@ -516,41 +489,23 @@ object DedupQueries {
     * the same landing contract as x19's IVF index. Three BIGINT-ish
     * columns; at 100 TB the artifact is ~16 rows × 16 B per corpus
     * doc, appended per ingest batch, never rebuilt. */
-  private val d24Landing = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def bandLandingFor(s: SparkSession, dir: String): String = {
-    // revalidate the memo against THIS session's catalog: after a
-    // session stop/recreate in the same JVM without Caches.release the
-    // memoized name dangles (the new in-memory catalog lacks the
-    // table) where a path-based landing would still read fine
-    val memo = d24Landing.get(dir)
-    if (memo != null && !s.catalog.tableExists(memo)) d24Landing.remove(dir, memo)
-    d24Landing.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        dir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val pid = ProcessHandle.current().pid()
-      val tbl = s"graft_d24_bands_${pid}_$tag"
-      val out = new java.io.File(sys.props("java.io.tmpdir"), s"graft_d24_${pid}_$tag")
-      Caches.track(d)(() => {
-        d24Landing.remove(d)
-        Caches.dropTables(tbl)
-      })
-      Caches.trackPath(d, out)
+  private[graft] def bandLandingFor(s: SparkSession, dir: String): String =
+    Caches.landed(s, dir, "d24", "bands") { l =>
+      val Seq(tbl) = l.tables
       // BUCKETED by key, the high-cardinality half of the serve join's
       // (band, key) equi-key: hash distribution on key co-locates every
       // (band, key) pair, which satisfies the join's clustered
       // distribution — so classifying a batch never re-shuffles the
       // landed corpus bands, exactly like d26's gram index (same
       // murmur3 repartition → one file per bucket, see s18).
-      bandsOf(Tables.documents(s, d).filter(col("doc_id") % 10 =!= 0))
+      bandsOf(Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0))
         .repartition(32, col("key"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(32, "key").sortBy("key")
-        .option("path", out.getAbsolutePath)
+        .option("path", l.path)
         .saveAsTable(tbl)
       tbl
-    })
-  }
+    }
 
   /** E20's landed DELTA band table: wave-1 arrivals (doc_id % 20 == 0)
     * are classified against the d24 corpus index, the NOVEL ones are
@@ -560,27 +515,14 @@ object DedupQueries {
     * rewritten (lambda shape: base + small delta, folded at compaction
     * cadence — x21's story applied to the band family); DedupSpec pins
     * the base landing byte-untouched across the append. */
-  private val e20Delta = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def e20DeltaLandingFor(s: SparkSession, dir: String): String = {
-    val memo = e20Delta.get(dir)
-    if (memo != null && !s.catalog.tableExists(memo)) e20Delta.remove(dir, memo)
-    e20Delta.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val pid = ProcessHandle.current().pid()
-      val tbl = s"graft_e20_delta_${pid}_$tag"
-      val out = new java.io.File(sys.props("java.io.tmpdir"), s"graft_e20_${pid}_$tag")
-      Caches.track(d)(() => {
-        e20Delta.remove(d)
-        Caches.dropTables(tbl)
-      })
-      Caches.trackPath(d, out)
-      val wave1 = Tables.documents(s, d).filter(col("doc_id") % 20 === 0)
+  private[graft] def e20DeltaLandingFor(s: SparkSession, dir: String): String =
+    Caches.landed(s, dir, "e20", "delta") { l =>
+      val Seq(tbl) = l.tables
+      val wave1 = Tables.documents(s, dir).filter(col("doc_id") % 20 === 0)
       val wave1Bands = bandsOf(wave1)
-      val admitted = classifyBatch(s, d, wave1.select("doc_id", "text"),
+      val admitted = classifyBatch(s, dir, wave1.select("doc_id", "text"),
           wave1Bands,
-          s.table(bandLandingFor(s, d)).select("doc_id", "band", "key"))
+          s.table(bandLandingFor(s, dir)).select("doc_id", "band", "key"))
         .filter(col("status") === "novel").select("doc_id")
       // the delta carries one sentinel row (band = −1, a value no real
       // band index takes) per admitted doc, so an admitted doc too
@@ -594,11 +536,10 @@ object DedupQueries {
         .repartition(32, col("key"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(32, "key").sortBy("key")
-        .option("path", out.getAbsolutePath)
+        .option("path", l.path)
         .saveAsTable(tbl)
       tbl
-    })
-  }
+    }
 
   /** d28/d29's delta split of the verified edge set — in production
     * the delta is the current ingest batch's new near-dup edges; here
@@ -621,32 +562,19 @@ object DedupQueries {
     * style pin in DedupSpec). At 100 TB `part` widens to O(thousands)
     * and the same physics holds — rewrite cost is O(affected
     * partitions), not O(label store). */
-  private val d29Landing = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] val d29Schema = "doc_id BIGINT, cluster_id BIGINT, part INT"
 
-  private[graft] def labelLandingFor(s: SparkSession, dir: String): String = {
-    // revalidate against the filesystem: a released dir's landing was
-    // deleted by trackPath, so a dangling memo must rebuild
-    val memo = d29Landing.get(dir)
-    if (memo != null && !new java.io.File(memo).exists()) d29Landing.remove(dir, memo)
-    d29Landing.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val pid = ProcessHandle.current().pid()
-      val out = new java.io.File(sys.props("java.io.tmpdir"), s"graft_d29_${pid}_$tag")
-      Caches.track(d)(() => { d29Landing.remove(d); () })
-      Caches.trackPath(d, out)
-      val edges = d2EdgesFor(s, d).select("doc1", "doc2")
-      minLabelClusters(edges.filter(!d28IsDelta), d)
+  private[graft] def labelLandingFor(s: SparkSession, dir: String): String =
+    Caches.landed(s, dir, "d29") { l =>
+      val edges = d2EdgesFor(s, dir).select("doc1", "doc2")
+      minLabelClusters(edges.filter(!d28IsDelta), dir)
         .select(col("doc_id"), col("cluster_id"),
           d29Partition(col("cluster_id")).as("part"))
         .repartition(16, col("part"))
         .write.mode("overwrite").partitionBy("part")
-        .parquet(out.getAbsolutePath)
-      out.getAbsolutePath
-    })
-  }
+        .parquet(l.path)
+      l.path
+    }
 
   /** D18/D24's shared serve pipeline: classify the arriving batch
     * (doc_id % 10 == 0) as exact / near / novel against corpus bands
@@ -712,28 +640,20 @@ object DedupQueries {
     * corpus-scale scans per ingest. Checkpoint size is
     * batch-proportional (shingles + one 8-byte hash per char
     * position). */
-  private val e15Arrival =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private def e15ArrivalFor(s: SparkSession, dir: String): DataFrame =
-    // memoized per (session, dir) (r17; session added per the r17
-    // advisor — a dir-only key would serve a LogicalRDD bound to a
-    // stopped session, with unrecoverable truncated lineage, to a new
-    // session that skipped Caches.release): every invocation
-    // previously cut a FRESH localCheckpoint — re-featurizing the
-    // arrival batch once per consumer per bench pass; the memo also
-    // gives e15/e34 the same LogicalRDD, so the shared verdict cache
-    // below can hit
-    e15Arrival.computeIfAbsent((s, dir), { case (_, d) =>
-      Caches.track(d)(() => { e15Arrival.remove((s, d)); () })
-      Caches.checkpointed(d,
-        withShingles(Tables.documents(s, d)
+    // memoized (r17): every invocation previously cut a FRESH
+    // localCheckpoint — re-featurizing the arrival batch once per
+    // consumer per bench pass; the memo also gives e15/e34 the same
+    // LogicalRDD, so the shared verdict cache below can hit
+    Caches.memo(s, dir, "e15_arrival") {
+      Caches.checkpointed(dir,
+        withShingles(Tables.documents(s, dir)
             .filter(col("doc_id") % 10 === 0)
             .select(col("doc_id"), col("text"), col("source"), col("lang")))
           .withColumn("len", length(col("text")))
           .withColumn("grams",
             graft.plans.GraftGramHashes.column(col("text"), 60)))
-    })
+    }
 
   /** e15's three-axis dedup verdict over the checkpointed arrival
     * frame — factored so e34 composes it with the language/perplexity/
@@ -2233,25 +2153,13 @@ object DedupQueries {
     * source, the smallest additive Z-set in the suite. */
   private[graft] val mixCountSchema = "source STRING, n_docs BIGINT"
 
-  private val mixStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def mixStoreFor(s: SparkSession, dir: String): String = {
-    val memo = mixStore.get(dir)
-    if (memo != null && !new java.io.File(memo).exists()) mixStore.remove(dir, memo)
-    mixStore.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_d35_${ProcessHandle.current().pid()}_$tag")
-      Caches.track(d)(() => { mixStore.remove(d); () })
-      Caches.trackPath(d, out)
-      Tables.documents(s, d).filter(!PipelineQueries.bpeIsDelta)
+  private[graft] def mixStoreFor(s: SparkSession, dir: String): String =
+    Caches.landed(s, dir, "d35") { l =>
+      Tables.documents(s, dir).filter(!PipelineQueries.bpeIsDelta)
         .groupBy("source").agg(count(lit(1)).cast("long").as("n_docs"))
-        .write.mode("overwrite").parquet(out.getAbsolutePath)
-      out.getAbsolutePath
-    })
-  }
+        .write.mode("overwrite").parquet(l.path)
+      l.path
+    }
 
   /** D35/e36/e37's twin: the full mixture recompute from raw
     * documents, carved by `keptPred` (TRUE for d35/e36 — e36's gate is
@@ -2339,36 +2247,21 @@ object DedupQueries {
   /** E23's compacted landing: one bucketed table holding exactly the
     * lambda index's served content — (base ∖ tombstones) ∪ delta —
     * with d26's bucket spec, built from index files only. */
-  private val e23Compacted =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def e23CompactFor(s: SparkSession, dir: String): String = {
-    val memo = e23Compacted.get(dir)
-    if (memo != null && !s.catalog.tableExists(memo)) e23Compacted.remove(dir, memo)
-    e23Compacted.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val pid = ProcessHandle.current().pid()
-      val tbl = s"graft_e23_idx_${pid}_$tag"
-      val out = new java.io.File(sys.props("java.io.tmpdir"), s"graft_e23_${pid}_$tag")
-      Caches.track(d)(() => {
-        e23Compacted.remove(d)
-        Caches.dropTables(tbl)
-      })
-      Caches.trackPath(d, out)
-      val (deltaTbl, tombPath) = e22DeltaFor(s, d)
+  private[graft] def e23CompactFor(s: SparkSession, dir: String): String =
+    Caches.landed(s, dir, "e23", "idx") { l =>
+      val Seq(tbl) = l.tables
+      val (deltaTbl, tombPath) = e22DeltaFor(s, dir)
       val tomb = s.read.schema("h BIGINT").parquet(tombPath)
-      s.table(d26LandingFor(s, d))
+      s.table(d26LandingFor(s, dir))
         .join(broadcast(tomb), Seq("h"), "left_anti")
         .unionByName(s.table(deltaTbl))
         .repartition(32, col("h"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(32, "h").sortBy("h")
-        .option("path", out.getAbsolutePath)
+        .option("path", l.path)
         .saveAsTable(tbl)
       tbl
-    })
-  }
+    }
 
   /** The winnow family's batch/corpus admission floor (t45's contract:
     * text ≥ K+W−1 = 27 chars), filtered by the wave predicate. */
@@ -2436,50 +2329,32 @@ object DedupQueries {
     * index rows, but e27's append must know they were hot — df only
     * grows, so delta rows carrying a base-hot hash drop without
     * consulting corpus text. */
-  private val d34Landing =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def d34LandingFor(s: SparkSession, dir: String): String =
+    d34Index(s, dir)._1
 
-  private val d34HotPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def d34LandingFor(s: SparkSession, dir: String): String = {
-    val memo = d34Landing.get(dir)
-    if (memo != null && !s.catalog.tableExists(memo)) d34Landing.remove(dir, memo)
-    d34Landing.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val pid = ProcessHandle.current().pid()
-      val tbl = s"graft_d34_idx_${pid}_$tag"
-      val out = new java.io.File(sys.props("java.io.tmpdir"), s"graft_d34_${pid}_$tag")
-      Caches.track(d)(() => {
-        d34Landing.remove(d)
-        d34HotPath.remove(d)
-        Caches.dropTables(tbl)
-      })
-      Caches.trackPath(d, out)
-      val fps = Caches.checkpointed(d,
+  /** The d34 index table and its hot sidecar's path. */
+  private def d34Index(s: SparkSession, dir: String): (String, String) =
+    Caches.landed(s, dir, "d34", "idx") { l =>
+      val Seq(tbl) = l.tables
+      val fps = Caches.checkpointed(dir,
         TextQueries.winnowedFingerprints(
-          Tables.documents(s, d).filter(col("doc_id") % 10 =!= 0))
+          Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0))
           .select(col("doc_id"), col("fp_pos").cast("int").as("fp_pos"), col("fp_h")))
       // checkpoint: the hot set feeds the anti-join AND the landed
       // sidecar (e27's append reads it back)
-      val hot = Caches.checkpointed(d, fps.groupBy("fp_h")
+      val hot = Caches.checkpointed(dir, fps.groupBy("fp_h")
         .agg(count(lit(1)).as("c"))
         .filter(col("c") > 64L).select("fp_h"))
-      val hotOut = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_d34_hot_${pid}_$tag")
-      Caches.trackPath(d, hotOut)
-      hot.write.mode("overwrite").parquet(hotOut.getAbsolutePath)
-      d34HotPath.put(d, hotOut.getAbsolutePath)
+      val hotPath = l.sidecar("hot")
+      hot.write.mode("overwrite").parquet(hotPath)
       d34BuildJoin(fps, hot)
         .repartition(32, col("fp_h"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(32, "fp_h").sortBy("fp_h")
-        .option("path", out.getAbsolutePath)
+        .option("path", l.path)
         .saveAsTable(tbl)
-      tbl
-    })
-  }
+      (tbl, hotPath)
+    }
 
   /** The d34 index-build anti-join, UN-HINTED like its siblings (d26's
     * gram-index build and d23's run extraction): the hot set is every
@@ -2506,33 +2381,18 @@ object DedupQueries {
     * tombstone that anti-joins the base at serve time. Wave-1
     * fingerprint rows come from the frame the classifier already
     * featurized — no second winnow pass over the arrivals. */
-  private val e27Delta =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private[graft] def e27DeltaFor(s: SparkSession, dir: String): (String, String) = {
-    val memo = e27Delta.get(dir)
-    if (memo != null && !s.catalog.tableExists(memo._1)) e27Delta.remove(dir, memo)
-    e27Delta.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val pid = ProcessHandle.current().pid()
-      val tbl = s"graft_e27_delta_${pid}_$tag"
-      val out = new java.io.File(sys.props("java.io.tmpdir"), s"graft_e27_${pid}_$tag")
-      val tombOut = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_e27_tomb_${pid}_$tag")
-      Caches.track(d)(() => {
-        e27Delta.remove(d)
-        Caches.dropTables(tbl)
-      })
-      Caches.trackPath(d, out)
-      Caches.trackPath(d, tombOut)
-      val base = s.table(d34LandingFor(s, d))
-      val baseHot = s.read.schema("fp_h BIGINT").parquet(d34HotPath.get(d))
-      val wave1 = d34BatchOf(s, d, col("doc_id") % 20 === 0)
-      val bfp1 = d34ProbeOf(d, wave1)
-      val admitted = winnowAdmission(s, d, wave1, bfp1, Seq(base))
+  private[graft] def e27DeltaFor(s: SparkSession, dir: String): (String, String) =
+    Caches.landed(s, dir, "e27", "delta") { l =>
+      val Seq(tbl) = l.tables
+      val tombPath = l.sidecar("tomb")
+      val (baseTbl, baseHotPath) = d34Index(s, dir)
+      val base = s.table(baseTbl)
+      val baseHot = s.read.schema("fp_h BIGINT").parquet(baseHotPath)
+      val wave1 = d34BatchOf(s, dir, col("doc_id") % 20 === 0)
+      val bfp1 = d34ProbeOf(dir, wave1)
+      val admitted = winnowAdmission(s, dir, wave1, bfp1, Seq(base))
         .filter(!col("matched")).select(col("doc_id").as("b_id"))
-      val deltaFps = Caches.checkpointed(d,
+      val deltaFps = Caches.checkpointed(dir,
         bfp1.join(admitted, Seq("b_id"), "left_semi")
           .select(col("b_id").as("doc_id"), col("p1").as("fp_pos"), col("fp_h")))
       val dfDelta = deltaFps.groupBy("fp_h").agg(count(lit(1)).as("cd"))
@@ -2542,7 +2402,7 @@ object DedupQueries {
           col("cb"))
       val tombstones = combined.filter(col("ct") > 64L && col("cb").isNotNull)
         .select("fp_h")
-      tombstones.write.mode("overwrite").parquet(tombOut.getAbsolutePath)
+      tombstones.write.mode("overwrite").parquet(tombPath)
       deltaFps
         .join(combined.filter(col("ct") > 64L).select("fp_h"), Seq("fp_h"), "left_anti")
         .join(baseHot, Seq("fp_h"), "left_anti")
@@ -2550,78 +2410,47 @@ object DedupQueries {
         .repartition(32, col("fp_h"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(32, "fp_h").sortBy("fp_h")
-        .option("path", out.getAbsolutePath)
+        .option("path", l.path)
         .saveAsTable(tbl)
-      (tbl, tombOut.getAbsolutePath)
-    })
-  }
+      (tbl, tombPath)
+    }
 
   /** E29's compacted landing: one bucketed table holding exactly the
     * winnow lambda's served content — (d34 base ∖ e27 tombstones) ∪
     * e27 delta — with d34's bucket spec, built from index files only. */
-  private val e29Compacted =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def e29CompactFor(s: SparkSession, dir: String): String = {
-    val memo = e29Compacted.get(dir)
-    if (memo != null && !s.catalog.tableExists(memo)) e29Compacted.remove(dir, memo)
-    e29Compacted.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val pid = ProcessHandle.current().pid()
-      val tbl = s"graft_e29_idx_${pid}_$tag"
-      val out = new java.io.File(sys.props("java.io.tmpdir"), s"graft_e29_${pid}_$tag")
-      Caches.track(d)(() => {
-        e29Compacted.remove(d)
-        Caches.dropTables(tbl)
-      })
-      Caches.trackPath(d, out)
-      val (deltaTbl, tombPath) = e27DeltaFor(s, d)
+  private[graft] def e29CompactFor(s: SparkSession, dir: String): String =
+    Caches.landed(s, dir, "e29", "idx") { l =>
+      val Seq(tbl) = l.tables
+      val (deltaTbl, tombPath) = e27DeltaFor(s, dir)
       val tomb = s.read.schema("fp_h BIGINT").parquet(tombPath)
-      s.table(d34LandingFor(s, d))
+      s.table(d34LandingFor(s, dir))
         .join(broadcast(tomb), Seq("fp_h"), "left_anti")
         .unionByName(s.table(deltaTbl))
         .repartition(32, col("fp_h"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(32, "fp_h").sortBy("fp_h")
-        .option("path", out.getAbsolutePath)
+        .option("path", l.path)
         .saveAsTable(tbl)
       tbl
-    })
-  }
+    }
 
   /** E26's compacted landing: one bucketed table holding exactly the
     * band lambda's served content — d24 base ∪ e20 delta (sentinels
     * included: they record index membership for shingle-less admits
     * and can never match a real probe band) — with d24's bucket spec,
     * built from index files only. */
-  private val e26Compacted =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def e26CompactFor(s: SparkSession, dir: String): String = {
-    val memo = e26Compacted.get(dir)
-    if (memo != null && !s.catalog.tableExists(memo)) e26Compacted.remove(dir, memo)
-    e26Compacted.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val pid = ProcessHandle.current().pid()
-      val tbl = s"graft_e26_idx_${pid}_$tag"
-      val out = new java.io.File(sys.props("java.io.tmpdir"), s"graft_e26_${pid}_$tag")
-      Caches.track(d)(() => {
-        e26Compacted.remove(d)
-        Caches.dropTables(tbl)
-      })
-      Caches.trackPath(d, out)
-      s.table(bandLandingFor(s, d)).select("doc_id", "band", "key")
-        .unionByName(s.table(e20DeltaLandingFor(s, d)).select("doc_id", "band", "key"))
+  private[graft] def e26CompactFor(s: SparkSession, dir: String): String =
+    Caches.landed(s, dir, "e26", "idx") { l =>
+      val Seq(tbl) = l.tables
+      s.table(bandLandingFor(s, dir)).select("doc_id", "band", "key")
+        .unionByName(s.table(e20DeltaLandingFor(s, dir)).select("doc_id", "band", "key"))
         .repartition(32, col("key"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(32, "key").sortBy("key")
-        .option("path", out.getAbsolutePath)
+        .option("path", l.path)
         .saveAsTable(tbl)
       tbl
-    })
-  }
+    }
 
   /** The d26 serve pipeline, factored so e15's composed ingest verdict
     * reuses the identical substring axis (same landed index, same
@@ -2737,39 +2566,22 @@ object DedupQueries {
     * 16-ish bytes per corpus position; at 100 TB the index appends per
     * ingest batch (new buckets merge by bucket id) and the corpus TEXT
     * is never re-scanned to serve an admission check. */
-  private val d26Landing =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def d26LandingFor(s: SparkSession, dir: String): String =
+    d26Index(s, dir)._1
 
-  /** Path of the landed base hot-set sidecar, keyed by source dir —
-    * populated by [[d26LandingFor]]'s build, consumed by d31. */
-  private val d26HotPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def d26LandingFor(s: SparkSession, dir: String): String = {
-    // same catalog revalidation as d24: a memoized table name from a
-    // stopped-and-recreated session must not be served dangling
-    val memo = d26Landing.get(dir)
-    if (memo != null && !s.catalog.tableExists(memo)) d26Landing.remove(dir, memo)
-    d26Landing.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        dir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val pid = ProcessHandle.current().pid()
-      val tbl = s"graft_d26_idx_${pid}_$tag"
-      val out = new java.io.File(sys.props("java.io.tmpdir"), s"graft_d26_${pid}_$tag")
-      Caches.track(d)(() => {
-        d26Landing.remove(d)
-        d26HotPath.remove(d)
-        Caches.dropTables(tbl)
-      })
-      Caches.trackPath(d, out)
-      val grams = d23DocsFor(s, d).filter(col("doc_id") % 10 =!= 0)
+  /** The d26 index table and its base hot-set sidecar's path (the
+    * sidecar is consumed by e22's append). */
+  private def d26Index(s: SparkSession, dir: String): (String, String) =
+    Caches.landed(s, dir, "d26", "idx") { l =>
+      val Seq(tbl) = l.tables
+      val grams = d23DocsFor(s, dir).filter(col("doc_id") % 10 =!= 0)
         .select(col("doc_id"),
           posexplode(graft.plans.GraftGramHashes.column(col("text"), 60))
             .as(Seq("i0", "h")))
       // checkpoint: the hot set feeds the anti-join AND the landed
       // sidecar below — without it each consumer re-aggregates (and
       // re-scans the corpus text)
-      val hot = Caches.checkpointed(d, grams.groupBy("h")
+      val hot = Caches.checkpointed(dir, grams.groupBy("h")
         .agg(count(lit(1)).as("c"))
         .filter(col("c") > 64L).select("h"))
       // land the hot set alongside the index: df-capped grams vanish
@@ -2779,11 +2591,8 @@ object DedupQueries {
       // carrying it must be dropped without consulting the base text.
       // Production keeps the full per-gram df table; the hot list is
       // the part the capped index cannot reconstruct from its own rows.
-      val hotOut = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_d26_hot_${pid}_$tag")
-      Caches.trackPath(d, hotOut)
-      hot.write.mode("overwrite").parquet(hotOut.getAbsolutePath)
-      d26HotPath.put(d, hotOut.getAbsolutePath)
+      val hotPath = l.sidecar("hot")
+      hot.write.mode("overwrite").parquet(hotPath)
       // BUCKETED by the join key: every admission batch equi-joins this
       // index on h, so landing it hash-bucketed means the serve join
       // never re-shuffles the corpus side — only the (much smaller)
@@ -2793,11 +2602,10 @@ object DedupQueries {
         .repartition(32, col("h"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(32, "h").sortBy("h")
-        .option("path", out.getAbsolutePath)
+        .option("path", l.path)
         .saveAsTable(tbl)
-      tbl
-    })
-  }
+      (tbl, hotPath)
+    }
 
   /** E22's landed DELTA gram index + newly-hot tombstones — e20's
     * admit-then-append applied to the substring family, where the
@@ -2816,38 +2624,22 @@ object DedupQueries {
     * delta + tombstones into a rebuilt base on x21's cadence. Wave-1
     * gram rows come from the frame the classifier already featurized
     * — no second text pass over the arrivals. */
-  private val e22Delta =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private[graft] def e22DeltaFor(s: SparkSession, dir: String): (String, String) = {
-    val memo = e22Delta.get(dir)
-    if (memo != null && !s.catalog.tableExists(memo._1)) e22Delta.remove(dir, memo)
-    e22Delta.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val pid = ProcessHandle.current().pid()
-      val tbl = s"graft_e22_delta_${pid}_$tag"
-      val out = new java.io.File(sys.props("java.io.tmpdir"), s"graft_e22_${pid}_$tag")
-      val tombOut = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_e22_tomb_${pid}_$tag")
-      Caches.track(d)(() => {
-        e22Delta.remove(d)
-        Caches.dropTables(tbl)
-      })
-      Caches.trackPath(d, out)
-      Caches.trackPath(d, tombOut)
-      val base = s.table(d26LandingFor(s, d))
-      val baseHot = s.read.schema("h BIGINT")
-        .parquet(d26HotPath.get(d))
-      val wave1 = d23DocsFor(s, d).filter(col("doc_id") % 20 === 0)
+  private[graft] def e22DeltaFor(s: SparkSession, dir: String): (String, String) =
+    Caches.landed(s, dir, "e22", "delta") { l =>
+      val Seq(tbl) = l.tables
+      val tombPath = l.sidecar("tomb")
+      val (baseTbl, baseHotPath) = d26Index(s, dir)
+      val base = s.table(baseTbl)
+      val baseHot = s.read.schema("h BIGINT").parquet(baseHotPath)
+      val wave1 = d23DocsFor(s, dir).filter(col("doc_id") % 20 === 0)
       // one featurization pass, three consumers (classify, land, df)
-      val bg1 = Caches.checkpointed(d, wave1
+      val bg1 = Caches.checkpointed(dir, wave1
         .select(col("doc_id").as("b_id"),
           posexplode(graft.plans.GraftGramHashes.column(col("text"), 60))
             .as(Seq("ib", "h"))))
-      val admitted = substringAdmission(s, d, wave1, bg1)
+      val admitted = substringAdmission(s, dir, wave1, bg1)
         .filter(col("admit")).select(col("doc_id").as("b_id"))
-      val deltaGrams = Caches.checkpointed(d,
+      val deltaGrams = Caches.checkpointed(dir,
         bg1.join(admitted, Seq("b_id"), "left_semi")
           .select(col("b_id").as("doc_id"), col("ib").as("i0"), col("h")))
       val dfDelta = deltaGrams.groupBy("h").agg(count(lit(1)).as("cd"))
@@ -2857,7 +2649,7 @@ object DedupQueries {
           col("cb"))
       val tombstones = combined.filter(col("ct") > 64L && col("cb").isNotNull)
         .select("h")
-      tombstones.write.mode("overwrite").parquet(tombOut.getAbsolutePath)
+      tombstones.write.mode("overwrite").parquet(tombPath)
       deltaGrams
         .join(combined.filter(col("ct") > 64L).select("h"), Seq("h"), "left_anti")
         .join(baseHot, Seq("h"), "left_anti")
@@ -2865,11 +2657,10 @@ object DedupQueries {
         .repartition(32, col("h"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(32, "h").sortBy("h")
-        .option("path", out.getAbsolutePath)
+        .option("path", l.path)
         .saveAsTable(tbl)
-      (tbl, tombOut.getAbsolutePath)
-    })
-  }
+      (tbl, tombPath)
+    }
 
   /** Documents admitted to the d23/d25 shared-span family: non-null
     * text of at least gram length. */
@@ -2912,15 +2703,11 @@ object DedupQueries {
     * excision) replay it otherwise. Columns: doc_a < doc_b,
     * delta = ia − ib, la (doc_a length), sa/ea (run interval in doc_a
     * coordinates, 0-based inclusive), span_len. */
-  private val d23Runs =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def d23RunsFor(s: SparkSession, dir: String): DataFrame =
-    d23Runs.computeIfAbsent(dir, d => {
-      Caches.track(d)(() => { d23Runs.remove(d); () })
+    Caches.memo(s, dir, "d23_runs") {
       val K = 60
       val DfCap = 64L
-      val docs = d23DocsFor(s, d)
+      val docs = d23DocsFor(s, dir)
       val grams = docs.select(col("doc_id"),
         posexplode(graft.plans.GraftGramHashes.column(col("text"), K)).as(Seq("i0", "h")))
       val hot = grams.groupBy("h").agg(count(lit(1)).as("c"))
@@ -2935,14 +2722,14 @@ object DedupQueries {
         .filter(col("g_ia") === col("g_ib"))
         .join(docs.select(col("doc_id").as("doc_a"), col("len").as("la")), Seq("doc_a"))
         .select(col("doc_a"), col("doc_b"), col("ia"), col("ib"), col("la"))
-      Caches.trackCached(d, ver.withColumn("delta", col("ia") - col("ib"))
+      Caches.trackCached(dir, ver.withColumn("delta", col("ia") - col("ib"))
         .withColumn("grp", col("ia") - row_number().over(
           Window.partitionBy("doc_a", "doc_b", "delta").orderBy("ia")))
         .groupBy("doc_a", "doc_b", "delta", "grp")
         .agg(max("la").as("la"), min("ia").as("sa"),
           (max(col("ia")) + lit(K - 1)).as("ea"),
           (max(col("ia")) - min(col("ia")) + lit(K)).as("span_len")))
-    })
+    }
 
   /** Undirected degree per endpoint of a canonical (doc1 < doc2) edge
     * list. */

@@ -173,49 +173,25 @@ object TextQueries {
     * (t50's) applied to the perplexity model: the c2 table lands once
     * per (JVM, dir) and every serve derives c1/V from the landed rows
     * (vocab-sized aggregates — no document is re-paired). */
-  private val lmLanding =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] val lmCountSchema = "lhs STRING, rhs STRING, c2 BIGINT"
 
   private[graft] def lmCountsLandingFor(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val memo = lmLanding.get(dir)
-    if (memo != null && !new java.io.File(memo).exists()) lmLanding.remove(dir, memo)
-    lmLanding.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_t54_${ProcessHandle.current().pid()}_$tag")
-      Caches.track(d)(() => { lmLanding.remove(d); () })
-      Caches.trackPath(d, out)
-      lmC2Of(lmTrainDocs(s, d)).write.mode("overwrite").parquet(out.getAbsolutePath)
-      out.getAbsolutePath
-    })
-  }
+      s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Caches.landed(s, dir, "t54") { l =>
+      lmC2Of(lmTrainDocs(s, dir)).write.mode("overwrite").parquet(l.path)
+      l.path
+    }
 
   /** T55's pre-delta store: c2 over the training split MINUS the
     * refresh batch (PipelineQueries.bpeIsDelta's % 9 == 4 carve —
     * the same arrival wave the BPE refresh absorbs). */
-  private val lmStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def lmStoreLandingFor(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val memo = lmStore.get(dir)
-    if (memo != null && !new java.io.File(memo).exists()) lmStore.remove(dir, memo)
-    lmStore.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_t55_${ProcessHandle.current().pid()}_$tag")
-      Caches.track(d)(() => { lmStore.remove(d); () })
-      Caches.trackPath(d, out)
-      lmC2Of(lmTrainDocs(s, d).filter(!PipelineQueries.bpeIsDelta))
-        .write.mode("overwrite").parquet(out.getAbsolutePath)
-      out.getAbsolutePath
-    })
-  }
+      s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Caches.landed(s, dir, "t55") { l =>
+      lmC2Of(lmTrainDocs(s, dir).filter(!PipelineQueries.bpeIsDelta))
+        .write.mode("overwrite").parquet(l.path)
+      l.path
+    }
 
   /** t58's (doc_id, w1, w2, w3) word-trigram stream — one transform
     * pass per doc. size(w) >= 3 is load-bearing: Spark's sequence()
@@ -444,49 +420,25 @@ object TextQueries {
       s.read.schema(lm3CountSchema).parquet(lm3CountsLandingFor(s, dir)), held)
 
   /** T59's landed trigram count store (t54's discipline on c3). */
-  private val lm3Landing =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] val lm3CountSchema =
     "w1 STRING, w2 STRING, w3 STRING, c3 BIGINT"
 
   private[graft] def lm3CountsLandingFor(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val memo = lm3Landing.get(dir)
-    if (memo != null && !new java.io.File(memo).exists()) lm3Landing.remove(dir, memo)
-    lm3Landing.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_t59_${ProcessHandle.current().pid()}_$tag")
-      Caches.track(d)(() => { lm3Landing.remove(d); () })
-      Caches.trackPath(d, out)
-      lm3C3Of(lmTrainDocs(s, d)).write.mode("overwrite").parquet(out.getAbsolutePath)
-      out.getAbsolutePath
-    })
-  }
+      s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Caches.landed(s, dir, "t59") { l =>
+      lm3C3Of(lmTrainDocs(s, dir)).write.mode("overwrite").parquet(l.path)
+      l.path
+    }
 
   /** T60's pre-delta store: c3 over the training split MINUS the
     * refresh batch (the same % 9 == 4 arrival carve as t55/t51). */
-  private val lm3Store =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def lm3StoreLandingFor(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val memo = lm3Store.get(dir)
-    if (memo != null && !new java.io.File(memo).exists()) lm3Store.remove(dir, memo)
-    lm3Store.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_t60_${ProcessHandle.current().pid()}_$tag")
-      Caches.track(d)(() => { lm3Store.remove(d); () })
-      Caches.trackPath(d, out)
-      lm3C3Of(lmTrainDocs(s, d).filter(!PipelineQueries.bpeIsDelta))
-        .write.mode("overwrite").parquet(out.getAbsolutePath)
-      out.getAbsolutePath
-    })
-  }
+      s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Caches.landed(s, dir, "t60") { l =>
+      lm3C3Of(lmTrainDocs(s, dir).filter(!PipelineQueries.bpeIsDelta))
+        .write.mode("overwrite").parquet(l.path)
+      l.path
+    }
 
   /** T57's post-forget bigram counts: the full train-split store
     * (pre-delta landing + delta — t55's post-refresh version)
@@ -873,28 +825,16 @@ object TextQueries {
     * algebra change, re-crawl — is a new landing. Every consumer's
     * oracle still recomputes extraction from raw markup, so each gate
     * IS a landed ≡ recomputed proof (the d24 pattern). */
-  private val t47Landing =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] val extractionSchema =
     "doc_id BIGINT, source STRING, n_blocks BIGINT, n_boiler BIGINT, " +
       "text STRING, content STRING"
 
   private[graft] def extractionLandingPathFor(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val memo = t47Landing.get(dir)
-    if (memo != null && !new java.io.File(memo).exists()) t47Landing.remove(dir, memo)
-    t47Landing.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_t47_${ProcessHandle.current().pid()}_$tag")
-      Caches.track(d)(() => { t47Landing.remove(d); () })
-      Caches.trackPath(d, out)
-      landExtraction(Tables.documents(s, d), out)
-      out.getAbsolutePath
-    })
-  }
+      s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Caches.landed(s, dir, "t47") { l =>
+      landExtraction(Tables.documents(s, dir), l.path)
+      l.path
+    }
 
   /** The staged extraction projection (t7/t47's discipline): each
     * lambda subtree — cleanedBlocks → kept → joined text — computes
@@ -926,12 +866,12 @@ object TextQueries {
     * schema — shared by the full t47 landing and the e31 lifecycle's
     * delta landing (identical algebra, different doc slices). */
   private def landExtraction(docs: org.apache.spark.sql.DataFrame,
-      out: java.io.File): Unit =
+      out: String): Unit =
     extractStaged(docs
         .filter(col("text").isNotNull)
         .select(col("doc_id"), col("source"),
           htmlDoc(col("doc_id"), col("text")).as("html")))
-      .write.mode("overwrite").parquet(out.getAbsolutePath)
+      .write.mode("overwrite").parquet(out)
 
   /** The landed extraction, read back with the explicit writer schema
     * (an empty corpus lands fileless — the s15 trap). */
@@ -962,62 +902,35 @@ object TextQueries {
     * stability across the lifecycle legs). At 100 TB an ingest wave
     * costs one wave-sized extraction pass + one parquet append,
     * regardless of history size. */
-  private val e31Landing =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   private[graft] def e31LandingFor(
-      s: org.apache.spark.sql.SparkSession, dir: String): (String, String) = {
-    val memo = e31Landing.get(dir)
-    if (memo != null && !(new java.io.File(memo._1).exists() &&
-        new java.io.File(memo._2).exists()))
-      e31Landing.remove(dir, memo)
-    e31Landing.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val pid = ProcessHandle.current().pid()
-      val base = new java.io.File(sys.props("java.io.tmpdir"), s"graft_e31b_${pid}_$tag")
-      val delta = new java.io.File(sys.props("java.io.tmpdir"), s"graft_e31d_${pid}_$tag")
-      Caches.track(d)(() => { e31Landing.remove(d); () })
-      Caches.trackPath(d, base)
-      Caches.trackPath(d, delta)
+      s: org.apache.spark.sql.SparkSession, dir: String): (String, String) =
+    Caches.landed(s, dir, "e31") { l =>
+      val (base, delta) = (s"${l.path}/base", s"${l.path}/delta")
       // the base is history that was ALREADY extracted when the wave
       // arrives: it derives from the landed full extraction by a
       // parquet filter-copy (pure file work — no markup algebra); the
       // ONLY extraction the append leg pays is the wave itself
-      extractionLandingFor(s, d).filter(!e31IsDelta)
-        .write.mode("overwrite").parquet(base.getAbsolutePath)
-      landExtraction(Tables.documents(s, d).filter(e31IsDelta), delta)
-      (base.getAbsolutePath, delta.getAbsolutePath)
-    })
-  }
+      extractionLandingFor(s, dir).filter(!e31IsDelta)
+        .write.mode("overwrite").parquet(base)
+      landExtraction(Tables.documents(s, dir).filter(e31IsDelta), delta)
+      (base, delta)
+    }
 
   /** E33's compacted landing: (base ∪ delta) ∖ deleted folded into ONE
     * parquet table — pure index-file work (no document is re-extracted;
     * the inputs are the e31 landings and the e24 deletion carve), the
     * cadence step that reclaims e32's serve-time tombstone anti-join
     * and e31's second file set. */
-  private val e33Compacted =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def e33CompactFor(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val memo = e33Compacted.get(dir)
-    if (memo != null && !new java.io.File(memo).exists()) e33Compacted.remove(dir, memo)
-    e33Compacted.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_e33_${ProcessHandle.current().pid()}_$tag")
-      Caches.track(d)(() => { e33Compacted.remove(d); () })
-      Caches.trackPath(d, out)
-      val (basePath, deltaPath) = e31LandingFor(s, d)
+      s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Caches.landed(s, dir, "e33") { l =>
+      val (basePath, deltaPath) = e31LandingFor(s, dir)
       landedExtraction(s, basePath).unionByName(landedExtraction(s, deltaPath))
-        .join(broadcast(DedupQueries.e24Deleted(Tables.documents(s, d))),
+        .join(broadcast(DedupQueries.e24Deleted(Tables.documents(s, dir))),
           Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(out.getAbsolutePath)
-      out.getAbsolutePath
-    })
-  }
+        .write.mode("overwrite").parquet(l.path)
+      l.path
+    }
 
   /** The lifecycle gates' shared projection: every column the landing
     * carries, character-exact (n_chars is recomputed from the served

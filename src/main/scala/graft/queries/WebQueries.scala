@@ -71,25 +71,13 @@ object WebQueries {
     * crawl slice aggregates ALONE and adds in — history is never
     * re-parsed. Domain cardinality is Heaps-sublinear in pages, so the
     * store stays far smaller than the corpus at any scale. */
-  private val domainStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def domainStoreFor(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val memo = domainStore.get(dir)
-    if (memo != null && !new java.io.File(memo).exists()) domainStore.remove(dir, memo)
-    domainStore.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_w5_${ProcessHandle.current().pid()}_$tag")
-      Caches.track(d)(() => { domainStore.remove(d); () })
-      Caches.trackPath(d, out)
-      domainStatsOf(d, parsedDocs(s, d).filter(!PipelineQueries.bpeIsDelta))
-        .write.mode("overwrite").parquet(out.getAbsolutePath)
-      out.getAbsolutePath
-    })
-  }
+      dir: String): String =
+    Caches.landed(s, dir, "w5") { l =>
+      domainStatsOf(dir, parsedDocs(s, dir).filter(!PipelineQueries.bpeIsDelta))
+        .write.mode("overwrite").parquet(l.path)
+      l.path
+    }
 
   /** e34's landed per-domain HISTORY: n_docs per registrable domain
     * over the e15 CORPUS carve (doc_id % 10 ≠ 0) — the admission
@@ -97,25 +85,13 @@ object WebQueries {
     * Same store shape as [[domainStoreFor]] (w5's additive contract),
     * different population: w5 refreshes on the %9 delta carve, e34
     * admits the %10 arrival carve against everything else. */
-  private val e34Hist =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def e34DomainHistFor(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val memo = e34Hist.get(dir)
-    if (memo != null && !new java.io.File(memo).exists()) e34Hist.remove(dir, memo)
-    e34Hist.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_e34h_${ProcessHandle.current().pid()}_$tag")
-      Caches.track(d)(() => { e34Hist.remove(d); () })
-      Caches.trackPath(d, out)
-      domainStatsOf(d, parsedDocs(s, d).filter(col("doc_id") % 10 =!= 0))
-        .write.mode("overwrite").parquet(out.getAbsolutePath)
-      out.getAbsolutePath
-    })
-  }
+      dir: String): String =
+    Caches.landed(s, dir, "e34h") { l =>
+      domainStatsOf(dir, parsedDocs(s, dir).filter(col("doc_id") % 10 =!= 0))
+        .write.mode("overwrite").parquet(l.path)
+      l.path
+    }
 
   /** e35's landed admission DELTA — the domain-history store's
     * maintenance leg (e20's admit-then-append shape on the newest
@@ -124,22 +100,11 @@ object WebQueries {
     * a delta table — base files untouched, history never re-parsed.
     * Wave-2 admission then serves base ∪ delta, so a domain filled to
     * its cap by wave-1 admissions correctly rejects in wave 2. */
-  private val e35Delta =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def e35DeltaFor(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val memo = e35Delta.get(dir)
-    if (memo != null && !new java.io.File(memo).exists()) e35Delta.remove(dir, memo)
-    e35Delta.computeIfAbsent(dir, d => {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_e35d_${ProcessHandle.current().pid()}_$tag")
-      Caches.track(d)(() => { e35Delta.remove(d); () })
-      Caches.trackPath(d, out)
+      dir: String): String =
+    Caches.landed(s, dir, "e35d") { l =>
       val hist = graft.operators.CapGate.gate(
-        s.read.schema(domainStatSchema).parquet(e34DomainHistFor(s, d))
+        s.read.schema(domainStatSchema).parquet(e34DomainHistFor(s, dir))
           .select(col("reg_domain"), col("n_docs").as("hist_docs"))).frame
       // reg_domain IS NOT NULL aligns with the twin's `NOT IN` (NULL
       // drops there); a null-domain delta row would be invisible in
@@ -148,21 +113,20 @@ object WebQueries {
       // CACHED before the joins — the parse chain plus two join
       // branches in one whole-stage pushed processNext() past 64 KB
       // (domainStatsOf's note); the cached frame is wave-sized
-      val wave1 = Caches.trackCached(d,
-        parsedDocs(s, d).filter(col("doc_id") % 20 === 0)
+      val wave1 = Caches.trackCached(dir,
+        parsedDocs(s, dir).filter(col("doc_id") % 20 === 0)
           .select(col("doc_id"), col("reg_domain"), col("text")))
       val admitted = wave1
-        .join(broadcast(blockedFrame(s, d)), Seq("reg_domain"), "left")
+        .join(broadcast(blockedFrame(s, dir)), Seq("reg_domain"), "left")
         .join(hist, Seq("reg_domain"), "left")
         .filter(col("reg_domain").isNotNull &&
           !coalesce(col("is_blocked"), lit(false)) &&
           coalesce(col("hist_docs"), lit(0L)) <
             lit(DedupQueries.E34DomainCapDocs))
-      domainStatsOf(d, admitted)
-        .write.mode("overwrite").parquet(out.getAbsolutePath)
-      out.getAbsolutePath
-    })
-  }
+      domainStatsOf(dir, admitted)
+        .write.mode("overwrite").parquet(l.path)
+      l.path
+    }
 
   /** The landed BLOCKLIST table (replacing w3's r16 literal `Seq`): at
     * production scale the blocklist is maintained data, not code — a
@@ -170,26 +134,14 @@ object WebQueries {
     * construction: a curated list of blocked registrable domains
     * (thousands at most), never corpus-derived — the broadcast is safe
     * at any corpus scale. */
-  private val blocklistLanding =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def blocklistFor(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val memo = blocklistLanding.get(dir)
-    if (memo != null && !new java.io.File(memo).exists()) blocklistLanding.remove(dir, memo)
-    blocklistLanding.computeIfAbsent(dir, d => {
+      dir: String): String =
+    Caches.landed(s, dir, "w3bl") { l =>
       import s.implicits._
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_w3bl_${ProcessHandle.current().pid()}_$tag")
-      Caches.track(d)(() => { blocklistLanding.remove(d); () })
-      Caches.trackPath(d, out)
       BlockedDomains.toDF("reg_domain")
-        .coalesce(1).write.mode("overwrite").parquet(out.getAbsolutePath)
-      out.getAbsolutePath
-    })
-  }
+        .coalesce(1).write.mode("overwrite").parquet(l.path)
+      l.path
+    }
 
   /** The landed blocklist as a broadcastable membership frame. */
   private[graft] def blockedFrame(s: org.apache.spark.sql.SparkSession,
