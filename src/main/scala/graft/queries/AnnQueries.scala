@@ -219,18 +219,22 @@ object AnnQueries {
     * whole serve/tombstone/compact machinery applies unchanged. */
   private def trainedLandingFor(s: SparkSession, dir: String): String =
     Caches.landed(s, dir, "x22") { l =>
-      val cents = kmTrain(s, dir)
-      // probe order = training's own metric: L2² on the integer grid,
-      // ties to the smaller code (kmDistances tuples sort (d, code))
-      val probesU = udf((v: Seq[Long]) =>
-        kmDistances(cents, v).sorted.take(4).map(_._2).zipWithIndex
-          .map { case (code, i) => (i + 1, code) }.toSeq)
-      kmQuantized(s, dir)
-        .select(col("vec_id"), explode(probesU(col("qv"))).as("p"))
-        .select(col("vec_id"), col("p._1").as("arn"), col("p._2").as("cid"))
+      probeRanks(kmTrain(s, dir), kmQuantized(s, dir))
         .write.mode("overwrite").partitionBy("cid").parquet(l.path)
       l.path
     }
+
+  /** The (vec_id, arn, cid) rows of each quantized row's top-4 probe
+    * cells under `cents`. Probe order = training's own metric: L2² on
+    * the integer grid, ties to the smaller code (kmDistances tuples
+    * sort (d, code)). */
+  private def probeRanks(cents: Array[(Long, Array[Long])], rows: DataFrame): DataFrame = {
+    val probesU = udf((v: Seq[Long]) =>
+      kmDistances(cents, v).sorted.take(4).map(_._2).zipWithIndex
+        .map { case (code, i) => (i + 1, code) }.toSeq)
+    rows.select(col("vec_id"), explode(probesU(col("qv"))).as("p"))
+      .select(col("vec_id"), col("p._1").as("arn"), col("p._2").as("cid"))
+  }
 
   /** X24's landed artifact: the OLD-trained index over the OLD corpus —
     * centroids from [[kmTrainOld]] (trained on vec_id % 5 != 4 ONLY,
@@ -240,13 +244,7 @@ object AnnQueries {
     * re-runs, the landed files never rewrite. */
   private def trainedOldLandingFor(s: SparkSession, dir: String): String =
     Caches.landed(s, dir, "x24") { l =>
-      val cents = kmTrainOld(s, dir)
-      val probesU = udf((v: Seq[Long]) =>
-        kmDistances(cents, v).sorted.take(4).map(_._2).zipWithIndex
-          .map { case (code, i) => (i + 1, code) }.toSeq)
-      kmQuantized(s, dir).filter(col("vec_id") % 5 =!= 4)
-        .select(col("vec_id"), explode(probesU(col("qv"))).as("p"))
-        .select(col("vec_id"), col("p._1").as("arn"), col("p._2").as("cid"))
+      probeRanks(kmTrainOld(s, dir), kmQuantized(s, dir).filter(col("vec_id") % 5 =!= 4))
         .write.mode("overwrite").partitionBy("cid").parquet(l.path)
       l.path
     }
@@ -1044,13 +1042,8 @@ object AnnQueries {
     // recall decay (x18 measures inertia), never as a wrong result. ----
     "x24_trained_append" -> ((s, dir) => {
       val landed = landedRanks(s, trainedOldLandingFor(s, dir))
-      val cents = kmTrainOld(s, dir)
-      val probesU = udf((v: Seq[Long]) =>
-        kmDistances(cents, v).sorted.take(4).map(_._2).zipWithIndex
-          .map { case (code, i) => (i + 1, code) }.toSeq)
-      val delta = kmQuantized(s, dir).filter(col("vec_id") % 5 === 4)
-        .select(col("vec_id"), explode(probesU(col("qv"))).as("p"))
-        .select(col("vec_id"), col("p._1").as("arn"), col("p._2").as("cid"))
+      val delta = probeRanks(kmTrainOld(s, dir),
+        kmQuantized(s, dir).filter(col("vec_id") % 5 === 4))
       serveLanded(s, dir, landed.unionByName(delta), nprobe = 4)
     }),
 

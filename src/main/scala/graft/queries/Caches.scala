@@ -90,23 +90,28 @@ object Caches {
     * `graft_<name>_<part>_<pid>_<tag>` per declared part, and any
     * [[sidecar]] directories. [[release]] deletes them all. */
   final class Landing private[Caches] (dir: String, name: String, parts: Seq[String]) {
-    private val suffix = s"${ProcessHandle.current().pid()}_" +
-      java.util.UUID.nameUUIDFromBytes(
-        dir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-    private def file(stem: String) =
-      new java.io.File(sys.props("java.io.tmpdir"), s"graft_${stem}_$suffix")
-
-    val path: String = file(name).getAbsolutePath
-    val tables: Seq[String] = parts.map(p => s"graft_${name}_${p}_$suffix")
+    val path: String = landingPath(dir, name)
+    val tables: Seq[String] = parts.map(p => s"graft_${name}_${p}_${suffix(dir)}")
 
     /** A second directory `graft_<name>_<part>_<pid>_<tag>`, for files
       * that must not sit inside a table's location. */
     def sidecar(part: String): String = {
-      val f = file(s"${name}_$part")
+      val f = new java.io.File(landingPath(dir, s"${name}_$part"))
       trackPath(dir, f)
       f.getAbsolutePath
     }
   }
+
+  /** `<pid>_<tag>`: this JVM's PID and a digest of the full fixture dir. */
+  private def suffix(dir: String): String = s"${ProcessHandle.current().pid()}_" +
+    java.util.UUID.nameUUIDFromBytes(
+      dir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
+
+  /** The directory `<tmpdir>/graft_<name>_<pid>_<tag>` where this JVM
+    * lands artifact `name` of fixture dir `dir`. */
+  private[graft] def landingPath(dir: String, name: String): String =
+    new java.io.File(sys.props("java.io.tmpdir"), s"graft_${name}_${suffix(dir)}")
+      .getAbsolutePath
 
   /** The value `write` returns after landing an artifact, built once
     * per (session, dir, name) and rebuilt when its directory or one of

@@ -484,40 +484,42 @@ object DedupQueries {
       .select(col("doc_id"), posexplode(bandKeysUdf(col("sh"))))
       .toDF("doc_id", "band", "key")
 
-  /** D24's landed artifact: the corpus (doc_id % 10 != 0) band table
-    * written once per (JVM, source dir) as band-partitioned parquet —
-    * the same landing contract as x19's IVF index. Three BIGINT-ish
-    * columns; at 100 TB the artifact is ~16 rows × 16 B per corpus
+  /** The df / probe cap of the gram and winnow families: a key held by
+    * more than DfCap rows (corpus-wide at build, per document on the
+    * probe side) is boilerplate and dropped before any pair join. The
+    * oracle SQL repeats the literal, so the reference stays
+    * independent of the engine. */
+  private[graft] val DfCap = 64L
+
+  /** The landed token indexes (see [[LandedIndex]]). Bands are
+    * uncapped: no hot sidecar, no tombstones. */
+  private val bandIndex = LandedIndex("key", None)
+  private val gramIndex = LandedIndex("h", Some(DfCap))
+  private val winnowIndex = LandedIndex("fp_h", Some(DfCap))
+
+  /** D24's landed artifact: the corpus (doc_id % 10 != 0) band table.
+    * Bucketed by key, the high-cardinality half of the serve join's
+    * (band, key) equi-key: hash distribution on key co-locates every
+    * (band, key) pair, which satisfies the join's clustered
+    * distribution. At 100 TB the artifact is ~16 rows × 16 B per corpus
     * doc, appended per ingest batch, never rebuilt. */
   private[graft] def bandLandingFor(s: SparkSession, dir: String): String =
-    Caches.landed(s, dir, "d24", "bands") { l =>
-      val Seq(tbl) = l.tables
-      // BUCKETED by key, the high-cardinality half of the serve join's
-      // (band, key) equi-key: hash distribution on key co-locates every
-      // (band, key) pair, which satisfies the join's clustered
-      // distribution — so classifying a batch never re-shuffles the
-      // landed corpus bands, exactly like d26's gram index (same
-      // murmur3 repartition → one file per bucket, see s18).
+    d24Index(s, dir).table
+
+  private def d24Index(s: SparkSession, dir: String): LandedIndex.Part =
+    bandIndex.build(s, dir, "d24", "bands") {
       bandsOf(Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0))
-        .repartition(32, col("key"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(32, "key").sortBy("key")
-        .option("path", l.path)
-        .saveAsTable(tbl)
-      tbl
     }
 
   /** E20's landed DELTA band table: wave-1 arrivals (doc_id % 20 == 0)
-    * are classified against the d24 corpus index, the NOVEL ones are
-    * admitted, and their bands land ONCE per (JVM, dir) as a second
-    * bucketed table with d24's exact bucket spec — the index-
-    * maintenance leg of ingest. The BASE index files are never
-    * rewritten (lambda shape: base + small delta, folded at compaction
-    * cadence — x21's story applied to the band family); DedupSpec pins
-    * the base landing byte-untouched across the append. */
+    * classify against the d24 corpus index and the NOVEL ones land
+    * next to it; DedupSpec pins the base landing byte-untouched across
+    * the append. */
   private[graft] def e20DeltaLandingFor(s: SparkSession, dir: String): String =
-    Caches.landed(s, dir, "e20", "delta") { l =>
-      val Seq(tbl) = l.tables
+    e20Delta(s, dir).table
+
+  private def e20Delta(s: SparkSession, dir: String): LandedIndex.Part =
+    bandIndex.append(s, dir, "e20", d24Index(s, dir)) {
       val wave1 = Tables.documents(s, dir).filter(col("doc_id") % 20 === 0)
       val wave1Bands = bandsOf(wave1)
       val admitted = classifyBatch(s, dir, wave1.select("doc_id", "text"),
@@ -533,12 +535,6 @@ object DedupQueries {
       wave1Bands.join(admitted, Seq("doc_id"), "left_semi")
         .unionByName(admitted
           .select(col("doc_id"), lit(-1).as("band"), lit(0L).as("key")))
-        .repartition(32, col("key"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(32, "key").sortBy("key")
-        .option("path", l.path)
-        .saveAsTable(tbl)
-      tbl
     }
 
   /** d28/d29's delta split of the verified edge set — in production
@@ -1377,7 +1373,7 @@ object DedupQueries {
         TextQueries.winnowedFingerprints(Tables.documents(s, dir))
           .select(col("doc_id"), col("fp_pos").cast("int").as("fp_pos"), col("fp_h")))
       val keep = fps.groupBy("fp_h").agg(count(lit(1)).as("c"))
-        .filter(col("c") <= 64L).select("fp_h")
+        .filter(col("c") <= DfCap).select("fp_h")
       val idx = fps.join(keep, Seq("fp_h"), "left_semi")
       val cand = idx.as("a").join(idx.as("b"),
           col("a.fp_h") === col("b.fp_h") && col("a.doc_id") < col("b.doc_id"))
@@ -1416,53 +1412,34 @@ object DedupQueries {
         Seq(s.table(d34LandingFor(s, dir))))
     }),
 
-    // ---- E27: admit-then-APPEND for the WINNOW index — e22's
-    // maintenance leg on the fingerprint tier, completing the family's
-    // lifecycle (build d34 / serve / append / forget e28 / compact
-    // e29). The df-cap makes the same sharp algebra as the gram case:
-    // admitting documents can push a fingerprint hash's corpus df past
-    // the 64 cap, and an exact append must then EXCISE the hash from
-    // serving even though its rows sit in immutable base files. df
-    // only grows under append, so the three cases resolve from index
-    // files alone ([[e27DeltaFor]]): base-hot hashes (the landed hot
-    // sidecar) stay hot — delta rows carrying them drop; hashes whose
-    // combined df stays ≤ 64 land normally; hashes the delta pushes
-    // past the cap land nowhere AND tombstone the base at serve time
-    // (broadcast — bounded by the delta's hash vocabulary). Wave 1
-    // (doc_id % 20 == 0) admits against the landed base; wave 2
-    // (doc_id % 20 == 10) serves against (base ∖ tombstones) ∪ delta.
-    // The oracle nests the full winnow replay twice — wave-1 admission
-    // inside the widened-corpus wave-2 recompute — so the hash gate
-    // proves the capped lambda index ≡ the from-scratch index over
-    // corpus ∪ admitted. ----
+    // ---- E27: admit-then-APPEND for the WINNOW index, completing the
+    // family's lifecycle (build d34 / serve / append / forget e28 /
+    // compact e29) with [[LandedIndex]]'s cap-then-tombstone append.
+    // Wave 1 (doc_id % 20 == 0) admits against the landed base
+    // ([[e27DeltaFor]]); wave 2 (doc_id % 20 == 10) serves against
+    // (base ∖ tombstones) ∪ delta. The oracle nests the full winnow
+    // replay twice — wave-1 admission inside the widened-corpus wave-2
+    // recompute — so the hash gate proves the capped lambda index ≡
+    // the from-scratch index over corpus ∪ admitted. ----
     "e27_winnow_append" -> ((s, dir) => {
-      val (deltaTbl, tombPath) = e27DeltaFor(s, dir)
-      val base = s.table(d34LandingFor(s, dir))
-      val tomb = s.read.schema("fp_h BIGINT").parquet(tombPath)
       val batch = d34BatchOf(s, dir, col("doc_id") % 20 === 10)
       winnowAdmission(s, dir, batch, d34ProbeOf(dir, batch),
-        Seq(base.join(broadcast(tomb), Seq("fp_h"), "left_anti"),
-          s.table(deltaTbl)))
+        winnowIndex.sides(s, d34LandingFor(s, dir), Some(e27Delta(s, dir))))
     }),
 
-    // ---- E28: right-to-be-forgotten on the WINNOW index — e25's
-    // cap-then-delete algebra on the fingerprint tier: the deletion
-    // batch (e24's corpus carve) tombstones documents out of the
+    // ---- E28: right-to-be-forgotten on the WINNOW index: the
+    // deletion batch (e24's corpus carve) drops documents out of the
     // landed d34 index at serve time via a broadcast anti-join — base
     // files never rewritten, landed bucketing preserved (zero added
-    // shuffle). The honest subtlety is e25's: the df ≤ 64 cap is a
-    // BUILD-TIME property — deleting documents lowers a hash's df, but
-    // a hash the build dropped as hot cannot be resurrected from index
-    // files that never held its positions; re-admission happens at
-    // compaction cadence. The oracle's capPred (cap over the FULL
-    // corpus, delete after) pins exactly that algebra, and proves a
-    // forgotten document neither matches nor is matched. ----
+    // shuffle). Cap-then-delete, like e25 (see [[LandedIndex]]): the
+    // oracle's capPred (cap over the FULL corpus, delete after) pins
+    // exactly that algebra, and proves a forgotten document neither
+    // matches nor is matched. ----
     "e28_winnow_forget" -> ((s, dir) => {
       val deleted = e24Deleted(Tables.documents(s, dir))
       val batch = d34BatchOf(s, dir, col("doc_id") % 10 === 0)
       winnowAdmission(s, dir, batch, d34ProbeOf(dir, batch),
-        Seq(s.table(d34LandingFor(s, dir))
-          .join(broadcast(deleted), Seq("doc_id"), "left_anti")))
+        winnowIndex.sides(s, d34LandingFor(s, dir), deleted = Some(deleted)))
     }),
 
     // ---- E29: WINNOW-index compaction — the cadence step that closes
@@ -1991,11 +1968,10 @@ object DedupQueries {
     "e20_admit_and_append" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val wave2 = docs.filter(col("doc_id") % 20 === 10)
-      val admittedBands = s.table(e20DeltaLandingFor(s, dir))
-        .select("doc_id", "band", "key")
-      val combinedBands = s.table(bandLandingFor(s, dir))
-        .select("doc_id", "band", "key")
-        .unionByName(admittedBands)
+      val Seq(baseBands, admittedBands) =
+        bandIndex.sides(s, bandLandingFor(s, dir), Some(e20Delta(s, dir)))
+          .map(_.select("doc_id", "band", "key"))
+      val combinedBands = baseBands.unionByName(admittedBands)
       val corpus2 = docs.filter(col("doc_id") % 10 =!= 0)
         .select("doc_id", "text")
         .unionByName(docs.join(
@@ -2006,25 +1982,19 @@ object DedupQueries {
     }),
 
     // ---- E22: admit-then-append for the SUBSTRING index — e20's
-    // maintenance leg on the gram family, where the df-cap forces real
-    // append algebra (see [[e22DeltaFor]]): wave-1 arrivals classify
-    // against the landed d26 base, the admitted docs' grams land as a
-    // bucketed DELTA table plus a newly-hot TOMBSTONE set, and wave 2
-    // classifies against (base ∖ tombstones) ∪ delta — base files
-    // byte-untouched, each side probed separately so the base join
-    // stays bucket-local. The oracle nests the full substring replay
-    // twice (wave-1 admission inside the widened-corpus wave-2
-    // replay), so the hash gate proves the capped lambda index ≡ the
-    // from-scratch index over corpus ∪ admitted. ----
+    // maintenance leg on the gram family, with [[LandedIndex]]'s
+    // cap-then-tombstone append: wave-1 arrivals classify against the
+    // landed d26 base, the admitted docs' grams land as a DELTA
+    // ([[e22DeltaFor]]), and wave 2 classifies against
+    // (base ∖ tombstones) ∪ delta — base files byte-untouched. The
+    // oracle nests the full substring replay twice (wave-1 admission
+    // inside the widened-corpus wave-2 replay), so the hash gate proves
+    // the capped lambda index ≡ the from-scratch index over corpus ∪
+    // admitted. ----
     "e22_gram_append" -> ((s, dir) => {
-      val (deltaTbl, tombPath) = e22DeltaFor(s, dir)
-      val base = s.table(d26LandingFor(s, dir))
-      val tomb = s.read.schema("h BIGINT").parquet(tombPath)
       val batch = d23DocsFor(s, dir).filter(col("doc_id") % 20 === 10)
-      val bg = gramProbeOf(batch)
-      substringAdmission(s, dir, batch, bg,
-        Seq(base.join(broadcast(tomb), Seq("h"), "left_anti"),
-          s.table(deltaTbl)))
+      substringAdmission(s, dir, batch, gramProbeOf(batch),
+        gramIndex.sides(s, d26LandingFor(s, dir), Some(e22Delta(s, dir))))
     }),
 
     // ---- E23: gram-index COMPACTION — the cadence step that closes
@@ -2058,9 +2028,8 @@ object DedupQueries {
       val docs = Tables.documents(s, dir)
       val deleted = e24Deleted(docs)
       val batch = docs.filter(col("doc_id") % 10 === 0)
-      val corpusBands = s.table(bandLandingFor(s, dir))
-        .select("doc_id", "band", "key")
-        .join(broadcast(deleted), Seq("doc_id"), "left_anti")
+      val Seq(corpusBands) = bandIndex.sides(s, bandLandingFor(s, dir),
+        deleted = Some(deleted))
       val corpus2 = docs.filter(col("doc_id") % 10 =!= 0)
         .join(broadcast(deleted), Seq("doc_id"), "left_anti")
         .select("doc_id", "text")
@@ -2068,22 +2037,16 @@ object DedupQueries {
         corpusBands, Some(corpus2))
     }),
 
-    // ---- E25: right-to-be-forgotten on the GRAM index. One honest
-    // subtlety the band case doesn't have: the df-cap is a BUILD-TIME
-    // property — deleting documents lowers a gram's df, but a gram the
-    // build dropped as hot cannot be resurrected from index files that
-    // never held its positions. The serve contract (and the oracle)
-    // is therefore cap-then-delete: candidates come from build-capped
-    // grams of surviving documents; cap re-admission happens at
-    // compaction cadence, when the corpus text is re-indexed anyway.
-    // The parameterized oracle's capPred pins exactly that algebra. ----
+    // ---- E25: right-to-be-forgotten on the GRAM index. Unlike the
+    // band case the serve contract is cap-then-delete (see
+    // [[LandedIndex]]): candidates come from build-capped grams of
+    // surviving documents. The parameterized oracle's capPred pins
+    // exactly that algebra. ----
     "e25_gram_forget" -> ((s, dir) => {
       val deleted = e24Deleted(Tables.documents(s, dir))
       val batch = d23DocsFor(s, dir).filter(col("doc_id") % 10 === 0)
-      val bg = gramProbeOf(batch)
-      substringAdmission(s, dir, batch, bg,
-        Seq(s.table(d26LandingFor(s, dir))
-          .join(broadcast(deleted), Seq("doc_id"), "left_anti")))
+      substringAdmission(s, dir, batch, gramProbeOf(batch),
+        gramIndex.sides(s, d26LandingFor(s, dir), deleted = Some(deleted)))
     }),
 
     // ---- E26: BAND-index compaction — the cadence step that closes
@@ -2244,24 +2207,10 @@ object DedupQueries {
       .orderBy(col("source").asc_nulls_last)
   }
 
-  /** E23's compacted landing: one bucketed table holding exactly the
-    * lambda index's served content — (base ∖ tombstones) ∪ delta —
-    * with d26's bucket spec, built from index files only. */
+  /** E23's compacted landing: the gram index's d26 base and e22 delta
+    * folded into one table. */
   private[graft] def e23CompactFor(s: SparkSession, dir: String): String =
-    Caches.landed(s, dir, "e23", "idx") { l =>
-      val Seq(tbl) = l.tables
-      val (deltaTbl, tombPath) = e22DeltaFor(s, dir)
-      val tomb = s.read.schema("h BIGINT").parquet(tombPath)
-      s.table(d26LandingFor(s, dir))
-        .join(broadcast(tomb), Seq("h"), "left_anti")
-        .unionByName(s.table(deltaTbl))
-        .repartition(32, col("h"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(32, "h").sortBy("h")
-        .option("path", l.path)
-        .saveAsTable(tbl)
-      tbl
-    }
+    gramIndex.compact(s, dir, "e23")(d26LandingFor(s, dir), e22Delta(s, dir))
 
   /** The winnow family's batch/corpus admission floor (t45's contract:
     * text ≥ K+W−1 = 27 chars), filtered by the wave predicate. */
@@ -2291,7 +2240,7 @@ object DedupQueries {
   private def winnowAdmission(s: SparkSession, dir: String, batch: DataFrame,
       bfp: DataFrame, sides: Seq[DataFrame]): DataFrame = {
     val bcap = bfp.groupBy("b_id", "fp_h").agg(count(lit(1)).as("c"))
-      .filter(col("c") <= 64L).select("b_id", "fp_h")
+      .filter(col("c") <= DfCap).select("b_id", "fp_h")
     val probe = bfp.join(bcap, Seq("b_id", "fp_h"), "left_semi")
     val cand = sides.map(side =>
         probe.join(
@@ -2321,136 +2270,57 @@ object DedupQueries {
   }
 
   /** D34's landed winnow index: the corpus split's (doc_id, fp_pos,
-    * fp_h) winnowed fingerprints — build-time df ≤ 64 hot-hash cap,
-    * d26's contract — bucketed by the serve join's hash key so
-    * admission never re-shuffles the corpus side. ~22% of the gram
-    * index's rows for the same ≥ 27-char detection floor. Lands a HOT
-    * sidecar alongside (d26's discipline): capped hashes vanish from
-    * index rows, but e27's append must know they were hot — df only
-    * grows, so delta rows carrying a base-hot hash drop without
-    * consulting corpus text. */
+    * fp_h) winnowed fingerprints, ~22% of the gram index's rows for the
+    * same ≥ 27-char detection floor. */
   private[graft] def d34LandingFor(s: SparkSession, dir: String): String =
-    d34Index(s, dir)._1
+    d34Index(s, dir).table
 
-  /** The d34 index table and its hot sidecar's path. */
-  private def d34Index(s: SparkSession, dir: String): (String, String) =
-    Caches.landed(s, dir, "d34", "idx") { l =>
-      val Seq(tbl) = l.tables
-      val fps = Caches.checkpointed(dir,
+  private def d34Index(s: SparkSession, dir: String): LandedIndex.Part =
+    winnowIndex.build(s, dir, "d34", "idx") {
+      // checkpoint: the fingerprints feed the df count AND the landing
+      Caches.checkpointed(dir,
         TextQueries.winnowedFingerprints(
           Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0))
           .select(col("doc_id"), col("fp_pos").cast("int").as("fp_pos"), col("fp_h")))
-      // checkpoint: the hot set feeds the anti-join AND the landed
-      // sidecar (e27's append reads it back)
-      val hot = Caches.checkpointed(dir, fps.groupBy("fp_h")
-        .agg(count(lit(1)).as("c"))
-        .filter(col("c") > 64L).select("fp_h"))
-      val hotPath = l.sidecar("hot")
-      hot.write.mode("overwrite").parquet(hotPath)
-      d34BuildJoin(fps, hot)
-        .repartition(32, col("fp_h"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(32, "fp_h").sortBy("fp_h")
-        .option("path", l.path)
-        .saveAsTable(tbl)
-      (tbl, hotPath)
     }
 
-  /** The d34 index-build anti-join, UN-HINTED like its siblings (d26's
-    * gram-index build and d23's run extraction): the hot set is every
-    * fingerprint hash with df > 64 over the corpus —
-    * O(corpus_positions / 64), Zipf-tailed and data-dependent, so on a
-    * boilerplate-heavy 100 TB crawl it plausibly reaches 10⁸–10⁹ rows.
-    * A forced `broadcast(hot)` would die at the 8 GB broadcast hard
-    * limit; left un-hinted the planner degrades the anti-join to a
-    * shuffle join that scales with the data. Exposed so PlanSpec can
-    * pin the hint's absence in the analyzed plan. */
+  /** The d34 index-build anti-join, un-hinted like d26's gram build
+    * and d23's run extraction (see [[LandedIndex.withoutHot]]). Exposed
+    * so PlanSpec can pin the hint's absence in the analyzed plan. */
   private[graft] def d34BuildJoin(fps: DataFrame, hot: DataFrame): DataFrame =
-    fps.join(hot, Seq("fp_h"), "left_anti")
-      .select("doc_id", "fp_pos", "fp_h")
+    winnowIndex.withoutHot(fps, hot)
 
-  /** E27's landed DELTA winnow index + newly-hot tombstones — e22's
-    * append algebra transplanted to the fingerprint tier. Wave-1
-    * arrivals (doc_id % 20 == 0) classify against the landed d34 base;
-    * the NOVEL (unmatched) docs' fingerprints land as a bucketed delta
-    * under the cap-then-tombstone resolution: (1) base-hot hashes (the
-    * landed sidecar) stay hot — delta rows carrying them drop; (2)
-    * hashes whose combined df (base index row count + delta count,
-    * both index-only aggregations) stays ≤ 64 land normally; (3)
-    * hashes the delta pushes past the cap land nowhere AND emit a
-    * tombstone that anti-joins the base at serve time. Wave-1
-    * fingerprint rows come from the frame the classifier already
-    * featurized — no second winnow pass over the arrivals. */
-  private[graft] def e27DeltaFor(s: SparkSession, dir: String): (String, String) =
-    Caches.landed(s, dir, "e27", "delta") { l =>
-      val Seq(tbl) = l.tables
-      val tombPath = l.sidecar("tomb")
-      val (baseTbl, baseHotPath) = d34Index(s, dir)
-      val base = s.table(baseTbl)
-      val baseHot = s.read.schema("fp_h BIGINT").parquet(baseHotPath)
+  /** E27's landed DELTA winnow index and its tombstone path: wave-1
+    * arrivals (doc_id % 20 == 0) classify against the d34 base and the
+    * unmatched ones land. Fingerprint rows come from the frame the
+    * classifier already featurized — no second winnow pass. */
+  private[graft] def e27DeltaFor(s: SparkSession, dir: String): (String, String) = {
+    val LandedIndex.Part(tbl, Some(tomb)) = e27Delta(s, dir)
+    (tbl, tomb)
+  }
+
+  private def e27Delta(s: SparkSession, dir: String): LandedIndex.Part =
+    winnowIndex.append(s, dir, "e27", d34Index(s, dir)) {
       val wave1 = d34BatchOf(s, dir, col("doc_id") % 20 === 0)
       val bfp1 = d34ProbeOf(dir, wave1)
-      val admitted = winnowAdmission(s, dir, wave1, bfp1, Seq(base))
+      val admitted = winnowAdmission(s, dir, wave1, bfp1,
+          winnowIndex.sides(s, d34LandingFor(s, dir)))
         .filter(!col("matched")).select(col("doc_id").as("b_id"))
-      val deltaFps = Caches.checkpointed(dir,
-        bfp1.join(admitted, Seq("b_id"), "left_semi")
-          .select(col("b_id").as("doc_id"), col("p1").as("fp_pos"), col("fp_h")))
-      val dfDelta = deltaFps.groupBy("fp_h").agg(count(lit(1)).as("cd"))
-      val dfBase = base.groupBy("fp_h").agg(count(lit(1)).as("cb"))
-      val combined = dfDelta.join(dfBase, Seq("fp_h"), "left")
-        .select(col("fp_h"), (coalesce(col("cb"), lit(0L)) + col("cd")).as("ct"),
-          col("cb"))
-      val tombstones = combined.filter(col("ct") > 64L && col("cb").isNotNull)
-        .select("fp_h")
-      tombstones.write.mode("overwrite").parquet(tombPath)
-      deltaFps
-        .join(combined.filter(col("ct") > 64L).select("fp_h"), Seq("fp_h"), "left_anti")
-        .join(baseHot, Seq("fp_h"), "left_anti")
-        .select("doc_id", "fp_pos", "fp_h")
-        .repartition(32, col("fp_h"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(32, "fp_h").sortBy("fp_h")
-        .option("path", l.path)
-        .saveAsTable(tbl)
-      (tbl, tombPath)
+      bfp1.join(admitted, Seq("b_id"), "left_semi")
+        .select(col("b_id").as("doc_id"), col("p1").as("fp_pos"), col("fp_h"))
     }
 
-  /** E29's compacted landing: one bucketed table holding exactly the
-    * winnow lambda's served content — (d34 base ∖ e27 tombstones) ∪
-    * e27 delta — with d34's bucket spec, built from index files only. */
+  /** E29's compacted landing: the winnow index's d34 base and e27 delta
+    * folded into one table. */
   private[graft] def e29CompactFor(s: SparkSession, dir: String): String =
-    Caches.landed(s, dir, "e29", "idx") { l =>
-      val Seq(tbl) = l.tables
-      val (deltaTbl, tombPath) = e27DeltaFor(s, dir)
-      val tomb = s.read.schema("fp_h BIGINT").parquet(tombPath)
-      s.table(d34LandingFor(s, dir))
-        .join(broadcast(tomb), Seq("fp_h"), "left_anti")
-        .unionByName(s.table(deltaTbl))
-        .repartition(32, col("fp_h"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(32, "fp_h").sortBy("fp_h")
-        .option("path", l.path)
-        .saveAsTable(tbl)
-      tbl
-    }
+    winnowIndex.compact(s, dir, "e29")(d34LandingFor(s, dir), e27Delta(s, dir))
 
-  /** E26's compacted landing: one bucketed table holding exactly the
-    * band lambda's served content — d24 base ∪ e20 delta (sentinels
-    * included: they record index membership for shingle-less admits
-    * and can never match a real probe band) — with d24's bucket spec,
-    * built from index files only. */
+  /** E26's compacted landing: the band index's d24 base and e20 delta
+    * folded into one table, sentinels included (they record index
+    * membership for shingle-less admits and can never match a real
+    * probe band). */
   private[graft] def e26CompactFor(s: SparkSession, dir: String): String =
-    Caches.landed(s, dir, "e26", "idx") { l =>
-      val Seq(tbl) = l.tables
-      s.table(bandLandingFor(s, dir)).select("doc_id", "band", "key")
-        .unionByName(s.table(e20DeltaLandingFor(s, dir)).select("doc_id", "band", "key"))
-        .repartition(32, col("key"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(32, "key").sortBy("key")
-        .option("path", l.path)
-        .saveAsTable(tbl)
-      tbl
-    }
+    bandIndex.compact(s, dir, "e26")(bandLandingFor(s, dir), e20Delta(s, dir))
 
   /** The d26 serve pipeline, factored so e15's composed ingest verdict
     * reuses the identical substring axis (same landed index, same
@@ -2492,7 +2362,7 @@ object DedupQueries {
       // when the same doc arrives through the streaming twin's
       // micro-batches (EventStream.admitArrivalsBySubstring)
       val bhot = bg.groupBy("b_id", "h").agg(count(lit(1)).as("c"))
-        .filter(col("c") > 64L).select("b_id", "h")
+        .filter(col("c") > DfCap).select("b_id", "h")
       // cand feeds THREE consumers (the verify join and both
       // slicedGrams gathers) and ver feeds two (the per-pair and
       // per-doc interval unions): without materialization Spark
@@ -2557,109 +2427,37 @@ object DedupQueries {
 
   /** D26's landed artifact: the CORPUS (doc_id % 10 != 0) gram index —
     * every 60-gram's rolling hash with its (doc, position), df-capped
-    * exactly like d23's in-corpus guard — written once per (JVM,
-    * source dir) as a table BUCKETED by h (32 buckets, bucket-sorted).
-    * Bucketing on the probe key is the serve-side contract: every
-    * admission batch equi-joins this index on h, and the bucketed scan
-    * provides the hash distribution, so the corpus side crosses the
-    * wire ZERO times per batch — only the batch's own grams shuffle.
-    * 16-ish bytes per corpus position; at 100 TB the index appends per
-    * ingest batch (new buckets merge by bucket id) and the corpus TEXT
-    * is never re-scanned to serve an admission check. */
+    * exactly like d23's in-corpus guard. Every admission batch
+    * equi-joins it on h, so the corpus side crosses the wire zero times
+    * per batch. 16-ish bytes per corpus position; the corpus TEXT is
+    * never re-scanned to serve an admission check. */
   private[graft] def d26LandingFor(s: SparkSession, dir: String): String =
-    d26Index(s, dir)._1
+    d26Index(s, dir).table
 
-  /** The d26 index table and its base hot-set sidecar's path (the
-    * sidecar is consumed by e22's append). */
-  private def d26Index(s: SparkSession, dir: String): (String, String) =
-    Caches.landed(s, dir, "d26", "idx") { l =>
-      val Seq(tbl) = l.tables
-      val grams = d23DocsFor(s, dir).filter(col("doc_id") % 10 =!= 0)
-        .select(col("doc_id"),
-          posexplode(graft.plans.GraftGramHashes.column(col("text"), 60))
-            .as(Seq("i0", "h")))
-      // checkpoint: the hot set feeds the anti-join AND the landed
-      // sidecar below — without it each consumer re-aggregates (and
-      // re-scans the corpus text)
-      val hot = Caches.checkpointed(dir, grams.groupBy("h")
-        .agg(count(lit(1)).as("c"))
-        .filter(col("c") > 64L).select("h"))
-      // land the hot set alongside the index: df-capped grams vanish
-      // from the index rows, but an APPEND (d31) still needs to know
-      // they were hot — df only grows as the corpus grows, so a
-      // base-hot gram stays hot in any widened corpus and delta rows
-      // carrying it must be dropped without consulting the base text.
-      // Production keeps the full per-gram df table; the hot list is
-      // the part the capped index cannot reconstruct from its own rows.
-      val hotPath = l.sidecar("hot")
-      hot.write.mode("overwrite").parquet(hotPath)
-      // BUCKETED by the join key: every admission batch equi-joins this
-      // index on h, so landing it hash-bucketed means the serve join
-      // never re-shuffles the corpus side — only the (much smaller)
-      // batch grams move. repartition-then-bucketBy shares murmur3 with
-      // the bucket-file assignment → one file per bucket (see s18).
-      grams.join(hot, Seq("h"), "left_anti")
-        .repartition(32, col("h"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(32, "h").sortBy("h")
-        .option("path", l.path)
-        .saveAsTable(tbl)
-      (tbl, hotPath)
+  private def d26Index(s: SparkSession, dir: String): LandedIndex.Part =
+    gramIndex.build(s, dir, "d26", "idx") {
+      gramProbeOf(d23DocsFor(s, dir).filter(col("doc_id") % 10 =!= 0))
+        .select(col("h"), col("b_id").as("doc_id"), col("ib").as("i0"))
     }
 
-  /** E22's landed DELTA gram index + newly-hot tombstones — e20's
-    * admit-then-append applied to the substring family, where the
-    * df-cap makes the append algebra sharper than the band case:
-    * admitting documents can push a gram's corpus df PAST the 64 cap,
-    * and an exact append must then EXCISE the gram from serving even
-    * though its rows sit in immutable base files. df only grows under
-    * append, so the three cases resolve without re-reading corpus
-    * text: (1) base-hot grams (the landed hot sidecar) stay hot —
-    * delta rows carrying them are dropped; (2) grams whose combined
-    * df (base index row count + delta count, both index-only
-    * aggregations) stays ≤ 64 land normally; (3) grams the delta
-    * pushes past the cap land nowhere AND emit a tombstone that
-    * anti-joins the base at serve time (broadcast — the tombstone set
-    * is bounded by the delta's gram vocabulary). Compaction folds
-    * delta + tombstones into a rebuilt base on x21's cadence. Wave-1
-    * gram rows come from the frame the classifier already featurized
-    * — no second text pass over the arrivals. */
-  private[graft] def e22DeltaFor(s: SparkSession, dir: String): (String, String) =
-    Caches.landed(s, dir, "e22", "delta") { l =>
-      val Seq(tbl) = l.tables
-      val tombPath = l.sidecar("tomb")
-      val (baseTbl, baseHotPath) = d26Index(s, dir)
-      val base = s.table(baseTbl)
-      val baseHot = s.read.schema("h BIGINT").parquet(baseHotPath)
+  /** E22's landed DELTA gram index and its tombstone path: wave-1
+    * arrivals (doc_id % 20 == 0) classify against the d26 base and the
+    * admitted ones land. Gram rows come from the frame the classifier
+    * already featurized — no second text pass over the arrivals. */
+  private[graft] def e22DeltaFor(s: SparkSession, dir: String): (String, String) = {
+    val LandedIndex.Part(tbl, Some(tomb)) = e22Delta(s, dir)
+    (tbl, tomb)
+  }
+
+  private def e22Delta(s: SparkSession, dir: String): LandedIndex.Part =
+    gramIndex.append(s, dir, "e22", d26Index(s, dir)) {
       val wave1 = d23DocsFor(s, dir).filter(col("doc_id") % 20 === 0)
-      // one featurization pass, three consumers (classify, land, df)
-      val bg1 = Caches.checkpointed(dir, wave1
-        .select(col("doc_id").as("b_id"),
-          posexplode(graft.plans.GraftGramHashes.column(col("text"), 60))
-            .as(Seq("ib", "h"))))
+      // one featurization pass, two consumers (classify, land)
+      val bg1 = Caches.checkpointed(dir, gramProbeOf(wave1))
       val admitted = substringAdmission(s, dir, wave1, bg1)
         .filter(col("admit")).select(col("doc_id").as("b_id"))
-      val deltaGrams = Caches.checkpointed(dir,
-        bg1.join(admitted, Seq("b_id"), "left_semi")
-          .select(col("b_id").as("doc_id"), col("ib").as("i0"), col("h")))
-      val dfDelta = deltaGrams.groupBy("h").agg(count(lit(1)).as("cd"))
-      val dfBase = base.groupBy("h").agg(count(lit(1)).as("cb"))
-      val combined = dfDelta.join(dfBase, Seq("h"), "left")
-        .select(col("h"), (coalesce(col("cb"), lit(0L)) + col("cd")).as("ct"),
-          col("cb"))
-      val tombstones = combined.filter(col("ct") > 64L && col("cb").isNotNull)
-        .select("h")
-      tombstones.write.mode("overwrite").parquet(tombPath)
-      deltaGrams
-        .join(combined.filter(col("ct") > 64L).select("h"), Seq("h"), "left_anti")
-        .join(baseHot, Seq("h"), "left_anti")
-        .select("doc_id", "i0", "h")
-        .repartition(32, col("h"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(32, "h").sortBy("h")
-        .option("path", l.path)
-        .saveAsTable(tbl)
-      (tbl, tombPath)
+      bg1.join(admitted, Seq("b_id"), "left_semi")
+        .select(col("b_id").as("doc_id"), col("ib").as("i0"), col("h"))
     }
 
   /** Documents admitted to the d23/d25 shared-span family: non-null
@@ -2706,7 +2504,6 @@ object DedupQueries {
   private def d23RunsFor(s: SparkSession, dir: String): DataFrame =
     Caches.memo(s, dir, "d23_runs") {
       val K = 60
-      val DfCap = 64L
       val docs = d23DocsFor(s, dir)
       val grams = docs.select(col("doc_id"),
         posexplode(graft.plans.GraftGramHashes.column(col("text"), K)).as(Seq("i0", "h")))

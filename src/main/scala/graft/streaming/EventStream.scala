@@ -266,9 +266,10 @@ object EventStream {
   def admitArrivalsBySubstring(arrivals: DataFrame, index: DataFrame,
       corpusDocs: DataFrame): DataFrame = {
     val K = 60
+    val cap = graft.queries.DedupQueries.DfCap
     val gramsU = udf((t: String) => {
       val hs = graft.functions.Hashing.gramHashes(t, K)
-      val hot = hs.groupBy(identity).collect { case (h, o) if o.length > 64 => h }.toSet
+      val hot = hs.groupBy(identity).collect { case (h, o) if o.length > cap => h }.toSet
       hs.zipWithIndex.collect { case (h, i) if !hot.contains(h) => (i, h) }
     })
     val a = arrivals.withWatermark("ts", "2 hours")
@@ -311,6 +312,7 @@ object EventStream {
   def admitArrivalsByFingerprint(arrivals: DataFrame, index: DataFrame,
       corpusDocs: DataFrame): DataFrame = {
     val K = 20
+    val cap = graft.queries.DedupQueries.DfCap
     val winnowU = udf((t: String) => {
       val ENC = 1L << 22
       // same doc-size contract as TextQueries.winnowedFingerprints:
@@ -322,7 +324,7 @@ object EventStream {
       // decoded back to (pos, hash)
       val sel = graft.functions.Hashing.winnowedEncoded(t, K, 8)
         .map(e => ((ENC - 1 - e % ENC).toInt, e / ENC)).toSeq
-      val hot = sel.groupBy(_._2).collect { case (h, o) if o.length > 64 => h }.toSet
+      val hot = sel.groupBy(_._2).collect { case (h, o) if o.length > cap => h }.toSet
       sel.filterNot(x => hot.contains(x._2))
     })
     val a = arrivals.withWatermark("ts", "2 hours")
@@ -479,9 +481,10 @@ object EventStream {
         col("cand"), lit(-1).as("ib"), lit(-1).as("ic"), round(col("j"), 4).as("score"))
     // axis 1 — substring: the admitArrivalsBySubstring evidence path
     // (per-DOCUMENT hot cap → micro-batch-invariant), byte-verified
+    val cap = graft.queries.DedupQueries.DfCap
     val gramsU = udf((t: String) => {
       val hs = graft.functions.Hashing.gramHashes(t, K)
-      val hot = hs.groupBy(identity).collect { case (h, o) if o.length > 64 => h }.toSet
+      val hot = hs.groupBy(identity).collect { case (h, o) if o.length > cap => h }.toSet
       hs.zipWithIndex.collect { case (h, i) if !hot.contains(h) => (i, h) }
     })
     val sub = a.filter(col("text").isNotNull && length(col("text")) >= K)

@@ -702,6 +702,25 @@ class DedupSpec extends AnyFunSuite {
     val exchanges = "Exchange hashpartitioning".r.findAllIn(finalPlan).length
     assert(exchanges <= 1,
       s"d26's landed index side re-shuffles despite bucketing ($exchanges exchanges):\n$plan")
+    // every landed token table — bases, deltas, compactions of the
+    // band, gram and winnow families — carries its serve key's bucket
+    // spec in the catalog
+    val catalog = spark.sessionState.catalog
+    for ((tbl, key) <- Seq(
+        DedupQueries.bandLandingFor(spark, sfDir) -> "key",
+        DedupQueries.e20DeltaLandingFor(spark, sfDir) -> "key",
+        DedupQueries.e26CompactFor(spark, sfDir) -> "key",
+        DedupQueries.d26LandingFor(spark, sfDir) -> "h",
+        DedupQueries.e22DeltaFor(spark, sfDir)._1 -> "h",
+        DedupQueries.e23CompactFor(spark, sfDir) -> "h",
+        DedupQueries.d34LandingFor(spark, sfDir) -> "fp_h",
+        DedupQueries.e27DeltaFor(spark, sfDir)._1 -> "fp_h",
+        DedupQueries.e29CompactFor(spark, sfDir) -> "fp_h")) {
+      val spec = catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(tbl)).bucketSpec
+      assert(spec.map(b => (b.numBuckets, b.bucketColumnNames, b.sortColumnNames)) ===
+        Some((32, Seq(key), Seq(key))), s"$tbl is not bucketed by $key")
+    }
   }
 
   test("d27 split is cluster-consistent; the naive per-doc split provably leaks") {
@@ -750,10 +769,7 @@ class DedupSpec extends AnyFunSuite {
       .write.parquet(s"$dir/documents.parquet")
     // snapshot the BASE index files: the append must never rewrite them
     DedupQueries.bandLandingFor(spark, dir) // materialize the base landing
-    val tag = java.util.UUID.nameUUIDFromBytes(
-      dir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-    val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_d24_${ProcessHandle.current().pid()}_$tag")
+    val baseDir = new java.io.File(graft.queries.Caches.landingPath(dir, "d24"))
     assert(baseDir.isDirectory, s"base landing dir missing: $baseDir")
     def snap(d: java.io.File): Map[String, Long] =
       d.listFiles().filter(_.getName.endsWith(".parquet"))
@@ -837,10 +853,7 @@ class DedupSpec extends AnyFunSuite {
       .write.parquet(s"$dir/documents.parquet")
     // materialize the base index, snapshot its files
     DedupQueries.d26LandingFor(spark, dir)
-    val tag = java.util.UUID.nameUUIDFromBytes(
-      dir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-    val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_d26_${ProcessHandle.current().pid()}_$tag")
+    val baseDir = new java.io.File(graft.queries.Caches.landingPath(dir, "d26"))
     assert(baseDir.isDirectory, s"base landing dir missing: $baseDir")
     def snap(d: java.io.File): Map[String, Long] =
       d.listFiles().filter(_.getName.endsWith(".parquet"))
@@ -935,10 +948,7 @@ class DedupSpec extends AnyFunSuite {
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     // land the base, snapshot its files (append must not rewrite them)
     DedupQueries.d34LandingFor(spark, dir)
-    val tag = java.util.UUID.nameUUIDFromBytes(
-      dir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-    val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_d34_${ProcessHandle.current().pid()}_$tag")
+    val baseDir = new java.io.File(graft.queries.Caches.landingPath(dir, "d34"))
     assert(baseDir.isDirectory, s"base landing dir missing: $baseDir")
     def snap(d: java.io.File): Map[String, Long] =
       d.listFiles().filter(_.getName.endsWith(".parquet"))
@@ -1110,12 +1120,7 @@ class DedupSpec extends AnyFunSuite {
     val pre = SparkEntry.queries("d24_persisted_band_index")(spark, dir)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), Option(r.get(2))))).toMap
     assert(pre(10L) === (("exact", Some(8L))), s"fixture signal missing: ${pre(10L)}")
-    val baseDir = {
-      val tag = java.util.UUID.nameUUIDFromBytes(
-        dir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-      new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_d24_${ProcessHandle.current().pid()}_$tag")
-    }
+    val baseDir = new java.io.File(graft.queries.Caches.landingPath(dir, "d24"))
     assert(baseDir.isDirectory, s"base band landing missing: $baseDir")
     def snap(): Map[String, Long] =
       baseDir.listFiles().filter(_.getName.endsWith(".parquet"))
