@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark entrypoint: runs every registered query on
   * `SPARK_GRAFT_SF_DIR`, writes the full per-query steady-state seconds
   * map to `bench_results.json`, and prints a SHORT summary JSON line
@@ -21,8 +23,12 @@ import scala.util.control.NonFatal
   *      figure: a single pass attributes whatever GC pause the previous
   *      (allocation-heavy) query triggered to an innocent neighbour —
   *      that mis-attribution is what made `p10_pending_filter` read
-  *      4.14 s in round 2 while the query itself was unchanged.
+  *      4.14 s in round 2 while the query itself was unchanged;
+  *   3. one artifact-cold pass: every per-dir memo released before each
+  *      query, timed in wall and process-CPU seconds.
   *
+  * [[measure]] holds these passes; the scale harness
+  * (`graft.tools.Scale`, test scope) times its replicas through it.
   * A query that throws (non-fatally) in any pass is listed under
   * `failed` and left out of every timing map and total: a failure must
   * never read as a fast query. Fatal JVM errors end the run.
@@ -43,101 +49,24 @@ object Bench {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .sortBy(_._1)
 
-    // Release any per-dir memo state a previous phase in this JVM built
-    // (cached frames, centroid arrays, edge sets, landed files): the
-    // measured passes must never read another phase's memos, so every
-    // bench invocation reproduces the same cold-start → warmup →
-    // steady-state discipline whether the JVM is fresh (the driver's
-    // runs) or reused (a dev loop). The round-8 committed map was
-    // polluted exactly this way — ~99 sub-10 ms rows for queries whose
-    // fresh steady state is seconds.
-    queries.Caches.release(spark, sfDir)
-
-    // Runs one query to completion; a non-fatal failure marks it
-    // failed (logged once) and it is never run or timed again.
-    val failed = scala.collection.mutable.SortedSet.empty[String]
-    def run(name: String, fn: queries.QueryFn): Boolean =
-      !failed(name) && {
-        try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-        catch { case NonFatal(e) =>
-          System.err.println(s"[bench] $name failed: $e")
-          failed += name
-          false
-        }
-      }
-
-    val warmSecs = ordered.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      run(name, fn)
-      name -> (System.nanoTime() - t0) / 1e9
-    }.toMap
-    // The difflib-parity UDF loops need ~3 executions before C2 settles
-    // (45 → 20 → 5 s historically); one extra warmup for anything still
-    // slow after the first keeps the measured minimum honest instead of
-    // JIT-state-dependent across bench invocations.
-    ordered.foreach { case (name, fn) =>
-      if (warmSecs(name) > 2.0) run(name, fn)
-    }
-
-    // Process-CPU seconds per query alongside wall seconds: on a
-    // contended host wall time inflates while CPU time stays flat, so
-    // a wall/CPU divergence across rounds distinguishes "the host was
-    // busy" from "the query regressed" without a rerun (the 85.2 s
-    // round-6 close-out swing would have been self-evident).
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    val best = scala.collection.mutable.Map.empty[String, Double]
-    val bestCpu = scala.collection.mutable.Map.empty[String, Double]
-    (1 to MeasuredPasses).foreach { _ =>
-      ordered.foreach { case (name, fn) =>
-        val c0 = osBean.getProcessCpuTime
-        val t0 = System.nanoTime()
-        val ok = run(name, fn)
-        val sec = (System.nanoTime() - t0) / 1e9
-        val cpuSec = (osBean.getProcessCpuTime - c0) / 1e9
-        if (ok && sec < best.getOrElse(name, Double.MaxValue)) {
-          best(name) = sec
-          bestCpu(name) = cpuSec // CPU of the SAME pass as the reported wall
-        }
-      }
-    }
-
-    // Third measured map: COLD per-query cost. Before each query every
-    // per-dir memo (cached frames, trained codebooks, landed artifact
-    // dirs) is dropped, so the figure is what a first-run user pays —
-    // the steady-state map above is the marginal cost once shared
-    // artifacts exist. JIT stays warm (the passes above ran), so "cold"
-    // means artifact-cold, not JVM-cold: exactly the production
-    // first-run. SPARK_GRAFT_COLD=0 skips the pass in dev loops.
-    val cold = scala.collection.mutable.Map.empty[String, Double]
-    if (sys.env.getOrElse("SPARK_GRAFT_COLD", "1") != "0") {
-      ordered.foreach { case (name, fn) =>
-        queries.Caches.release(spark, sfDir)
-        val t0 = System.nanoTime()
-        if (run(name, fn)) cold(name) = (System.nanoTime() - t0) / 1e9
-      }
-    }
+    // SPARK_GRAFT_COLD=0 skips the cold pass in dev loops.
+    val m = measure(spark, sfDir, ordered, cold = sys.env.getOrElse("SPARK_GRAFT_COLD", "1") != "0")
 
     def fmt(d: Double): String = f"$d%.3f"
-    // Host-load telemetry: the r13 cold map was contaminated by outside
-    // load (BASELINE.md round-14 A/B attribution), and diagnosing it
-    // required a rerun. The 1-minute load average at bench END, next to
-    // the JVM's own core count, makes "was the host busy" readable off
-    // the committed record (load >> cpus while wall inflates under flat
-    // CPU = contention, not regression).
-    val loadAvg = osBean.getSystemLoadAverage
-    val ok = ordered.map(_._1).filterNot(failed)
-    def obj(m: String => Double): String =
-      ok.map(name => s"\"$name\":${fmt(m(name))}").mkString("{", ",", "}")
-    val total = ok.map(best).sum
-    val cpuTotal = ok.map(bestCpu).sum
-    val coldTotal = cold.values.sum // a failed query is never run cold
-    val qsCold = if (cold.isEmpty) "{}" else obj(cold)
-    val failedJson = failed.map(n => s"\"$n\"").mkString("[", ",", "]")
+    val ok = ordered.map(_._1).filterNot(m.failed.contains)
+    def obj(t: Map[String, Double]): String =
+      ok.filter(t.contains).map(name => s"\"$name\":${fmt(t(name))}").mkString("{", ",", "}")
+    val total = m.steady.values.sum
+    val cpuTotal = m.steadyCpu.values.sum
+    val coldTotal = m.cold.values.sum // a failed query is never run cold
+    val coldCpuTotal = m.coldCpu.values.sum
+    val failedJson = m.failed.map(n => s"\"$n\"").mkString("[", ",", "]")
     val full =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpu_total":${fmt(cpuTotal)},""" +
-        s""""cold_total":${fmt(coldTotal)},"load_avg":${fmt(loadAvg)},""" +
-        s""""queries":${obj(best)},"queries_cpu":${obj(bestCpu)},"queries_cold":$qsCold,""" +
+        s""""cold_total":${fmt(coldTotal)},"cold_cpu_total":${fmt(coldCpuTotal)},""" +
+        s""""load_avg":${fmt(m.loadAvg)},""" +
+        s""""queries":${obj(m.steady)},"queries_cpu":${obj(m.steadyCpu)},""" +
+        s""""queries_cold":${obj(m.cold)},"queries_cold_cpu":${obj(m.coldCpu)},""" +
         s""""failed":$failedJson,"sf":"$sfDir"}"""
     Files.write(Paths.get("bench_results.json"), full.getBytes(StandardCharsets.UTF_8))
 
@@ -156,15 +85,115 @@ object Bench {
     // full-then-short, the short line is the only complete candidate
     // in the tail.) Its own metric key keeps a consumer that takes the
     // last "metric":"total" line on the full record.
-    val slowest = ok.map(n => n -> best(n)).sortBy(-_._2).take(5)
+    val slowest = ok.map(n => n -> m.steady(n)).sortBy(-_._2).take(5)
       .map { case (n, v) => s"""{"query":"$n","sec":${fmt(v)}}""" }
       .mkString("[", ",", "]")
     val line = s"""{"metric":"total_summary","value":${fmt(total)},"unit":"sec",""" +
       s""""cpu_total":${fmt(cpuTotal)},"cold_total":${fmt(coldTotal)},""" +
-      s""""load_avg":${fmt(loadAvg)},""" +
-      s""""n_queries":${ok.size},"n_failed":${failed.size},"slowest":$slowest,"sf":"$sfDir",""" +
+      s""""load_avg":${fmt(m.loadAvg)},""" +
+      s""""n_queries":${ok.size},"n_failed":${m.failed.size},"slowest":$slowest,"sf":"$sfDir",""" +
       s""""detail":"bench_results.json"}"""
     println(line)
     spark.stop()
+  }
+
+  /** One measurement of `qs` over `dir`, in name order as given:
+    * `steady`/`steadyCpu` are the per-query minimum wall seconds and
+    * the process-CPU seconds of that same pass, `cold`/`coldCpu` the
+    * artifact-cold pass (empty when `cold` is false). A query listed
+    * in `failed` appears in no timing map. `loadAvg` is the host's
+    * 1-minute load average at the end. */
+  final case class Measured(steady: Map[String, Double], steadyCpu: Map[String, Double],
+      cold: Map[String, Double], coldCpu: Map[String, Double],
+      failed: Seq[String], loadAvg: Double)
+
+  /** Bench's methodology over any query list, for Bench itself and for
+    * the scale harness. */
+  def measure(spark: SparkSession, dir: String, qs: Seq[(String, queries.QueryFn)],
+      cold: Boolean = true): Measured = {
+    // Release any per-dir memo state a previous phase in this JVM built
+    // (cached frames, centroid arrays, edge sets, landed files): the
+    // measured passes must never read another phase's memos, so every
+    // bench invocation reproduces the same cold-start → warmup →
+    // steady-state discipline whether the JVM is fresh (the driver's
+    // runs) or reused (a dev loop). The round-8 committed map was
+    // polluted exactly this way — ~99 sub-10 ms rows for queries whose
+    // fresh steady state is seconds.
+    queries.Caches.release(spark, dir)
+
+    // Runs one query to completion; a non-fatal failure marks it
+    // failed (logged once) and it is never run or timed again.
+    val failed = scala.collection.mutable.SortedSet.empty[String]
+    def run(name: String, fn: queries.QueryFn): Boolean =
+      !failed(name) && {
+        try { fn(spark, dir).queryExecution.toRdd.count(); true }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+          false
+        }
+      }
+
+    val warmSecs = qs.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      run(name, fn)
+      name -> (System.nanoTime() - t0) / 1e9
+    }.toMap
+    // The difflib-parity UDF loops need ~3 executions before C2 settles
+    // (45 → 20 → 5 s historically); one extra warmup for anything still
+    // slow after the first keeps the measured minimum honest instead of
+    // JIT-state-dependent across bench invocations.
+    qs.foreach { case (name, fn) =>
+      if (warmSecs(name) > 2.0) run(name, fn)
+    }
+
+    // Process-CPU seconds per query alongside wall seconds: on a
+    // contended host wall time inflates while CPU time stays flat, so
+    // a wall/CPU divergence across rounds distinguishes "the host was
+    // busy" from "the query regressed" without a rerun (the 85.2 s
+    // round-6 close-out swing would have been self-evident).
+    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    /** (wall, CPU) seconds of one run, None when it failed. */
+    def timed(name: String, fn: queries.QueryFn): Option[(Double, Double)] = {
+      val c0 = osBean.getProcessCpuTime
+      val t0 = System.nanoTime()
+      val ok = run(name, fn)
+      val sec = (System.nanoTime() - t0) / 1e9
+      Option.when(ok)((sec, (osBean.getProcessCpuTime - c0) / 1e9))
+    }
+    val best = scala.collection.mutable.Map.empty[String, (Double, Double)]
+    (1 to MeasuredPasses).foreach { _ =>
+      qs.foreach { case (name, fn) =>
+        // CPU of the SAME pass as the reported wall
+        timed(name, fn).foreach { t =>
+          if (t._1 < best.get(name).fold(Double.MaxValue)(_._1)) best(name) = t
+        }
+      }
+    }
+
+    // Third measured map: COLD per-query cost. Before each query every
+    // per-dir memo (cached frames, trained codebooks, landed artifact
+    // dirs) is dropped, so the figure is what a first-run user pays —
+    // the steady-state map above is the marginal cost once shared
+    // artifacts exist. JIT stays warm (the passes above ran), so "cold"
+    // means artifact-cold, not JVM-cold: exactly the production
+    // first-run. Its CPU twin separates a busy host from a regression
+    // the way the steady CPU map does.
+    val coldRuns = if (!cold) Map.empty[String, (Double, Double)] else qs.flatMap { case (name, fn) =>
+      queries.Caches.release(spark, dir)
+      timed(name, fn).map(name -> _)
+    }.toMap
+
+    // Host-load telemetry: the r13 cold map was contaminated by outside
+    // load (BASELINE.md round-14 A/B attribution), and diagnosing it
+    // required a rerun. The 1-minute load average at the END, next to
+    // the JVM's own core count, makes "was the host busy" readable off
+    // the record (load >> cpus while wall inflates under flat CPU =
+    // contention, not regression).
+    def ok(m: scala.collection.Map[String, (Double, Double)], f: ((Double, Double)) => Double) =
+      m.collect { case (n, t) if !failed(n) => n -> f(t) }.toMap
+    Measured(ok(best, _._1), ok(best, _._2), ok(coldRuns, _._1), ok(coldRuns, _._2),
+      failed.toSeq, osBean.getSystemLoadAverage)
   }
 }

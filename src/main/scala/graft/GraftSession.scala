@@ -27,8 +27,9 @@ object GraftSession {
     // (long, long) candidate pairs whose per-row cost is a shingle
     // merge scan, and the 1 MiB default floor folded 32 partitions to
     // ~4 at mid-size, tripling d3's wall time (BASELINE.md round-7
-    // ScalingCheck isolation). 64 KiB keeps the floor below
-    // total/parallelism wherever per-row compute still matters.
+    // isolation; `graft.tools.Scale d3` reruns it). 64 KiB keeps the
+    // floor below total/parallelism wherever per-row compute still
+    // matters.
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
     // split single-file scans: the sf fixtures are one parquet file
     // per table (lineitem sf0.1 ≈ 11 MB), so the 128 MB default makes

@@ -31,9 +31,9 @@ import org.apache.spark.sql.functions._
   * distinct exchanges because column pruning differentiates them — so
   * the pattern relies on Spark SQL's range-boundary sampling being
   * deterministic across separate instantiations over the same input.
-  * Verified empirically by [[graft.tools.ProbeRange]]: two
-  * differently-pruned evaluations of one `repartitionByRange` assign
-  * identical shard ids on 1M rows (0 mismatches, 0 reused exchanges).
+  * Pinned by PlanSpec's "two differently pruned evaluations of one
+  * repartitionByRange assign identical shard ids" case: on 100k rows,
+  * 0 mismatched shard ids and 0 reused exchanges.
   * Nondeterministic INPUT (e.g. an upstream `rand()`) would break
   * this, as it breaks any multi-consumer plan.
   */

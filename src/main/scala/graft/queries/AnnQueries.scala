@@ -78,8 +78,8 @@ object AnnQueries {
     * map-side-combined aggregate over the postings; shingles with
     * df > max(8, N div 64) are dropped BEFORE the postings self-join,
     * which is what bounds every join bucket to the df cap and keeps
-    * candidate growth linear in the corpus (measured: ScalingX17,
-    * BASELINE.md). The cap is relative (N div 64) so the same query
+    * candidate growth linear in the corpus (measured: `graft.tools.Scale
+    * x17`, BASELINE.md). The cap is relative (N div 64) so the same query
     * serves any corpus size; the floor of 8 keeps small fixtures from
     * capping below honest rarity. */
   /** X17's stop-shingle cap, max(8, N div 64). The corpus cardinality
@@ -854,7 +854,7 @@ object AnnQueries {
     // standard BM25/IDF pruning; a pair sharing ONLY stop-shingles is
     // not lexically similar), which is what bounds posting-bucket
     // sizes and keeps candidate growth linear in the corpus
-    // (measured: ScalingX17 / BASELINE.md). Lexical overlap is then
+    // (measured: `graft.tools.Scale x17` / BASELINE.md). Lexical overlap is then
     // computed EXACTLY over the full shingle sets for every surviving
     // candidate (d3's propose-cheap/verify-exact discipline), cosine
     // re-scores only those candidates via id equi-joins, and the two

@@ -9,23 +9,27 @@ import java.nio.file.{Files, Paths}
   * shapes are the ones the bench times.
   *
   * Usage: `SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=... \
-  *   sbt "runMain graft.tools.PlanDump <suffix> <q1> <q2> ..."`
-  * writes `plans/r17/<q>_<suffix>.txt` (suffix = before / after).
+  *   sbt "runMain graft.tools.PlanDump <tag> <suffix> <q1> <q2> ..."`
+  * writes `plans/<tag>/<q>_<suffix>.txt` (suffix = before / after). An
+  * absolute `<tag>` is the output directory itself, so an A/B capture
+  * can write outside the checkout.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val suffix = args.headOption.getOrElse("before")
-    val names = args.drop(1).toSeq
+    require(args.length >= 3, "usage: PlanDump <tag> <suffix> <query>...")
+    val Array(tag, suffix) = args.take(2)
+    val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val out = Paths.get("plans").resolve(tag)
     val spark = graft.GraftSession.build()
-    Files.createDirectories(Paths.get("plans/r17"))
+    Files.createDirectories(out)
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      Files.write(Paths.get(s"plans/r17/${n}_$suffix.txt"),
-        txt.getBytes(StandardCharsets.UTF_8))
-      println(s"wrote plans/r17/${n}_$suffix.txt (${txt.length} chars)")
+      val file = out.resolve(s"${n}_$suffix.txt")
+      Files.write(file, txt.getBytes(StandardCharsets.UTF_8))
+      println(s"wrote $file (${txt.length} chars)")
     }
     spark.stop()
   }

@@ -37,12 +37,10 @@ class CacheSpec extends AnyFunSuite {
 
     val during = sc.getPersistentRDDs.keySet -- before
     assert(during.nonEmpty, "the cache-heavy queries should persist frames")
-    // landing dirs carry this JVM's PID — scope the check to them so
-    // leftovers from other processes' runs can't flip the assertion
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val pid = ProcessHandle.current().pid()
-    def landings() = tmp.listFiles().filter(f =>
-      f.getName.startsWith(s"graft_s15_${pid}_") || f.getName.startsWith(s"graft_s16_${pid}_"))
+    // landing dirs carry this JVM's PID, so leftovers from other
+    // processes' runs can't flip the assertion
+    def landings() = Seq("s15", "s16")
+      .map(n => new java.io.File(Caches.landingPath(sfDir, n))).filter(_.exists)
     assert(landings().nonEmpty, "landing dirs materialized")
 
     val released = Caches.release(spark, sfDir, blocking = true)
@@ -71,14 +69,6 @@ class CacheSpec extends AnyFunSuite {
     assert(sc.getPersistentRDDs.keySet.intersect(cached).isEmpty)
   }
 
-  /** `<tmpdir>/graft_<name>_<pid>_<tag>`, the landing naming scheme. */
-  private def landingDir(name: String, dir: String): java.io.File = {
-    val tag = java.util.UUID.nameUUIDFromBytes(
-      dir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.take(8)
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${name}_${ProcessHandle.current().pid()}_$tag")
-  }
-
   private def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rmTree))
     f.delete(); ()
@@ -90,7 +80,7 @@ class CacheSpec extends AnyFunSuite {
       val (orders, lineitem) = PipelineQueries.bucketedFor(spark, sfDir)
       Seq(bands, orders, lineitem)
     }
-    val paths = Seq(landingDir("d24", sfDir), landingDir("s18", sfDir))
+    val paths = Seq("d24", "s18").map(n => new java.io.File(Caches.landingPath(sfDir, n)))
     val tables = serve()
     assert(tables.forall(spark.catalog.tableExists), tables)
     assert(paths.forall(_.isDirectory), paths)

@@ -144,6 +144,31 @@ class PlanSpec extends AnyFunSuite {
     assert(keys.sameElements(keys.sorted), "positions disagree with (anchor, article) order")
   }
 
+  test("two differently pruned evaluations of one repartitionByRange assign identical shard ids") {
+    import org.apache.spark.sql.functions._
+    // GlobalOrder evaluates its range-sorted subtree twice (local ranks
+    // and shard counts) as two physically distinct exchanges; its
+    // offsets are only right if both sample the same range bounds.
+    val df = spark.range(100000).select(
+      ((col("id") * 2654435761L) % 1000003).as("k"), col("id"),
+      (col("id") % 997).as("payload"))
+    val sorted = df.repartitionByRange(col("k"), col("id"))
+      .withColumn("p", spark_partition_id())
+    // one side needs payload and the other does not, so column pruning
+    // splits the exchange in two (the t24 counts-vs-local shape)
+    val a = sorted.select(col("k"), col("id"), col("payload"), col("p").as("pa"))
+    val b = sorted.select(col("k"), col("id"), col("p").as("pb"))
+    val j = a.join(b, Seq("k", "id"))
+    assert(j.count() === 100000L)
+    assert(j.filter(col("pa") =!= col("pb")).count() === 0L, "shard ids differ")
+    j.collect() // finalize the adaptive plan
+    val plan = j.queryExecution.executedPlan.toString
+    assert("ReusedExchange|ReusedQueryStage".r.findAllIn(plan).isEmpty,
+      s"the two evaluations must stay distinct exchanges:\n$plan")
+    assert("Exchange rangepartitioning".r.findAllIn(plan).size >= 2,
+      s"expected two range exchanges:\n$plan")
+  }
+
   test("e15 serves the composed verdict from the landed/memoized indexes") {
     val df = SparkEntry.queries("e15_ingest_verdict")(spark, sfDir)
     df.collect()

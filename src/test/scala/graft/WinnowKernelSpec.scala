@@ -71,4 +71,25 @@ class WinnowKernelSpec extends AnyFunSuite {
     assert(neu.orderBy("doc_id", "e").collect().toSeq ===
       old.orderBy("doc_id", "e").collect().toSeq)
   }
+
+  test("t45 keeps the theoretical 2/(W+1) share of gram positions on the test corpus") {
+    // Schleimer et al.: over distinct random hashes, the window after
+    // each step selects a new fingerprint iff the minimum of the W+1
+    // hashes the two windows span sits at either end, with probability
+    // 2/(W+1); a document's first window always selects one. So a doc
+    // of n ≥ W gram positions expects 1 + 2(n − W)/(W+1) fingerprints.
+    // Each step's indicator depends on W+1 consecutive hashes, so the
+    // corpus total has variance at most (2W+1)·E; the test allows four
+    // such standard deviations around E.
+    val docs = Tables.documents(spark, SparkTestBase.sfDir)
+      .filter(col("text").isNotNull && length(col("text")) >= K + W - 1)
+      .select(size(graft.plans.GraftGramHashes.column(col("text"), K)).cast("long").as("n"))
+    val row = docs.agg(sum("n"), sum(lit(1.0) + lit(2.0) * (col("n") - W) / (W + 1))).head()
+    val (positions, expected) = (row.getLong(0), row.getDouble(1))
+    val fingerprints = SparkEntry.queries("t45_winnowing")(spark, SparkTestBase.sfDir).count()
+    val tolerance = 4 * math.sqrt((2 * W + 1) * expected)
+    assert(positions > 0 && math.abs(fingerprints - expected) <= tolerance,
+      f"$fingerprints fingerprints over $positions gram positions " +
+        f"(${fingerprints.toDouble / positions}%.3f; theory ${expected / positions}%.3f ± ${tolerance / positions}%.3f)")
+  }
 }
