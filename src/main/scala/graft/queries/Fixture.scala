@@ -20,33 +20,36 @@ import org.apache.spark.sql.functions._
   * the supplier-side dedup is one hash shuffle on the join key, which the
   * subsequent joins reuse.
   *
-  * Lifetime: [[plan]] holds no state. The frames its [[SyncPlan]] reuses
-  * are cached through `Caches.trackCached(dir, _)`, so
-  * `Caches.release(s, dir)` is the one call that drops them.
+  * Lifetime: [[plan]] reads the two input frames once per (session,
+  * dir) through `Caches.memo`, and the four frames its [[SyncPlan]]
+  * reuses are cached through `Caches.trackCached(dir, _)`, so
+  * `Caches.release(s, dir)` is the one call that drops them all.
   */
 object Fixture {
 
   /** The sync dataflow over this dir: the two frames [[SyncPlan]] reads,
     * with every simulated column constructed here, and its reused
-    * intermediates cached under `dir` for [[Caches.release]]. A fresh
-    * value per call — a later call builds equal plans, which Spark's
-    * CacheManager serves from the same caches. */
+    * intermediates cached under `dir` for [[Caches.release]]. The input
+    * frames are read once per (session, dir) — only they are memoized,
+    * never a plan's executed outputs — and a fresh [[SyncPlan]] per call
+    * builds equal plans, which Spark's CacheManager serves from the same
+    * caches. */
   def plan(s: SparkSession, dir: String): SyncPlan = {
     val article = col("article")
-    val supplier = supplierSide(s, dir).select(
+    val supplier = Caches.memo(s, dir, "sync_supplier")(supplierSide(s, dir).select(
       article, col("supplier_price"),
       supplierName(article).as("name"), supplierColor(article).as("color"),
       // the article cell this list proposes (S7)
       (article * 10 + 1).as("proposed_vitya"),
       // the base row a new item is inserted after (O3/S8)
-      (article % 1000).as("anchor"))
+      (article % 1000).as("anchor")))
     // every 4th base row's article cell is already occupied (value =
     // 10·article), the rest are empty — exercises the J8 existing-value
     // guard (main.py:5961-6051)
-    val base = baseSide(s, dir).select(
+    val base = Caches.memo(s, dir, "sync_base")(baseSide(s, dir).select(
       article, col("base_price"),
       baseName(article, col("name")).as("name"), baseColor(article).as("color"),
-      when(article % 4 === 0, article * 10).as("existing_vitya"))
+      when(article % 4 === 0, article * 10).as("existing_vitya")))
     new SyncPlan(supplier, base, Caches.trackCached(dir, _))
   }
 

@@ -11,8 +11,12 @@ import org.apache.spark.sql.functions._
   * file order (main.py:2693-2751) — as a scored row_number window.
   *
   * The stages live in [[SyncPlan]]; each query here reads one of its
-  * frames from a fresh [[Fixture.plan]], whose shared intermediates are
-  * plan-keyed caches that `Caches.release(s, dir)` drops.
+  * frames from a fresh [[Fixture.plan]]. Its two input frames are read
+  * once per (session, dir), and its four shared intermediates (the
+  * article join, the coded pools, the code-match window) are plan-keyed
+  * caches; `Caches.release(s, dir)` drops both. The article lookup is one
+  * full-outer join — one shuffle per side at scale instead of one
+  * broadcast of the base's keys per stage.
   */
 object MatchQueries {
 
@@ -106,7 +110,8 @@ object MatchQueries {
     // base for name/color/capacity columns) ----
     "j7_enrich" -> ((s, dir) => {
       val p = Fixture.plan(s, dir)
-      p.supplier.join(broadcast(p.baseCoded), col("article") === col("base_article"))
+      p.byArticle.filter(col("in_supplier") && col("in_base")).select("article", "supplier_price")
+        .join(broadcast(p.baseCoded), col("article") === col("base_article"))
         .select(col("article"), col("supplier_price"), col("base_price"),
           col("bname"), col("bcolor"), col("bcapacity"))
         .orderBy("article")
@@ -122,11 +127,12 @@ object MatchQueries {
         .orderBy("article")
     }),
 
-    // ---- U2: membership as a semi-join ----
+    // ---- U2: membership as a semi-join (both sides read the caches) ----
     "u2_semi_join" -> ((s, dir) => {
       val p = Fixture.plan(s, dir)
-      p.supplier.join(broadcast(p.base.select("article")), Seq("article"), "left_semi")
-        .select("article", "supplier_price")
+      p.byArticle.filter(col("in_supplier")).select("article", "supplier_price")
+        .join(broadcast(p.baseCoded.select(col("base_article").as("article"))),
+          Seq("article"), "left_semi")
         .orderBy("article")
     }),
 

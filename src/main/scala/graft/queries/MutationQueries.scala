@@ -7,7 +7,12 @@ package graft.queries
   * datasets (price_updates_log / changes_log) are first-class outputs.
   *
   * The mutations live in [[SyncPlan]] (see its scale notes); each query
-  * here reads one of its frames from a fresh [[Fixture.plan]].
+  * here reads one of its frames from a fresh [[Fixture.plan]], whose two
+  * inputs are read once per (session, dir). S6, A10, S7 and S5 filter or
+  * aggregate its cached full-outer article join, so none of them joins
+  * (one shuffle per side at scale, shared by all four); S8 reads the
+  * cached new-item pool. `Caches.release(s, dir)` drops the inputs and
+  * the four cached frames.
   */
 object MutationQueries {
 

@@ -13,37 +13,38 @@ class BucketingSpec extends AnyFunSuite {
 
   test("bucketed-by-key tables join without a shuffle exchange") {
     // external-table paths, so the (static) warehouse dir is untouched
-    val wh = java.nio.file.Files.createTempDirectory("bucketwh").toString
-    val supplier = queries.Fixture.supplierSide(spark, sfDir)
-    val base = queries.Fixture.baseSide(spark, sfDir)
-    supplier.write.mode("overwrite")
-      .bucketBy(8, "article").sortBy("article")
-      .option("path", s"$wh/sup_bucketed")
-      .saveAsTable("sup_bucketed")
-    base.write.mode("overwrite")
-      .bucketBy(8, "article").sortBy("article")
-      .option("path", s"$wh/base_bucketed")
-      .saveAsTable("base_bucketed")
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    // disable broadcast so the join MUST co-locate by partitioning
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("sup_bucketed")
-        .join(spark.table("base_bucketed"), Seq("article"))
-        .select(col("article"), col("supplier_price"), col("base_price"))
-      joined.collect()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
-        s"expected a non-broadcast join:\n$plan")
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join still shuffled:\n$plan")
-      // sanity: same rows as the plain (shuffling) join
-      val expected = supplier.join(base, Seq("article")).count()
-      assert(joined.count() === expected)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS sup_bucketed")
-      spark.sql("DROP TABLE IF EXISTS base_bucketed")
+    SparkTestBase.withTempDir("bucketwh") { wh =>
+      val supplier = queries.Fixture.supplierSide(spark, sfDir)
+      val base = queries.Fixture.baseSide(spark, sfDir)
+      supplier.write.mode("overwrite")
+        .bucketBy(8, "article").sortBy("article")
+        .option("path", s"$wh/sup_bucketed")
+        .saveAsTable("sup_bucketed")
+      base.write.mode("overwrite")
+        .bucketBy(8, "article").sortBy("article")
+        .option("path", s"$wh/base_bucketed")
+        .saveAsTable("base_bucketed")
+      val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      // disable broadcast so the join MUST co-locate by partitioning
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val joined = spark.table("sup_bucketed")
+          .join(spark.table("base_bucketed"), Seq("article"))
+          .select(col("article"), col("supplier_price"), col("base_price"))
+        joined.collect()
+        val plan = joined.queryExecution.executedPlan.toString
+        assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
+          s"expected a non-broadcast join:\n$plan")
+        assert(!plan.contains("Exchange hashpartitioning"),
+          s"bucketed join still shuffled:\n$plan")
+        // sanity: same rows as the plain (shuffling) join
+        val expected = supplier.join(base, Seq("article")).count()
+        assert(joined.count() === expected)
+      } finally {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+        spark.sql("DROP TABLE IF EXISTS sup_bucketed")
+        spark.sql("DROP TABLE IF EXISTS base_bucketed")
+      }
     }
   }
 }

@@ -499,23 +499,24 @@ class DedupSpec extends AnyFunSuite {
     val doc2 = "mmmm nnnn oooo pppp " * 8
     val doc10 = "zzzz yyyy xxxx wwww vvvv uuuu tttt ssss Q" + para + "R rrrr qqqq pppp"
     val doc20 = "totally fresh content with its own words never seen before " * 4
-    val dir = java.nio.file.Files.createTempDirectory("graft_admission").toString
-    Seq((1L, doc1), (2L, doc2), (10L, doc10), (20L, doc20))
-      .map { case (id, t) => (id, t, "s1", "en", t.length.toLong) }
-      .toDF("doc_id", "text", "source", "lang", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = DedupQueries.queries("d26_substring_admission")(spark, dir)
-      .collect().map(r => r.getLong(0) -> r).toMap
-    assert(rows.keySet == Set(10L, 20L), s"got ${rows.keySet}")
-    val dup = rows(10L)
-    assert(dup.getLong(1) == 1L, s"n_partners: $dup")
-    assert(dup.getLong(2) == 1L, s"best_match: $dup")
-    assert(dup.getLong(4) == 150L, s"dup_chars: $dup")
-    assert(!dup.getBoolean(6), s"72%-duplicate arrival must be rejected: $dup")
-    val novel = rows(20L)
-    assert(novel.getLong(1) == 0L && novel.isNullAt(2) && novel.getLong(4) == 0L
-      && novel.getBoolean(6), s"novel arrival must be admitted: $novel")
-    graft.queries.Caches.release(spark, dir)
+    SparkTestBase.withTempDir("graft_admission") { dir =>
+      Seq((1L, doc1), (2L, doc2), (10L, doc10), (20L, doc20))
+        .map { case (id, t) => (id, t, "s1", "en", t.length.toLong) }
+        .toDF("doc_id", "text", "source", "lang", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val rows = DedupQueries.queries("d26_substring_admission")(spark, dir)
+        .collect().map(r => r.getLong(0) -> r).toMap
+      assert(rows.keySet == Set(10L, 20L), s"got ${rows.keySet}")
+      val dup = rows(10L)
+      assert(dup.getLong(1) == 1L, s"n_partners: $dup")
+      assert(dup.getLong(2) == 1L, s"best_match: $dup")
+      assert(dup.getLong(4) == 150L, s"dup_chars: $dup")
+      assert(!dup.getBoolean(6), s"72%-duplicate arrival must be rejected: $dup")
+      val novel = rows(20L)
+      assert(novel.getLong(1) == 0L && novel.isNullAt(2) && novel.getLong(4) == 0L
+        && novel.getBoolean(6), s"novel arrival must be admitted: $novel")
+      graft.queries.Caches.release(spark, dir)
+    }
   }
 
   test("property: cdcChunks equals cdcSpans plus a digest of the sliced chunk") {

@@ -31,39 +31,40 @@ class RobustnessSpec extends AnyFunSuite {
   test("vector queries tolerate malformed embeddings (null / wrong-dim / all-zero / null-element)") {
     import org.apache.spark.sql.functions._
     val src = SparkTestBase.sfDir
-    val dir = java.nio.file.Files.createTempDirectory("graft_bad_vecs").toString
-    spark.read.parquet(s"$src/documents.parquet")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // corrupt a slice of the fixture's embeddings: admission at
-    // Tables.embeddings must drop these rows, and the optimizer's
-    // inferred isnotnull(UDF(...)) predicates must not NPE the kernels
-    spark.read.parquet(s"$src/embeddings.parquet")
-      .withColumn("embedding",
-        when(col("vec_id") % 97 === 5, lit(null))
-          .when(col("vec_id") % 97 === 17, array().cast("array<float>"))
-          .when(col("vec_id") % 97 === 33, expr("slice(embedding, 1, 32)"))
-          .when(col("vec_id") % 97 === 41,
-            expr("transform(embedding, x -> CAST(0.0 AS FLOAT))"))
-          // null ELEMENTS inside an otherwise well-formed 64-dim vector:
-          // exists(_ =!= 0) alone would admit it; the forall(isNotNull)
-          // admission conjunct must reject it before any kernel unboxes
-          .when(col("vec_id") % 97 === 59,
-            expr("transform(embedding, (x, i) -> IF(i % 7 = 3, CAST(NULL AS FLOAT), x))"))
-          .otherwise(col("embedding")))
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val vecQueries = SparkEntry.queries.keys.filter(n =>
-      n.startsWith("x") || Seq("d5_embedding_dup", "d13_semantic_clusters",
-        "d14_semantic_edges_ivf", "d16_semantic_decontaminate").contains(n)).toSeq.sorted
-    val failures = vecQueries.flatMap { name =>
-      try { SparkEntry.queries(name)(spark, dir).collect(); None }
-      catch { case e: Throwable => Some(s"$name: ${e.toString.take(120)}") }
+    SparkTestBase.withTempDir("graft_bad_vecs") { dir =>
+      spark.read.parquet(s"$src/documents.parquet")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      // corrupt a slice of the fixture's embeddings: admission at
+      // Tables.embeddings must drop these rows, and the optimizer's
+      // inferred isnotnull(UDF(...)) predicates must not NPE the kernels
+      spark.read.parquet(s"$src/embeddings.parquet")
+        .withColumn("embedding",
+          when(col("vec_id") % 97 === 5, lit(null))
+            .when(col("vec_id") % 97 === 17, array().cast("array<float>"))
+            .when(col("vec_id") % 97 === 33, expr("slice(embedding, 1, 32)"))
+            .when(col("vec_id") % 97 === 41,
+              expr("transform(embedding, x -> CAST(0.0 AS FLOAT))"))
+            // null ELEMENTS inside an otherwise well-formed 64-dim vector:
+            // exists(_ =!= 0) alone would admit it; the forall(isNotNull)
+            // admission conjunct must reject it before any kernel unboxes
+            .when(col("vec_id") % 97 === 59,
+              expr("transform(embedding, (x, i) -> IF(i % 7 = 3, CAST(NULL AS FLOAT), x))"))
+            .otherwise(col("embedding")))
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      val vecQueries = SparkEntry.queries.keys.filter(n =>
+        n.startsWith("x") || Seq("d5_embedding_dup", "d13_semantic_clusters",
+          "d14_semantic_edges_ivf", "d16_semantic_decontaminate").contains(n)).toSeq.sorted
+      val failures = vecQueries.flatMap { name =>
+        try { SparkEntry.queries(name)(spark, dir).collect(); None }
+        catch { case e: Throwable => Some(s"$name: ${e.toString.take(120)}") }
+      }
+      assert(failures.isEmpty,
+        s"queries crashed on malformed embeddings:\n${failures.mkString("\n")}")
+      // admission actually dropped the malformed rows
+      assert(Tables.embeddings(spark, dir).count() <
+        spark.read.parquet(s"$dir/embeddings.parquet").count())
+      graft.queries.Caches.release(spark, dir)
     }
-    assert(failures.isEmpty,
-      s"queries crashed on malformed embeddings:\n${failures.mkString("\n")}")
-    // admission actually dropped the malformed rows
-    assert(Tables.embeddings(spark, dir).count() <
-      spark.read.parquet(s"$dir/embeddings.parquet").count())
-    graft.queries.Caches.release(spark, dir)
   }
 
   test("every registered query tolerates ~5% nulls in every column of every table") {

@@ -7,4 +7,11 @@ import org.apache.spark.sql.SparkSession
 object SparkTestBase {
   lazy val spark: SparkSession = GraftSession.build(cpus = 4, logLevel = "WARN")
   val sfDir = "/root/testdata/sf0.001"
+
+  /** `body` over a fresh temp directory `<prefix>…`, deleted afterwards
+    * whether or not `body` throws. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString) finally graft.tools.Scale.deleteTree(dir)
+  }
 }
