@@ -1,8 +1,10 @@
 package graft.operators
 
+import graft.plans.PartialBestSimilarityJoin
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** The reference's fuzzy-name matching (J2 per-item probe / J5 batch,
   * /root/reference/main.py:2804-2924, 4612-4705) as a blocked similarity
@@ -11,21 +13,28 @@ import org.apache.spark.sql.functions._
   *
   * Scale design (the reference is an O(n·m) Python loop — SURVEY.md §4.1):
   *
-  *  1. '''Lossless length-band blocking.''' ratio(a,b) ≤ 2·min(|a|,|b|) /
-  *     (|a|+|b|) (difflib's real_quick_ratio bound), so pairs whose
-  *     lengths alone cap the ratio below the threshold are pruned by a
-  *     pure Column predicate BEFORE the scoring UDF runs. Equality of
-  *     results with the exact cross join is provable, not sampled.
-  *  2. '''Upper-bound cascade in the scorer.''' The UDF runs difflib's
-  *     real_quick_ratio → quick_ratio → ratio escalation, skipping the
-  *     quadratic match search for pairs that cannot reach the threshold.
-  *  3. '''Broadcast the small side.''' The candidate pool (unmatched new
-  *     items) is orders of magnitude smaller than the base; broadcasting
-  *     it turns the cross join into a map-side pass over the base with no
-  *     shuffle of the big side. At 100 TB the same plan holds: the
-  *     candidate set after the article/code stages is small by
-  *     construction; were it not, swap stage 1 for LSH bucketing (see
-  *     graft.queries.DedupQueries) at the cost of exactness.
+  *  1. '''Broadcast the small side, decided here.''' The candidate pool
+  *     (unmatched new items) is orders of magnitude smaller than the
+  *     base. [[bestMatch]], the one caller, tests the pool against
+  *     `spark.sql.autoBroadcastJoinThreshold` and, when it fits, builds
+  *     the native [[graft.plans.PartialBestSimilarityJoin]] itself: a
+  *     map-side pass over the base with no shuffle of the big side. A
+  *     larger pool must not be collected on the driver, so it runs as a
+  *     nested-loop cross join instead.
+  *  2. '''Upper-bound cascade.''' Scoring runs difflib's real_quick_ratio →
+  *     quick_ratio → ratio escalation, skipping the quadratic match
+  *     search for pairs that cannot reach the bar; the native node raises
+  *     that bar to each candidate's incumbent similarity.
+  *  3. '''Lossless length-band blocking.''' ratio(a,b) ≤ 2·min(|a|,|b|) /
+  *     (|a|+|b|) (real_quick_ratio), so on the nested-loop path a pure
+  *     Column predicate prunes the pairs whose lengths alone cap the
+  *     ratio below the threshold before the similarity runs. Equality
+  *     with the exact cross join is provable, not sampled.
+  *
+  * At 100 TB the same plan holds: the candidate set after the
+  * article/code stages is small by construction; were it not, swap the
+  * cross join for LSH bucketing (see graft.queries.DedupQueries) at the
+  * cost of exactness.
   */
 object FuzzyJoin {
 
@@ -33,7 +42,7 @@ object FuzzyJoin {
     * `<prefix>_key`, `<prefix>_name`, `<prefix>_sim` of the best base row
     * with sim ≥ threshold (left semantics: candidates without a match
     * keep nulls). `candKey` must be unique per candidate row (it anchors
-    * the argmax window and the join-back). Deterministic tie-break:
+    * the argmax and the join-back). Deterministic tie-break:
     * highest sim, then smallest base key — the reference's
     * first-in-file-order argmax (main.py:2877-2903).
     *
@@ -51,7 +60,7 @@ object FuzzyJoin {
         s"smallest-key tie-break (got $keyType)")
     val c = cands.withColumn("_cand_name", candName)
       .withColumn("_cand_lc", lower(candName))
-      .withColumn("_cand_len", length(lower(candName)))
+      .withColumn("_cand_len", nullif(length(lower(candName)), lit(0)))
       .withColumn("_cand_id", candKey)
     // The base side arrives as a handful of scan partitions; after the
     // broadcast join it would run on those few threads. Repartition to
@@ -62,10 +71,11 @@ object FuzzyJoin {
       baseKey.as(s"${prefix}_key"),
       baseName.as(s"${prefix}_name"),
       lower(baseName).as("_base_lc"),
-      length(lower(baseName)).as("_base_len"))
+      nullif(length(lower(baseName)), lit(0)).as("_base_len"))
       .repartition(width)
     // Lossless band: 2·min(la,lb)/(la+lb) ≥ t  (null lengths drop — a
-    // null name can never reach a positive threshold anyway).
+    // null or empty name can never reach a positive threshold anyway,
+    // and two empty names would divide by zero).
     val band = lit(2.0) * least(col("_cand_len"), col("_base_len")) /
       (col("_cand_len") + col("_base_len")) >= lit(threshold)
     // Score with only the 3 columns the scorer needs: every surviving
@@ -73,33 +83,34 @@ object FuzzyJoin {
     // row through the O(cands·base) join would copy all its columns per
     // pair; the wide columns re-attach in the final join-back below.
     val cSlim = c.select(col("_cand_id"), col("_cand_lc"), col("_cand_len"))
-    // Declarative similarity-join shape: crossJoin + threshold filter on
-    // the native graft_similarity expression, which GraftSession's
-    // extensions resolve. SimilarityJoinRule rewrites it into the
-    // whole-operator SimilarityJoinExec — the candidate side is
-    // collected ONCE (it is small by construction and size-guarded by
-    // autoBroadcastJoinThreshold) and names are lowercased once per
-    // ROW, not once per pair. Over that size guard the plan stays a
-    // nested-loop join whose And(band, sim ≥ t) short-circuits the
-    // quadratic ratio behind the codegen'd length band. The ratio
-    // returned at or above the threshold is exact in both paths, so
-    // `_sim` and the argmax agree with the UDF formulation this
-    // replaces (MatchSpec pins that equivalence).
+    // The path test reads the pool's optimized size estimate: a cache
+    // reports its real size only once built, before that the estimate of
+    // the plan it caches (so SyncPlan.fuzzy builds its pool first). Both
+    // paths return exact ratios at or above the threshold and feed the
+    // same argmax (MatchSpec pins them row for row).
     val simCol = expr("graft_similarity(_cand_lc, _base_lc)")
-    val scored = cSlim.crossJoin(b)
-      .where(band && simCol >= lit(threshold))
+    val spark = cands.sparkSession
+    val cap = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val pairs =
+      if (cap > 0 && cSlim.queryExecution.optimizedPlan.stats.sizeInBytes <= cap) {
+        val (l, r) = (cSlim.queryExecution.analyzed, b.queryExecution.analyzed)
+        def attr(p: LogicalPlan, name: String) = p.output.find(_.name == name).get
+        ColumnBridge.frame(spark, PartialBestSimilarityJoin(l, r,
+          attr(l, "_cand_lc"), attr(r, "_base_lc"), threshold,
+          attr(r, s"${prefix}_key"), attr(r, s"${prefix}_name")))
+      } else cSlim.crossJoin(b).where(band && simCol >= lit(threshold))
     // Argmax as a PARTIAL-AGGREGATING max over a lexicographic struct
     // (sim desc, then smallest base key via the negated key), NOT a
     // row_number window: the window formulation shuffles and sorts
     // EVERY surviving pair (O(cands·base) rows through an exchange);
     // the hash aggregate folds pairs map-side into one row per
     // candidate inside the join's own stage, so the only exchange is
-    // |cands| × partitions combiner rows. The threshold's exact-ratio
-    // contract is unchanged — `simCol` re-evaluates per surviving pair
-    // (memoized against the join filter's computation, see
-    // Similarity.ratio), and ties on (sim, key) can only differ in
-    // `name`, where max picks deterministically.
-    val best = scored.groupBy("_cand_id").agg(max(struct(
+    // |cands| × partitions combiner rows (the native node hands it at
+    // most one pair per candidate and partition). `simCol` re-evaluates
+    // per surviving pair (memoized against the join filter's
+    // computation, see Similarity.ratio), and ties on (sim, key) can
+    // only differ in `name`, where max picks deterministically.
+    val best = pairs.groupBy("_cand_id").agg(max(struct(
         simCol.as("s"), (-col(s"${prefix}_key")).as("nk"),
         col(s"${prefix}_key").as("k"), col(s"${prefix}_name").as("n"))).as("_b"))
       .select(col("_cand_id").as("_best_id"),

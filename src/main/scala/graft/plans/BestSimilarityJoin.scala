@@ -4,20 +4,19 @@ import graft.functions.Similarity
 import java.util.Locale
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, BindReferences, CreateNamedStruct, Expression, JoinedRow, UnsafeProjection}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Max}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BinaryNode, Filter, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Descending, Expression, InterpretedOrdering, JoinedRow, NullsLast, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Partial best-similarity join: same output contract as
-  * [[SimilarityJoin]] (it slots in under the untouched Filter/Project/
-  * Aggregate above it), but each partition emits only its BEST surviving
-  * pair per build-side row under `structOrder`'s lexicographic ordering
-  * — the argmax-aggregate above then merges one row per (candidate ×
-  * partition) instead of consuming every pair.
+/** Partial best-similarity join, the fuzzy stage's native operator,
+  * built directly by [[graft.operators.FuzzyJoin]]. The LEFT child is
+  * the candidate pool, the RIGHT the base. Each base partition emits, per
+  * candidate, its BEST pair with ratio(leftName, rightName) ≥ threshold:
+  * highest ratio, then smallest `baseKey`, then largest `baseName` —
+  * the order of FuzzyJoin's `max(struct(sim, -key, key, name))`, so the
+  * aggregate above merges one row per (candidate × partition) instead of
+  * consuming every pair.
   *
   * The decisive win is not the row reduction but the ADAPTIVE threshold
   * it enables: once a candidate holds a best with similarity s, later
@@ -26,15 +25,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * threshold prunes nothing), raising the bar to the incumbent's s
   * skips the quadratic match search for almost every remaining pair.
   * Exactness is preserved: the cascade only returns early with a bound
-  * strictly below the requested floor, and any pair at or above the
-  * incumbent gets an exact ratio and a full struct comparison (ties on
-  * similarity fall through to the later struct fields).
+  * strictly below the requested floor, so any pair at or above the
+  * incumbent gets an exact ratio, and ties on it fall through to the
+  * key and name. Pairs first pass the length band of FuzzyJoin's
+  * nested-loop path, over the same code-point lengths: the ratio counts
+  * UTF-16 units, so for names with astral characters the band is not
+  * implied by the ratio, and both paths must drop the same pairs.
   */
 case class PartialBestSimilarityJoin(
     left: LogicalPlan, right: LogicalPlan,
-    leftName: Expression, rightName: Expression,
-    threshold: Double, strict: Boolean,
-    residual: Option[Expression], structOrder: Expression) extends BinaryNode {
+    leftName: Expression, rightName: Expression, threshold: Double,
+    baseKey: Expression, baseName: Expression) extends BinaryNode {
 
   override def output: Seq[Attribute] = left.output ++ right.output
 
@@ -43,91 +44,14 @@ case class PartialBestSimilarityJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Rewrites the canonical best-match shape [[graft.operators.FuzzyJoin]]
-  * produces —
-  * {{{
-  * Aggregate [g], [g, max(struct(sim(a, b), …)) AS _b]
-  *   +- Project [attrs]            (optional, attribute-only)
-  *      +- Filter residual         (optional, e.g. the length band)
-  *         +- SimilarityJoin a, b, t
-  * }}}
-  * — by swapping the join for [[PartialBestSimilarityJoin]]. The
-  * Aggregate/Project stay in place (the aggregate performs the global
-  * merge of the per-partition bests); the Filter moves INTO the node
-  * (a partition's best must be a row the filter would have kept, or a
-  * candidate whose runner-up survives the filter would lose its match).
-  *
-  * Guards: single grouping attribute from the build side; every
-  * aggregate expression is the grouping attribute or ONE max-of-struct
-  * whose first field is the join's own similarity (that field is the
-  * primary sort key the adaptive pruning bounds); struct fields are
-  * limited to the orderable primitive types the exec's comparator
-  * mirrors Spark's struct ordering for.
-  */
-object BestSimilarityMatchRule extends Rule[LogicalPlan] {
-
-  private def orderable(t: DataType): Boolean = t match {
-    case DoubleType | LongType | IntegerType | StringType => true
-    case _ => false
-  }
-
-  private def maxStructOf(e: Expression): Option[CreateNamedStruct] = e match {
-    case Alias(ae: AggregateExpression, _) if !ae.isDistinct && ae.filter.isEmpty =>
-      ae.aggregateFunction match {
-        case Max(cns: CreateNamedStruct) => Some(cns)
-        case _ => None
-      }
-    case _ => None
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case agg @ Aggregate(Seq(g: Attribute), aggExprs, child, _) =>
-      val unpacked = child match {
-        case Project(pl, Filter(c, sj: SimilarityJoin))
-            if pl.forall(_.isInstanceOf[Attribute]) => Some((Some(pl), Some(c), sj))
-        case Filter(c, sj: SimilarityJoin) => Some((None, Some(c), sj))
-        case Project(pl, sj: SimilarityJoin)
-            if pl.forall(_.isInstanceOf[Attribute]) => Some((Some(pl), None, sj))
-        case sj: SimilarityJoin => Some((None, None, sj))
-        case _ => None
-      }
-      unpacked match {
-        case Some((projList, cond, sj)) if sj.left.outputSet.contains(g) =>
-          val structs = aggExprs.flatMap(maxStructOf)
-          val shapeOk = structs.length == 1 &&
-            aggExprs.forall(e => e.semanticEquals(g) || maxStructOf(e).isDefined) &&
-            structs.head.valExprs.nonEmpty &&
-            (structs.head.valExprs.head match {
-              case s: GraftSimilarity =>
-                s.left.semanticEquals(sj.leftName) && s.right.semanticEquals(sj.rightName)
-              case _ => false
-            }) &&
-            structs.head.valExprs.forall(v =>
-              orderable(v.dataType) && v.references.subsetOf(sj.outputSet) &&
-                // the rewrite changes how many times struct fields are
-                // evaluated per pair — a nondeterministic field (rand())
-                // would diverge from the unrewritten plan
-                v.deterministic) &&
-            cond.forall(_.references.subsetOf(sj.outputSet)) &&
-            !cond.exists(_.exists(!_.deterministic))
-          if (shapeOk) {
-            val pb = PartialBestSimilarityJoin(sj.left, sj.right, sj.leftName,
-              sj.rightName, sj.threshold, sj.strict, cond, structs.head)
-            agg.copy(child = projList.map(pl => Project(pl, pb)).getOrElse(pb))
-          } else agg
-        case _ => agg
-      }
-  }
-}
-
-/** Physical [[PartialBestSimilarityJoin]]: broadcast-collected build
-  * side (size-guarded at SimilarityJoin creation), streamed probe side,
-  * per-partition incumbent array indexed by build row. */
+/** Physical [[PartialBestSimilarityJoin]]: driver-collected, broadcast
+  * candidate side (FuzzyJoin builds the node only when the pool fits
+  * `autoBroadcastJoinThreshold`), streamed base side, per-partition
+  * incumbent arrays indexed by candidate row. */
 case class PartialBestSimilarityJoinExec(
     left: SparkPlan, right: SparkPlan,
-    leftName: Expression, rightName: Expression,
-    threshold: Double, strict: Boolean,
-    residual: Option[Expression], structOrder: Expression) extends BinaryExecNode {
+    leftName: Expression, rightName: Expression, threshold: Double,
+    baseKey: Expression, baseName: Expression) extends BinaryExecNode {
 
   override def output: Seq[Attribute] = left.output ++ right.output
 
@@ -135,86 +59,50 @@ case class PartialBestSimilarityJoinExec(
       newLeft: SparkPlan, newRight: SparkPlan): PartialBestSimilarityJoinExec =
     copy(left = newLeft, right = newRight)
 
-  /** Spark's struct max ordering: field-by-field, nulls smallest. */
-  private def structGt(fields: Array[DataType], a: InternalRow, b: InternalRow): Boolean = {
-    var i = 0
-    while (i < fields.length) {
-      val an = a.isNullAt(i); val bn = b.isNullAt(i)
-      if (an || bn) {
-        if (an != bn) return bn // non-null > null
-      } else {
-        val c = fields(i) match {
-          case DoubleType =>
-            // + 0.0 collapses -0.0 to 0.0: Spark SQL comparison treats
-            // them equal, java.lang.Double.compare orders -0.0 < 0.0.
-            java.lang.Double.compare(a.getDouble(i) + 0.0, b.getDouble(i) + 0.0)
-          case LongType => java.lang.Long.compare(a.getLong(i), b.getLong(i))
-          case IntegerType => java.lang.Integer.compare(a.getInt(i), b.getInt(i))
-          case StringType =>
-            a.get(i, StringType).asInstanceOf[UTF8String]
-              .compareTo(b.get(i, StringType).asInstanceOf[UTF8String])
-          case _ => 0
-        }
-        if (c != 0) return c > 0
-      }
-      i += 1
-    }
-    false
-  }
-
   override protected def doExecute(): RDD[InternalRow] = {
     val leftBound = BindReferences.bindReference(leftName, left.output)
     val leftRows = left.executeCollect().map { r =>
-      val n = leftBound.eval(r)
-      (r.copy(), if (n == null) null else n.toString.toLowerCase(Locale.ROOT))
+      val n = leftBound.eval(r).asInstanceOf[UTF8String]
+      if (n == null) (r.copy(), null, 0)
+      else (r.copy(), n.toString.toLowerCase(Locale.ROOT), n.numChars)
     }
     val bLeft = sparkContext.broadcast(leftRows)
     val rightBound = BindReferences.bindReference(rightName, right.output)
-    val residBound = residual.map(BindReferences.bindReference(_, output))
-    val structBound = BindReferences.bindReference(structOrder, output)
-    val fieldTypes = structOrder.dataType.asInstanceOf[StructType].fields.map(_.dataType)
+    // Ties on similarity: smaller key, then larger name, a null losing
+    // to any value — how max() orders the struct's -key and name fields.
+    val tieOrder = Seq(
+      SortOrder(baseKey, Ascending, NullsLast, Seq.empty),
+      SortOrder(baseName, Descending, NullsLast, Seq.empty))
     val attrs = output
     val thr = threshold
-    val isStrict = strict
     right.execute().mapPartitions { iter =>
-      val t0 = System.nanoTime()
-      var nRight = 0L
       val lhs = bLeft.value
       val n = lhs.length
+      val bestSims = new Array[Double](n)
       val bestRows = new Array[InternalRow](n)
-      val bestKeys = new Array[InternalRow](n)
       val joiner = new JoinedRow
       val proj = UnsafeProjection.create(attrs, attrs)
-      // Deep-copies the incumbent struct: CreateNamedStruct.eval returns
-      // a GenericInternalRow whose UTF8String fields POINT INTO the
-      // reused stream-side UnsafeRow buffer — a shallow .copy() keeps
-      // those pointers, so a later probe row would silently mutate a
-      // stored StringType field before the structGt tie-break reads it.
-      val keyProj = UnsafeProjection.create(fieldTypes)
+      val ties = new InterpretedOrdering(tieOrder, attrs)
       while (iter.hasNext) {
-        nRight += 1
         val rRow = iter.next()
-        val rn = rightBound.eval(rRow)
+        val rn = rightBound.eval(rRow).asInstanceOf[UTF8String]
         if (rn != null) {
           val rLower = rn.toString.toLowerCase(Locale.ROOT)
+          val rLen = rn.numChars
           var i = 0
           while (i < n) {
-            val lLower = lhs(i)._2
-            if (lLower != null) {
-              val bk = bestKeys(i)
-              // A pair below the incumbent's similarity cannot win; the
-              // cascade only early-exits with a bound < needed, so any
-              // r >= needed is the exact difflib ratio.
-              val needed = if (bk == null) thr else math.max(thr, bk.getDouble(0))
+            val (lRow, lLower, lLen) = lhs(i)
+            if (lLower != null && 2.0 * math.min(lLen, rLen) / (lLen + rLen) >= thr) {
+              val best = bestRows(i)
+              // An incumbent already clears thr, so its similarity is the bar.
+              val needed = if (best == null) thr else bestSims(i)
               val r = Similarity.lowercasedRatioAtLeast(lLower, rLower, needed)
-              if (r >= needed && (if (isStrict) r > thr else r >= thr)) {
-                val j = joiner(lhs(i)._1, rRow)
-                if (residBound.forall(p => p.eval(j) == true)) {
-                  val sv = structBound.eval(j).asInstanceOf[InternalRow]
-                  if (bk == null || structGt(fieldTypes, sv, bk)) {
-                    bestKeys(i) = keyProj(sv).copy()
-                    bestRows(i) = proj(j).copy()
-                  }
+              if (r >= needed) {
+                val j = joiner(lRow, rRow)
+                if (best == null || r > bestSims(i) || ties.compare(j, best) < 0) {
+                  bestSims(i) = r
+                  // copy: the stream side reuses its row buffer
+                  bestRows(i) = proj(j).copy()
                 }
               }
             }
@@ -222,11 +110,16 @@ case class PartialBestSimilarityJoinExec(
           }
         }
       }
-      // scalastyle:off println
-      if (sys.env.contains("GRAFT_SIM_STATS"))
-        System.err.println(s"[pbsj] part rows=$nRight cands=$n " +
-          f"ms=${(System.nanoTime() - t0) / 1e6}%.1f")
       bestRows.iterator.filter(_ != null)
     }
+  }
+}
+
+/** Plans the logical [[PartialBestSimilarityJoin]] into its exec. */
+object BestSimilarityStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case PartialBestSimilarityJoin(l, r, a, b, t, key, name) =>
+      PartialBestSimilarityJoinExec(planLater(l), planLater(r), a, b, t, key, name) :: Nil
+    case _ => Nil
   }
 }

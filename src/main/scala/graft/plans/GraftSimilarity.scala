@@ -15,14 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (doGenCode emits a direct static call — no row-level closure dispatch,
   * no ScalaUDF serialization), reports null-safety to the optimizer, and
   * is usable from pure SQL.
-  *
-  * @param banded marker set by [[SimilarityBandRule]] once a filter on
-  *               this expression has had the lossless length-band
-  *               predicate injected — keeps the rule idempotent under the
-  *               optimizer's fixpoint iteration. Semantically inert.
   */
-case class GraftSimilarity(left: Expression, right: Expression, banded: Boolean = false)
-    extends BinaryExpression {
+case class GraftSimilarity(left: Expression, right: Expression) extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(t: DataType) = t == StringType || t == org.apache.spark.sql.types.NullType

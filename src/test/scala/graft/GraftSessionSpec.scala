@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.SimilarityJoin
+import graft.plans.PartialBestSimilarityJoin
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one engine session: tests run what Bench and Verify run, the
@@ -12,25 +12,25 @@ class GraftSessionSpec extends AnyFunSuite {
   test("the test session resolves graft_similarity and plans the native similarity join") {
     val sim = spark.sql("SELECT graft_similarity('abcd', 'abcf') AS s").collect()(0).getDouble(0)
     assert(sim === 0.75)
-    val plan = SimilarityJoinSpec.declarativeQuery(spark, sfDir).queryExecution.executedPlan
-    assert(plan.toString.contains("SimilarityJoin") &&
-      !plan.toString.contains("BroadcastNestedLoopJoin"),
-      s"the declarative shape must plan SimilarityJoinExec:\n$plan")
+    val plan = SimilarityJoinSpec.fixtureMatch(spark, sfDir).queryExecution.executedPlan.toString
+    assert(plan.contains("PartialBestSimilarityJoin") && !plan.contains("CartesianProduct"),
+      s"FuzzyJoin's pool fits, so the session must plan PartialBestSimilarityJoinExec:\n$plan")
   }
 
   test("the similarity-join reference plan has no SimilarityJoin node") {
-    val (optimized, executed, rows) = SimilarityJoinSpec.reference(spark) {
-      val qe = SimilarityJoinSpec.declarativeQuery(spark, sfDir).queryExecution
-      (qe.optimizedPlan, qe.executedPlan.toString, qe.toRdd.count())
+    val (optimized, executed, matched) = SimilarityJoinSpec.reference(spark) {
+      val df = SimilarityJoinSpec.fixtureMatch(spark, sfDir)
+      val qe = df.queryExecution
+      (qe.optimizedPlan, qe.executedPlan.toString, df.filter("m_key IS NOT NULL").count())
     }
-    assert(optimized.collectFirst { case j: SimilarityJoin => j }.isEmpty,
-      s"reference must not rewrite to SimilarityJoin:\n$optimized")
-    assert(!executed.contains("SimilarityJoin") && executed.contains("NestedLoopJoin"),
-      s"reference must plan the plain nested-loop join:\n$executed")
-    assert(rows > 0, "reference returns no pairs — equivalence tests would be vacuous")
-    // the exclusion is scoped: the engine plan is native again afterwards
-    assert(SimilarityJoinSpec.declarativeQuery(spark, sfDir)
-      .queryExecution.executedPlan.toString.contains("SimilarityJoin"))
+    assert(optimized.collectFirst { case j: PartialBestSimilarityJoin => j }.isEmpty,
+      s"reference must not build PartialBestSimilarityJoin:\n$optimized")
+    assert(!executed.contains("SimilarityJoin") && executed.contains("CartesianProduct"),
+      s"reference must plan the plain pairwise join:\n$executed")
+    assert(matched > 0, "reference returns no matches — equivalence tests would be vacuous")
+    // the cap is scoped: the engine plan is native again afterwards
+    assert(SimilarityJoinSpec.fixtureMatch(spark, sfDir)
+      .queryExecution.executedPlan.toString.contains("PartialBestSimilarityJoin"))
   }
 
   test("a spark.* system property overrides the factory's default") {

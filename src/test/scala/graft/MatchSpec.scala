@@ -3,12 +3,15 @@ package graft
 import graft.functions.{Cleaning, ProductCode, Similarity}
 import graft.operators.FuzzyJoin
 import graft.queries.{Fixture, MatchQueries}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Matching-cascade invariants + fuzzy-join exactness on sf0.001. */
 class MatchSpec extends AnyFunSuite {
   import SparkTestBase.{spark, sfDir}
+  private type Row4 = (Long, Option[Any], Option[Any], Option[Any])
 
   test("e2_cascade partitions the supplier pool: stages disjoint, union complete") {
     val cascade = MatchQueries.queries("e2_cascade")(spark, sfDir).cache()
@@ -26,6 +29,36 @@ class MatchSpec extends AnyFunSuite {
     cascade.unpersist()
   }
 
+  /** `FuzzyJoin.bestMatch` over (article, name) candidates and
+    * (base_article, bname) base rows, as (article, key, name, sim). */
+  private def fuzzyBest(cands: DataFrame, base: DataFrame, t: Double): Set[Row4] =
+    FuzzyJoin.bestMatch(cands, col("article"), col("name"),
+        base, col("base_article"), col("bname"), t, "m")
+      .select("article", "m_key", "m_name", "m_sim")
+      .collect().map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)), Option(r.get(3)))).toSet
+
+  /** Oracle: plain crossJoin + full-precision referenceRatio, no
+    * blocking, argmax by a window (highest sim, smallest key, then the
+    * largest name); unmatched candidates keep nulls. */
+  private def exactBest(cands: DataFrame, base: DataFrame, t: Double): Set[Row4] = {
+    val simUdf = udf((a: String, b: String) => Similarity.referenceRatio(a, b))
+    val w = Window.partitionBy("article")
+      .orderBy(col("s").desc, col("base_article").asc, col("bname").desc)
+    val exact = cands.crossJoin(base)
+      .withColumn("s", simUdf(col("name"), col("bname")))
+      .filter(col("s") >= t)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .select(col("article"), col("base_article"), col("bname"), round(col("s"), 4))
+      .collect().map(r => r.getLong(0) -> ((Option(r.get(1)), Option(r.get(2)), Option(r.get(3)))))
+      .toMap
+    cands.select("article").collect().map(_.getLong(0)).toSet.map { (a: Long) =>
+      exact.get(a) match {
+        case Some((k, n, s)) => (a, k, n, s)
+        case None => (a, None, None, None)
+      }
+    }
+  }
+
   test("blocked fuzzy join ≡ exact cross join (lossless length-band + bound cascade)") {
     val cands = Fixture.supplierSide(spark, sfDir)
       .filter(col("article") % 97 === 0)
@@ -34,29 +67,52 @@ class MatchSpec extends AnyFunSuite {
     val base = Fixture.baseSide(spark, sfDir)
       .select(col("article").as("base_article"),
         Fixture.baseName(col("article"), col("name")).as("bname"))
-    val blocked = FuzzyJoin.bestMatch(cands, col("article"), col("name"),
-        base, col("base_article"), col("bname"), 0.33, "m")
-      .select("article", "m_key", "m_sim")
-      .collect().map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)))).toSet
+    assert(fuzzyBest(cands, base, 0.33) === exactBest(cands, base, 0.33))
+  }
 
-    // Oracle: plain crossJoin + full-precision referenceRatio, no blocking.
-    val simUdf = udf((a: String, b: String) => Similarity.referenceRatio(a, b))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("article").orderBy(col("s").desc, col("base_article").asc)
-    val exact = cands.crossJoin(base)
-      .withColumn("s", simUdf(col("name"), col("bname")))
-      .filter(col("s") >= 0.33)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("article"), col("base_article"), round(col("s"), 4).as("sim"))
-      .collect().map(r => r.getLong(0) -> ((Option(r.get(1)), Option(r.get(2))))).toMap
-    val allCands = cands.select("article").collect().map(_.getLong(0)).toSet
-    val expected = allCands.map { a =>
-      exact.get(a) match {
-        case Some((k, s)) => (a, k, s)
-        case None => (a, None, None)
+  test("hand-made frames: native node ≡ nested-loop fallback ≡ referenceRatio cross join") {
+    import spark.implicits._
+    val cands = Seq[(Long, String)](
+      1L -> "abcd",         // 10 and 11 tie at 0.75: the smaller key wins
+      2L -> "power bank z", // key 20 twice, tied: the larger name wins
+      3L -> "qrst",         // 30 scores exactly the threshold: kept
+      4L -> null,           // null candidate name: no match
+      5L -> "zzzz",         // nothing clears the threshold: nulls
+      6L -> ""              // empty against an empty base name: no match
+    ).toDF("article", "name")
+    val base = Seq[(Long, String)](
+      11L -> "abce", 10L -> "abcf",
+      20L -> "power bank x", 20L -> "power bank y",
+      30L -> "qrxy",        // ratio("qrst", "qrxy") = 2·2/8 = 0.5
+      40L -> null,          // null base name: never matches
+      50L -> ""
+    ).toDF("base_article", "bname")
+    val t = 0.5
+    val expected = exactBest(cands, base, t)
+    assert(expected === Set[Row4](
+      (1L, Some(10L), Some("abcf"), Some(0.75)),
+      (2L, Some(20L), Some("power bank y"), Some(0.9167)),
+      (3L, Some(30L), Some("qrxy"), Some(0.5)),
+      (4L, None, None, None),
+      (5L, None, None, None),
+      (6L, None, None, None)))
+    def planOf(c: DataFrame) = FuzzyJoin.bestMatch(c, col("article"), col("name"),
+      base, col("base_article"), col("bname"), t, "m").queryExecution.executedPlan.toString
+    // On one base partition every tie meets the node's own tie-break; at
+    // the session's width the argmax also merges across partitions.
+    for (width <- Seq("1", spark.conf.get("spark.sql.shuffle.partitions")))
+      SimilarityJoinSpec.withConf(spark, "spark.sql.shuffle.partitions" -> width) {
+        assert(planOf(cands).contains("PartialBestSimilarityJoin"), "native path not taken")
+        assert(fuzzyBest(cands, base, t) === expected, s"native node, width $width")
+        SimilarityJoinSpec.reference(spark) {
+          assert(planOf(cands).contains("CartesianProduct"), "fallback path not taken")
+          assert(fuzzyBest(cands, base, t) === expected, s"nested-loop fallback, width $width")
+        }
       }
-    }
-    assert(blocked === expected)
+    // an empty pool: no rows on either path
+    val empty = cands.filter(lit(false))
+    assert(fuzzyBest(empty, base, t).isEmpty)
+    SimilarityJoinSpec.reference(spark)(assert(fuzzyBest(empty, base, t).isEmpty))
   }
 
   test("quick-ratio bounds dominate the true ratio (safety of the early exit)") {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.{AnnQueries, TextQueries}
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,114 +11,118 @@ class QualitySpec extends AnyFunSuite {
   import SparkTestBase.{spark, sfDir}
   import spark.implicits._
 
-  /** Writes a documents.parquet with the given texts into a temp dir. */
-  private def docsDir(texts: Seq[String]): String = {
-    val dir = Files.createTempDirectory("graft_quality").toString
-    texts.zipWithIndex
-      .map { case (t, i) => (i.toLong, t, "en", "src0", t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
-  }
+  /** `body` over a temp dir holding a documents.parquet with the given
+    * texts; the dir is deleted afterwards. */
+  private def withDocs[T](texts: Seq[String])(body: String => T): T =
+    SparkTestBase.withTempDir("graft_quality") { dir =>
+      texts.zipWithIndex
+        .map { case (t, i) => (i.toLong, t, "en", "src0", t.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      body(dir)
+    }
 
   test("t53 LM perplexity: fluent held-out text scores below scrambled and OOV text") {
     val fluent = "the cat sat on the mat and the dog ran to the park"
-    // docsDir ids are positional: held-out = % 5 == 0 -> 0, 5, 10;
+    // withDocs ids are positional: held-out = % 5 == 0 -> 0, 5, 10;
     // train (1-4, 6-9) carries the fluent bigram distribution
     val scrambled = "park mat the to cat ran dog the on and sat the mat"
     val oov = "qzx wvv jkl pqr mno zzz qqq xxy yzz aab cde fgh ijk"
-    val dir = docsDir(Seq(
+    withDocs(Seq(
       fluent,
       fluent, fluent, fluent, fluent,
       scrambled,
       fluent, fluent, fluent, fluent,
-      oov))
-    val out = SparkEntry.queries("t53_lm_perplexity")(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    assert(out.keySet === Set(0L, 5L, 10L), s"${out.keySet}")
-    // every word is one bigram-left except the last
-    Seq(0L -> fluent, 5L -> scrambled, 10L -> oov).foreach { case (id, t) =>
-      assert(out(id)._1 === t.split(" ").length - 1, s"doc $id bigram count") }
-    val (xf, xs, xo) = (out(0L)._2, out(5L)._2, out(10L)._2)
-    assert(xf < xs && xf < xo,
-      s"fluent text must score lowest cross-entropy: fluent $xf scrambled $xs oov $xo")
-    // trained-bigram mass dominates the smoothing floor by a wide margin
-    assert(xs - xf > 1.0 && xo - xf > 1.0,
-      s"junk must sit well above the fluent score: $xf / $xs / $xo")
-    // the model lifecycle: the landed store serves the identical rows,
-    // the refresh (store + delta's own aggregate) equals the retrain,
-    // the store lands once and is never rewritten by serves
-    def rows(q: String) = SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSeq
-    val base = rows("t53_lm_perplexity")
-    assert(rows("t54_lm_landed_score") === base,
-      "landed-store scoring must equal the recompute")
-    assert(rows("t55_lm_refresh") === base,
-      "count-store refresh must equal the full retrain")
-    val p1 = graft.queries.TextQueries.lmCountsLandingFor(spark, dir)
-    val files0 = Option(new java.io.File(p1).listFiles()).get
-      .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified).toMap
-    assert(files0.nonEmpty, "LM count store must materialize")
-    SparkEntry.queries("t54_lm_landed_score")(spark, dir).collect()
-    assert(graft.queries.TextQueries.lmCountsLandingFor(spark, dir) === p1)
-    val files1 = Option(new java.io.File(p1).listFiles()).get
-      .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified).toMap
-    assert(files1 === files0, "serves must not rewrite the landed count store")
-    graft.queries.Caches.release(spark, dir)
-    assert(!new java.io.File(p1).exists(), "release must reclaim the store")
+      oov)) { dir =>
+      val out = SparkEntry.queries("t53_lm_perplexity")(spark, dir).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+      assert(out.keySet === Set(0L, 5L, 10L), s"${out.keySet}")
+      // every word is one bigram-left except the last
+      Seq(0L -> fluent, 5L -> scrambled, 10L -> oov).foreach { case (id, t) =>
+        assert(out(id)._1 === t.split(" ").length - 1, s"doc $id bigram count") }
+      val (xf, xs, xo) = (out(0L)._2, out(5L)._2, out(10L)._2)
+      assert(xf < xs && xf < xo,
+        s"fluent text must score lowest cross-entropy: fluent $xf scrambled $xs oov $xo")
+      // trained-bigram mass dominates the smoothing floor by a wide margin
+      assert(xs - xf > 1.0 && xo - xf > 1.0,
+        s"junk must sit well above the fluent score: $xf / $xs / $xo")
+      // the model lifecycle: the landed store serves the identical rows,
+      // the refresh (store + delta's own aggregate) equals the retrain,
+      // the store lands once and is never rewritten by serves
+      def rows(q: String) = SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSeq
+      val base = rows("t53_lm_perplexity")
+      assert(rows("t54_lm_landed_score") === base,
+        "landed-store scoring must equal the recompute")
+      assert(rows("t55_lm_refresh") === base,
+        "count-store refresh must equal the full retrain")
+      val p1 = graft.queries.TextQueries.lmCountsLandingFor(spark, dir)
+      val files0 = Option(new java.io.File(p1).listFiles()).get
+        .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified).toMap
+      assert(files0.nonEmpty, "LM count store must materialize")
+      SparkEntry.queries("t54_lm_landed_score")(spark, dir).collect()
+      assert(graft.queries.TextQueries.lmCountsLandingFor(spark, dir) === p1)
+      val files1 = Option(new java.io.File(p1).listFiles()).get
+        .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified).toMap
+      assert(files1 === files0, "serves must not rewrite the landed count store")
+      graft.queries.Caches.release(spark, dir)
+      assert(!new java.io.File(p1).exists(), "release must reclaim the store")
+    }
   }
 
   test("t58 trigram LM: fluent text scores lowest; landed/refresh serves equal the retrain") {
     val fluent = "the cat sat on the mat and the dog ran to the park"
     val scrambled = "park mat the to cat ran dog the on and sat the mat"
     val oov = "qzx wvv jkl pqr mno zzz qqq xxy yzz aab cde fgh ijk"
-    val dir = docsDir(Seq(
+    withDocs(Seq(
       fluent, fluent, fluent, fluent, fluent,
-      scrambled, fluent, fluent, fluent, fluent, oov))
-    val out = SparkEntry.queries("t58_lm3_perplexity")(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    assert(out.keySet === Set(0L, 5L, 10L), s"${out.keySet}")
-    Seq(0L -> fluent, 5L -> scrambled, 10L -> oov).foreach { case (id, t) =>
-      assert(out(id)._1 === t.split(" ").length - 2, s"doc $id trigram count") }
-    val (xf, xs, xo) = (out(0L)._2, out(5L)._2, out(10L)._2)
-    assert(xf < xs && xf < xo,
-      s"fluent text must score lowest: fluent $xf scrambled $xs oov $xo")
-    assert(xs - xf > 1.0 && xo - xf > 1.0,
-      s"junk must sit >= 1 bit above fluent: $xf / $xs / $xo")
-    // the trigram signal separates HARDER than the bigram surrogate on
-    // the same junk: an unseen trigram context backs off through its
-    // parts instead of hitting one flat smoothing floor
-    def rows(q: String) = SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSeq
-    val base = rows("t58_lm3_perplexity")
-    assert(rows("t59_lm3_landed_score") === base,
-      "landed-store trigram scoring must equal the recompute")
-    assert(rows("t60_lm3_refresh") === base,
-      "trigram count-store refresh must equal the full retrain")
-    graft.queries.Caches.release(spark, dir)
+      scrambled, fluent, fluent, fluent, fluent, oov)) { dir =>
+      val out = SparkEntry.queries("t58_lm3_perplexity")(spark, dir).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+      assert(out.keySet === Set(0L, 5L, 10L), s"${out.keySet}")
+      Seq(0L -> fluent, 5L -> scrambled, 10L -> oov).foreach { case (id, t) =>
+        assert(out(id)._1 === t.split(" ").length - 2, s"doc $id trigram count") }
+      val (xf, xs, xo) = (out(0L)._2, out(5L)._2, out(10L)._2)
+      assert(xf < xs && xf < xo,
+        s"fluent text must score lowest: fluent $xf scrambled $xs oov $xo")
+      assert(xs - xf > 1.0 && xo - xf > 1.0,
+        s"junk must sit >= 1 bit above fluent: $xf / $xs / $xo")
+      // the trigram signal separates HARDER than the bigram surrogate on
+      // the same junk: an unseen trigram context backs off through its
+      // parts instead of hitting one flat smoothing floor
+      def rows(q: String) = SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSeq
+      val base = rows("t58_lm3_perplexity")
+      assert(rows("t59_lm3_landed_score") === base,
+        "landed-store trigram scoring must equal the recompute")
+      assert(rows("t60_lm3_refresh") === base,
+        "trigram count-store refresh must equal the full retrain")
+      graft.queries.Caches.release(spark, dir)
+    }
   }
 
   test("t62 KN trigram LM: fluent lowest, junk >= 1 bit above, landed serve equals retrain") {
     val fluent = "the cat sat on the mat and the dog ran to the park"
     val scrambled = "park mat the to cat ran dog the on and sat the mat"
     val oov = "qzx wvv jkl pqr mno zzz qqq xxy yzz aab cde fgh ijk"
-    val dir = docsDir(Seq(
+    withDocs(Seq(
       fluent, fluent, fluent, fluent, fluent,
-      scrambled, fluent, fluent, fluent, fluent, oov))
-    def scores(q: String) = SparkEntry.queries(q)(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val kn = scores("t62_lm3kn_perplexity")
-    assert(kn.keySet === Set(0L, 5L, 10L), s"${kn.keySet}")
-    val (xf, xs, xo) = (kn(0L), kn(5L), kn(10L))
-    assert(xf < xs && xf < xo,
-      s"fluent text must score lowest under KN: fluent $xf scrambled $xs oov $xo")
-    assert(xs - xf > 1.0 && xo - xf > 1.0,
-      s"junk must sit >= 1 bit above fluent under KN: $xf / $xs / $xo")
-    // continuation counts are c3 derivations, so the landed leg is free
-    def rows(q: String) = SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSeq
-    assert(rows("t63_lm3kn_landed") === rows("t62_lm3kn_perplexity"),
-      "landed-store KN scoring must equal the recompute")
-    assert(rows("t64_lm3kn_refresh") === rows("t62_lm3kn_perplexity"),
-      "KN count-store refresh must equal the full retrain")
-    graft.queries.Caches.release(spark, dir)
+      scrambled, fluent, fluent, fluent, fluent, oov)) { dir =>
+      def scores(q: String) = SparkEntry.queries(q)(spark, dir).collect()
+        .map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      val kn = scores("t62_lm3kn_perplexity")
+      assert(kn.keySet === Set(0L, 5L, 10L), s"${kn.keySet}")
+      val (xf, xs, xo) = (kn(0L), kn(5L), kn(10L))
+      assert(xf < xs && xf < xo,
+        s"fluent text must score lowest under KN: fluent $xf scrambled $xs oov $xo")
+      assert(xs - xf > 1.0 && xo - xf > 1.0,
+        s"junk must sit >= 1 bit above fluent under KN: $xf / $xs / $xo")
+      // continuation counts are c3 derivations, so the landed leg is free
+      def rows(q: String) = SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSeq
+      assert(rows("t63_lm3kn_landed") === rows("t62_lm3kn_perplexity"),
+        "landed-store KN scoring must equal the recompute")
+      assert(rows("t64_lm3kn_refresh") === rows("t62_lm3kn_perplexity"),
+        "KN count-store refresh must equal the full retrain")
+      graft.queries.Caches.release(spark, dir)
+    }
   }
 
   test("t62 KN demotes frequent-but-single-context words harder than t58's JM mixture") {
@@ -136,19 +139,20 @@ class QualitySpec extends AnyFunSuite {
     val fluent = "we flew to san francisco and saw the big bay"
     val other = "the dog ran to the park and saw the cat"
     val junk = "we flew to the francisco and saw the francisco bay"
-    val dir = docsDir(Seq(
+    withDocs(Seq(
       fluent, fluent, other, fluent, other,
       junk, fluent, other, fluent, fluent,
-      fluent))
-    def sep(q: String) = {
-      val m = SparkEntry.queries(q)(spark, dir).collect()
-        .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-      m(5L) - m(0L)
+      fluent)) { dir =>
+      def sep(q: String) = {
+        val m = SparkEntry.queries(q)(spark, dir).collect()
+          .map(r => r.getLong(0) -> r.getDouble(2)).toMap
+        m(5L) - m(0L)
+      }
+      val (knSep, jmSep) = (sep("t62_lm3kn_perplexity"), sep("t58_lm3_perplexity"))
+      assert(knSep > jmSep,
+        s"KN must separate the boilerplate-junk doc harder than JM: KN $knSep JM $jmSep")
+      graft.queries.Caches.release(spark, dir)
     }
-    val (knSep, jmSep) = (sep("t62_lm3kn_perplexity"), sep("t58_lm3_perplexity"))
-    assert(knSep > jmSep,
-      s"KN must separate the boilerplate-junk doc harder than JM: KN $knSep JM $jmSep")
-    graft.queries.Caches.release(spark, dir)
   }
 
   test("model-store forget: deleted-only mass never resurrects; serves leave the stores untouched") {
@@ -157,65 +161,68 @@ class QualitySpec extends AnyFunSuite {
     // doc 8's unique word must vanish from BOTH forgotten models, the
     // shared words must lose exactly the two docs' own contribution
     val unique = "zzforgetonly"
-    val dir = docsDir((0 to 10).map {
+    withDocs((0 to 10).map {
       case 8 => s"$unique the cat"
       case _ => "the cat sat on the mat"
-    })
-    val counts = graft.queries.PipelineQueries.bpeForgottenCounts(spark, dir)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(!counts.contains(unique), "deleted-only word resurrected in the BPE store")
-    // "the": 10 common docs x 2 + doc 8's 1 = 21, minus deleted doc
-    // 1's 2 and doc 8's 1 = 18
-    assert(counts("the") === 18L, s"partial subtraction wrong: ${counts.get("the")}")
-    assert(counts("cat") === 9L && counts("mat") === 9L, s"$counts")
-    val c2 = graft.queries.TextQueries.lmForgottenCounts(spark, dir)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(!c2.keys.exists(k => k._1 == unique || k._2 == unique),
-      "deleted-only bigram resurrected in the LM store")
-    // ("the","cat"): train = docs 1-4,6-9 → 7 common docs once each +
-    // doc 8's 1 = 8, minus deleted docs 1 and 8's own = 6
-    assert(c2(("the", "cat")) === 6L, s"${c2.get(("the", "cat"))}")
-    // forget is a SERVE-side signed merge: the landed stores' files
-    // must be byte-identical before and after both forget gates
-    def snap(p: String) = Option(new java.io.File(p).listFiles()).get
-      .map(f => f.getName -> ((f.length, f.lastModified))).toMap
-    val bpeStore = graft.queries.PipelineQueries.bpeCountsFor(spark, dir)
-    val lmStore = graft.queries.TextQueries.lmStoreLandingFor(spark, dir)
-    val (b0, l0) = (snap(bpeStore), snap(lmStore))
-    val t56 = SparkEntry.queries("t56_bpe_forget")(spark, dir).collect()
-    val t57 = SparkEntry.queries("t57_lm_forget")(spark, dir).collect()
-    assert(t56.nonEmpty && t57.nonEmpty)
-    assert(snap(bpeStore) === b0, "t56 must not rewrite the word-count store")
-    assert(snap(lmStore) === l0, "t57 must not rewrite the bigram store")
-    graft.queries.Caches.release(spark, dir)
+    }) { dir =>
+      val counts = graft.queries.PipelineQueries.bpeForgottenCounts(spark, dir)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(!counts.contains(unique), "deleted-only word resurrected in the BPE store")
+      // "the": 10 common docs x 2 + doc 8's 1 = 21, minus deleted doc
+      // 1's 2 and doc 8's 1 = 18
+      assert(counts("the") === 18L, s"partial subtraction wrong: ${counts.get("the")}")
+      assert(counts("cat") === 9L && counts("mat") === 9L, s"$counts")
+      val c2 = graft.queries.TextQueries.lmForgottenCounts(spark, dir)
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      assert(!c2.keys.exists(k => k._1 == unique || k._2 == unique),
+        "deleted-only bigram resurrected in the LM store")
+      // ("the","cat"): train = docs 1-4,6-9 → 7 common docs once each +
+      // doc 8's 1 = 8, minus deleted docs 1 and 8's own = 6
+      assert(c2(("the", "cat")) === 6L, s"${c2.get(("the", "cat"))}")
+      // forget is a SERVE-side signed merge: the landed stores' files
+      // must be byte-identical before and after both forget gates
+      def snap(p: String) = Option(new java.io.File(p).listFiles()).get
+        .map(f => f.getName -> ((f.length, f.lastModified))).toMap
+      val bpeStore = graft.queries.PipelineQueries.bpeCountsFor(spark, dir)
+      val lmStore = graft.queries.TextQueries.lmStoreLandingFor(spark, dir)
+      val (b0, l0) = (snap(bpeStore), snap(lmStore))
+      val t56 = SparkEntry.queries("t56_bpe_forget")(spark, dir).collect()
+      val t57 = SparkEntry.queries("t57_lm_forget")(spark, dir).collect()
+      assert(t56.nonEmpty && t57.nonEmpty)
+      assert(snap(bpeStore) === b0, "t56 must not rewrite the word-count store")
+      assert(snap(lmStore) === l0, "t57 must not rewrite the bigram store")
+      graft.queries.Caches.release(spark, dir)
+    }
   }
 
   test("t7 fires each rule branch in priority order") {
     val fill = (1 to 40).map(i => s"word$i").mkString(" ") // 40 distinct mid-length words
-    val dir = docsDir(Seq(
+    withDocs(Seq(
       "too short",                                   // n_words=2 -> word_count
       (1 to 40).map(_ => "antidisestablishmentarianism").mkString(" "), // mean_word_len (high)
       (1 to 40).map(_ => "x").mkString(" "),          // mean_word_len=1 fires BEFORE diversity
       ("the " * 20 + "cat " * 20).trim,               // meanLen ok, diversity 2/40=0.05 -> low_diversity
       fill,                                           // no stopword, diverse -> no_stopwords
-      s"the ${fill}"))                                // 41 words incl 'the' -> ok
-    val out = TextQueries.queries("t7_quality_rules")(spark, dir)
-      .orderBy("doc_id").select("drop_reason", "keep")
-      .collect().map(r => (r.getString(0), r.getBoolean(1)))
-    assert(out === Array(
-      ("word_count", false), ("mean_word_len", false), ("mean_word_len", false),
-      ("low_diversity", false), ("no_stopwords", false), ("ok", true)))
+      s"the ${fill}")) { dir =>                       // 41 words incl 'the' -> ok
+      val out = TextQueries.queries("t7_quality_rules")(spark, dir)
+        .orderBy("doc_id").select("drop_reason", "keep")
+        .collect().map(r => (r.getString(0), r.getBoolean(1)))
+      assert(out === Array(
+        ("word_count", false), ("mean_word_len", false), ("mean_word_len", false),
+        ("low_diversity", false), ("no_stopwords", false), ("ok", true)))
+    }
   }
 
   test("t8 scores planted repetition exactly") {
     // "a b a b a b": bigrams a_b, b_a, a_b, b_a, a_b -> total 5, distinct 2,
     // top a_b = 3 -> top_share 0.6, dup_ratio 1 - 2/5 = 0.6
-    val dir = docsDir(Seq("a b a b a b"))
-    val r = TextQueries.queries("t8_repetition")(spark, dir).collect().head
-    assert(r.getAs[Long]("n_bigrams") === 5L)
-    assert(r.getAs[Long]("n_distinct") === 2L)
-    assert(r.getAs[Double]("top_share") === 0.6)
-    assert(r.getAs[Double]("dup_ratio") === 0.6)
+    withDocs(Seq("a b a b a b")) { dir =>
+      val r = TextQueries.queries("t8_repetition")(spark, dir).collect().head
+      assert(r.getAs[Long]("n_bigrams") === 5L)
+      assert(r.getAs[Long]("n_distinct") === 2L)
+      assert(r.getAs[Double]("top_share") === 0.6)
+      assert(r.getAs[Double]("dup_ratio") === 0.6)
+    }
   }
 
   test("approx_count_distinct (the 100 TB sketch path) lands within 5% of exact t11") {
@@ -352,14 +359,15 @@ class QualitySpec extends AnyFunSuite {
   test("d10 boilerplate coverage merges overlapping spans on a planted fixture") {
     // 10 docs share both bigrams (df=10 >= threshold); the 11th has
     // unique bigrams -> full vs zero coverage.
-    val dir = docsDir((1 to 10).map(_ => "the cat sat") :+ "dog runs fast")
-    val out = graft.queries.DedupQueries.queries("d10_boilerplate")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(out.length === 11)
-    out.filter(_._1 < 10).foreach { case (id, n, c, pct) =>
-      assert((n, c, pct) === ((3L, 3L, 100L)), s"doc $id")
+    withDocs((1 to 10).map(_ => "the cat sat") :+ "dog runs fast") { dir =>
+      val out = graft.queries.DedupQueries.queries("d10_boilerplate")(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      assert(out.length === 11)
+      out.filter(_._1 < 10).foreach { case (id, n, c, pct) =>
+        assert((n, c, pct) === ((3L, 3L, 100L)), s"doc $id")
+      }
+      assert(out.find(_._1 == 10L).get === ((10L, 3L, 0L, 0L)))
     }
-    assert(out.find(_._1 == 10L).get === ((10L, 3L, 0L, 0L)))
   }
 
   test("d12 PageRank matches an independent driver-side recomputation of the 5 rounds") {
@@ -387,13 +395,14 @@ class QualitySpec extends AnyFunSuite {
   }
 
   test("t18 entropy is exact on planted token distributions") {
-    val dir = docsDir(Seq("a a b b", "x x x x", "a b c d"))
-    val out = graft.queries.TextQueries.queries("t18_token_entropy")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(out.toSeq === Seq(
-      (0L, 4L, 2L, 1.0),   // two 50/50 symbols -> 1 bit
-      (1L, 4L, 1L, 0.0),   // constant -> 0 bits
-      (2L, 4L, 4L, 2.0)))  // four uniform symbols -> 2 bits
+    withDocs(Seq("a a b b", "x x x x", "a b c d")) { dir =>
+      val out = graft.queries.TextQueries.queries("t18_token_entropy")(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      assert(out.toSeq === Seq(
+        (0L, 4L, 2L, 1.0),   // two 50/50 symbols -> 1 bit
+        (1L, 4L, 1L, 0.0),   // constant -> 0 bits
+        (2L, 4L, 4L, 2.0)))  // four uniform symbols -> 2 bits
+    }
   }
 
   test("e11 flags exactly the rows an independent 3-sigma recomputation flags") {
@@ -413,25 +422,27 @@ class QualitySpec extends AnyFunSuite {
   }
 
   test("t20 novelty credits first occurrence and zeroes the rehash") {
-    val dir = docsDir(Seq("a b c", "a b c", "x y"))
-    val out = graft.queries.PipelineQueries.queries("t20_novelty")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(out.toSeq === Seq(
-      (0L, 2L, 2L, 100L),  // owns a_b and b_c
-      (1L, 2L, 0L, 0L),    // verbatim rehash of doc 0
-      (2L, 1L, 1L, 100L))) // fresh content
+    withDocs(Seq("a b c", "a b c", "x y")) { dir =>
+      val out = graft.queries.PipelineQueries.queries("t20_novelty")(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      assert(out.toSeq === Seq(
+        (0L, 2L, 2L, 100L),  // owns a_b and b_c
+        (1L, 2L, 0L, 0L),    // verbatim rehash of doc 0
+        (2L, 1L, 1L, 100L))) // fresh content
+    }
   }
 
   test("t16 familiarity scores and buckets match the hand-computed fixture") {
-    val dir = docsDir(Seq("a b a b", "a b c", "z z", "q q q q q q q q"))
-    // corpus bigram counts: (a,b)=3 (b,a)=1 (b,c)=1 (z,z)=1 (q,q)=7
-    // fams: d0=3+1+3=7/3bg, d1=3+1=4/2, d2=1/1, d3=49/7
-    // corpus_avg = 61 div 13 = 4 -> d3 middle (7>=4), rest tail
-    val out = graft.queries.PipelineQueries.queries("t16_lm_familiarity")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
-    assert(out.toSeq === Seq(
-      (0L, 3L, 7L, 2L, "tail"), (1L, 2L, 4L, 2L, "tail"),
-      (2L, 1L, 1L, 1L, "tail"), (3L, 7L, 49L, 7L, "middle")))
+    withDocs(Seq("a b a b", "a b c", "z z", "q q q q q q q q")) { dir =>
+      // corpus bigram counts: (a,b)=3 (b,a)=1 (b,c)=1 (z,z)=1 (q,q)=7
+      // fams: d0=3+1+3=7/3bg, d1=3+1=4/2, d2=1/1, d3=49/7
+      // corpus_avg = 61 div 13 = 4 -> d3 middle (7>=4), rest tail
+      val out = graft.queries.PipelineQueries.queries("t16_lm_familiarity")(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
+      assert(out.toSeq === Seq(
+        (0L, 3L, 7L, 2L, "tail"), (1L, 2L, 4L, 2L, "tail"),
+        (2L, 1L, 1L, 1L, "tail"), (3L, 7L, 49L, 7L, "middle")))
+    }
   }
 
   test("x11 IVF+PQ+rerank recall@5 vs x1 brute force averages >= 0.9 (sf0.01)") {
@@ -463,25 +474,26 @@ class QualitySpec extends AnyFunSuite {
     // id mod 101, so the % 50 == 1 centroid sample and the % 50 == 0
     // query set each hit 13 distinct clusters, and each query's true
     // top-5 is exactly its 5 cluster-mates.
-    val dir = java.nio.file.Files.createTempDirectory("graft_clustered").toString
-    val rnd = new scala.util.Random(7)
-    val dim = 64
-    val nClusters = 101
-    val n = 606 // 6 members per cluster, exactly
-    val centers = Array.fill(nClusters)(Array.fill(dim)(rnd.nextGaussian()))
-    val rows = (0 until n).map { id =>
-      val c = centers(id % nClusters)
-      // sigma 0.002 is sub-quantization-grid (1/64): mates share codes
-      (id.toLong, c.map(x => (x + 0.002 * rnd.nextGaussian()).toFloat).toSeq)
+    SparkTestBase.withTempDir("graft_clustered") { dir =>
+      val rnd = new scala.util.Random(7)
+      val dim = 64
+      val nClusters = 101
+      val n = 606 // 6 members per cluster, exactly
+      val centers = Array.fill(nClusters)(Array.fill(dim)(rnd.nextGaussian()))
+      val rows = (0 until n).map { id =>
+        val c = centers(id % nClusters)
+        // sigma 0.002 is sub-quantization-grid (1/64): mates share codes
+        (id.toLong, c.map(x => (x + 0.002 * rnd.nextGaussian()).toFloat).toSeq)
+      }
+      import spark.implicits._
+      rows.toDF("vec_id", "embedding").write.mode("overwrite")
+        .parquet(s"$dir/embeddings.parquet")
+      val rec = AnnQueries.queries("x10_pq_recall")(spark, dir).collect()
+      assert(rec.length === 13, "one recall row per planted query")
+      val avg = rec.map(_.getAs[Double]("recall")).sum / rec.length
+      info(f"x10 recall@5 on the clustered fixture: $avg%.3f")
+      assert(avg >= 0.8, f"clustered recall@5 $avg%.3f under the production bar")
     }
-    import spark.implicits._
-    rows.toDF("vec_id", "embedding").write.mode("overwrite")
-      .parquet(s"$dir/embeddings.parquet")
-    val rec = AnnQueries.queries("x10_pq_recall")(spark, dir).collect()
-    assert(rec.length === 13, "one recall row per planted query")
-    val avg = rec.map(_.getAs[Double]("recall")).sum / rec.length
-    info(f"x10 recall@5 on the clustered fixture: $avg%.3f")
-    assert(avg >= 0.8, f"clustered recall@5 $avg%.3f under the production bar")
   }
 
   test("x12 filtered ANN returns only allowed-source neighbors, for every query") {
@@ -512,33 +524,34 @@ class QualitySpec extends AnyFunSuite {
   }
 
   test("s24 constraint audit counts planted violations of every rule exactly") {
-    val dir = Files.createTempDirectory("graft_s24_probe").toString
-    // orders: one null custkey, one duplicated orderkey, one negative
-    // price, one bad status, one FK-dangling custkey (99)
-    Seq(
-      (Option(1L), 10L, 100.0, "O"),
-      (Option(1L), 11L, 50.0, "F"),
-      (Option.empty[Long], 12L, 10.0, "O"),   // NOT NULL violation
-      (Option(2L), 13L, -5.0, "P"),           // range violation
-      (Option(2L), 13L, 20.0, "X"),           // dup orderkey + bad status
-      (Option(99L), 14L, 30.0, "O"))          // dangling FK
-      .toDF("o_custkey", "o_orderkey", "o_totalprice", "o_orderstatus")
-      .write.parquet(s"$dir/orders.parquet")
-    Seq(1L, 2L).toDF("c_custkey").write.parquet(s"$dir/customer.parquet")
-    // lineitem: two rows referencing order 10, one dangling (77)
-    Seq(10L, 10L, 77L).toDF("l_orderkey").write.parquet(s"$dir/lineitem.parquet")
-    val rows = SparkEntry.queries("s24_constraint_audit")(spark, dir)
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(rows("orders.o_custkey NOT NULL") === ((6L, 1L)))
-    assert(rows("orders.o_orderkey UNIQUE") === ((6L, 1L)))
-    assert(rows("orders.o_totalprice > 0") === ((6L, 1L)))
-    assert(rows("orders.o_orderstatus IN (O,F,P)") === ((6L, 1L)))
-    // 5 non-null custkeys checked; the 99 dangles
-    assert(rows("orders.o_custkey REFERENCES customer") === ((5L, 1L)))
-    // dup orderkey 13 in the dim side must not double-count fact rows:
-    // lineitem has no key 13 — 3 checked, the 77 dangles
-    assert(rows("lineitem.l_orderkey REFERENCES orders") === ((3L, 1L)))
-    graft.queries.Caches.release(spark, dir)
+    SparkTestBase.withTempDir("graft_s24_probe") { dir =>
+      // orders: one null custkey, one duplicated orderkey, one negative
+      // price, one bad status, one FK-dangling custkey (99)
+      Seq(
+        (Option(1L), 10L, 100.0, "O"),
+        (Option(1L), 11L, 50.0, "F"),
+        (Option.empty[Long], 12L, 10.0, "O"),   // NOT NULL violation
+        (Option(2L), 13L, -5.0, "P"),           // range violation
+        (Option(2L), 13L, 20.0, "X"),           // dup orderkey + bad status
+        (Option(99L), 14L, 30.0, "O"))          // dangling FK
+        .toDF("o_custkey", "o_orderkey", "o_totalprice", "o_orderstatus")
+        .write.parquet(s"$dir/orders.parquet")
+      Seq(1L, 2L).toDF("c_custkey").write.parquet(s"$dir/customer.parquet")
+      // lineitem: two rows referencing order 10, one dangling (77)
+      Seq(10L, 10L, 77L).toDF("l_orderkey").write.parquet(s"$dir/lineitem.parquet")
+      val rows = SparkEntry.queries("s24_constraint_audit")(spark, dir)
+        .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(rows("orders.o_custkey NOT NULL") === ((6L, 1L)))
+      assert(rows("orders.o_orderkey UNIQUE") === ((6L, 1L)))
+      assert(rows("orders.o_totalprice > 0") === ((6L, 1L)))
+      assert(rows("orders.o_orderstatus IN (O,F,P)") === ((6L, 1L)))
+      // 5 non-null custkeys checked; the 99 dangles
+      assert(rows("orders.o_custkey REFERENCES customer") === ((5L, 1L)))
+      // dup orderkey 13 in the dim side must not double-count fact rows:
+      // lineitem has no key 13 — 3 checked, the 77 dangles
+      assert(rows("lineitem.l_orderkey REFERENCES orders") === ((3L, 1L)))
+      graft.queries.Caches.release(spark, dir)
+    }
   }
 
   test("t39 language ID separates the planted orthographies with positive margins") {
@@ -622,32 +635,33 @@ class QualitySpec extends AnyFunSuite {
 
   test("t46 DSIR selection: target-like docs outrank, per-source quarter cut is exact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_t46").toString
-    // target slice (lang=en) repeats its vocabulary enough that the
-    // smoothed ratio separates (with singleton counts the +1 smoothing
-    // dominates and every ratio collapses toward the same value)
-    Seq(
-      (1L, ("alpha beta gamma delta " * 15).trim, "en", "ref"),
-      (2L, ("alpha beta epsilon zeta " * 15).trim, "en", "ref"),
-      (10L, "alpha beta gamma delta alpha beta", "xx", "srcA"), // target-like
-      (11L, "qq ww ee rr tt yy uu ii", "xx", "srcA"),           // disjoint
-      (12L, "zz xx cc vv bb nn mm kk", "xx", "srcA"),           // disjoint
-      (13L, "alpha qq ww ee rr tt yy uu", "xx", "srcA"))        // one hit
-      .map { case (i, t, l, src) => (i, t, l, src, t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("t46_dsir_select")(spark, dir)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(2), r.getBoolean(3)))).toMap
-    val srcA = Seq(10L, 11L, 12L, 13L).map(d => d -> out(d))
-    // (no finer ordering asserted among the junk docs: hashed features
-    // collide, so a junk word landing in a target-heavy bucket can
-    // shift weights — expected noise of the 4096-bucket representation)
-    assert(Seq(11L, 12L, 13L).forall(d => out(10L)._1 > out(d)._1),
-      s"the target-vocabulary doc must outweigh every junk doc: $srcA")
-    // (4 + 3) div 4 = 1: exactly the top doc of srcA is selected
-    assert(srcA.count(_._2._2) === 1 && out(10L)._2,
-      s"per-source quarter cut must select exactly doc 10: $srcA")
-    graft.queries.Caches.release(spark, dir)
+    SparkTestBase.withTempDir("graft_t46") { dir =>
+      // target slice (lang=en) repeats its vocabulary enough that the
+      // smoothed ratio separates (with singleton counts the +1 smoothing
+      // dominates and every ratio collapses toward the same value)
+      Seq(
+        (1L, ("alpha beta gamma delta " * 15).trim, "en", "ref"),
+        (2L, ("alpha beta epsilon zeta " * 15).trim, "en", "ref"),
+        (10L, "alpha beta gamma delta alpha beta", "xx", "srcA"), // target-like
+        (11L, "qq ww ee rr tt yy uu ii", "xx", "srcA"),           // disjoint
+        (12L, "zz xx cc vv bb nn mm kk", "xx", "srcA"),           // disjoint
+        (13L, "alpha qq ww ee rr tt yy uu", "xx", "srcA"))        // one hit
+        .map { case (i, t, l, src) => (i, t, l, src, t.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .coalesce(1).write.parquet(s"$dir/documents.parquet")
+      val out = SparkEntry.queries("t46_dsir_select")(spark, dir)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(2), r.getBoolean(3)))).toMap
+      val srcA = Seq(10L, 11L, 12L, 13L).map(d => d -> out(d))
+      // (no finer ordering asserted among the junk docs: hashed features
+      // collide, so a junk word landing in a target-heavy bucket can
+      // shift weights — expected noise of the 4096-bucket representation)
+      assert(Seq(11L, 12L, 13L).forall(d => out(10L)._1 > out(d)._1),
+        s"the target-vocabulary doc must outweigh every junk doc: $srcA")
+      // (4 + 3) div 4 = 1: exactly the top doc of srcA is selected
+      assert(srcA.count(_._2._2) === 1 && out(10L)._2,
+        s"per-source quarter cut must select exactly doc 10: $srcA")
+      graft.queries.Caches.release(spark, dir)
+    }
   }
 
   test("t46 score arithmetic is exact past the BIGINT overflow boundary (r13 regression)") {
@@ -661,18 +675,19 @@ class QualitySpec extends AnyFunSuite {
     //   l = S*(T+1)*(T+B) div ((T+1)*(T+B)) = S,  weight = S.
     // Pre-fix, the wrapped numerator went negative and the weight came
     // out wrong — this pins the DECIMAL widening.
-    val dir = Files.createTempDirectory("graft_t46_ovf").toString
-    val words = 100000
-    val text = ("tok " * words).trim
-    (1L to 31L).map(i => (i, text, "en", "src", text.length.toLong))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("t46_dsir_select")(spark, dir)
-      .select("doc_id", "weight").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out.size === 31 && out.values.forall(_ === 1000000L),
-      s"every weight must be exactly S=1e6 at the overflow boundary: ${out.toSeq.sortBy(_._1).take(3)}")
-    graft.queries.Caches.release(spark, dir)
+    SparkTestBase.withTempDir("graft_t46_ovf") { dir =>
+      val words = 100000
+      val text = ("tok " * words).trim
+      (1L to 31L).map(i => (i, text, "en", "src", text.length.toLong))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.parquet(s"$dir/documents.parquet")
+      val out = SparkEntry.queries("t46_dsir_select")(spark, dir)
+        .select("doc_id", "weight").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(out.size === 31 && out.values.forall(_ === 1000000L),
+        s"every weight must be exactly S=1e6 at the overflow boundary: ${out.toSeq.sortBy(_._1).take(3)}")
+      graft.queries.Caches.release(spark, dir)
+    }
   }
 
   test("t49 public-sample lang-ID: held-out recovery far above the chance floor") {
@@ -750,25 +765,26 @@ class QualitySpec extends AnyFunSuite {
     val d0 = "abcdefg" * 13 // period 7 < W: forces hash TIES inside windows
     val d1 = s"left-context-padding-000 $shared tail-one-111111"
     val d2 = s"совершенно другой префикс $shared другой хвост" // non-ASCII context
-    val dir = docsDir(Seq(d0, d1, d2, "short"))
-    val out = SparkEntry.queries("t45_winnowing")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val byDoc = out.groupBy(_._1).map { case (d, rs) =>
-      d -> rs.map(r => (r._2, r._3)).toSet }
-    assert(!byDoc.contains(3L), "a doc shorter than K+W-1 must emit nothing")
-    for ((d, txt) <- Seq(0L -> d0, 1L -> d1, 2L -> d2)) {
-      assert(byDoc(d) === naive(txt), s"doc $d diverges from the naive recompute")
-      // coverage guarantee: every window of W gram positions holds a fingerprint
-      val ps = byDoc(d).map(_._1)
-      for (j <- 0 to txt.length - K + 1 - W)
-        assert(ps.exists(p => p >= j && p < j + W), s"doc $d window $j unsampled")
+    withDocs(Seq(d0, d1, d2, "short")) { dir =>
+      val out = SparkEntry.queries("t45_winnowing")(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val byDoc = out.groupBy(_._1).map { case (d, rs) =>
+        d -> rs.map(r => (r._2, r._3)).toSet }
+      assert(!byDoc.contains(3L), "a doc shorter than K+W-1 must emit nothing")
+      for ((d, txt) <- Seq(0L -> d0, 1L -> d1, 2L -> d2)) {
+        assert(byDoc(d) === naive(txt), s"doc $d diverges from the naive recompute")
+        // coverage guarantee: every window of W gram positions holds a fingerprint
+        val ps = byDoc(d).map(_._1)
+        for (j <- 0 to txt.length - K + 1 - W)
+          assert(ps.exists(p => p >= j && p < j + W), s"doc $d window $j unsampled")
+      }
+      // the MOSS guarantee: two docs sharing a >= K+W-1 substring share a
+      // fingerprint HASH (positions differ — the match survives offset shift)
+      val sharedHashes = byDoc(1L).map(_._2) intersect byDoc(2L).map(_._2)
+      assert(sharedHashes.nonEmpty,
+        "docs sharing a 50-char span must share a winnowed fingerprint")
+      graft.queries.Caches.release(spark, dir)
     }
-    // the MOSS guarantee: two docs sharing a >= K+W-1 substring share a
-    // fingerprint HASH (positions differ — the match survives offset shift)
-    val sharedHashes = byDoc(1L).map(_._2) intersect byDoc(2L).map(_._2)
-    assert(sharedHashes.nonEmpty,
-      "docs sharing a 50-char span must share a winnowed fingerprint")
-    graft.queries.Caches.release(spark, dir)
   }
 
   test("t45 winnowing: a doc past the 2^22 gram-position encoding limit fails loudly") {
@@ -776,14 +792,15 @@ class QualitySpec extends AnyFunSuite {
     // past 2²² gram positions; the operator's contract is to REFUSE
     // such docs instead of mis-fingerprinting them
     val over = "x" * ((1 << 22) + 20) // 1 gram position past the limit
-    val dir = docsDir(Seq("a normal document long enough to winnow ok", over))
-    val ex = intercept[Exception] {
-      SparkEntry.queries("t45_winnowing")(spark, dir).collect()
+    withDocs(Seq("a normal document long enough to winnow ok", over)) { dir =>
+      val ex = intercept[Exception] {
+        SparkEntry.queries("t45_winnowing")(spark, dir).collect()
+      }
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(ex).exists(_.contains("2^22 gram-position encoding limit")),
+        s"expected the winnow guard to fire, got: ${msgs(ex).take(3)}")
+      graft.queries.Caches.release(spark, dir)
     }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(ex).exists(_.contains("2^22 gram-position encoding limit")),
-      s"expected the winnow guard to fire, got: ${msgs(ex).take(3)}")
-    graft.queries.Caches.release(spark, dir)
   }
 }

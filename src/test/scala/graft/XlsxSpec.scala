@@ -10,9 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class XlsxSpec extends AnyFunSuite {
   import SparkTestBase.{spark, sfDir}
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory("xlsx").resolve(name).toString
-
   test("column ref encoding roundtrips") {
     Seq(0, 1, 25, 26, 27, 51, 52, 701, 702).foreach { i =>
       assert(Xlsx.colIndex(Xlsx.colRef(i) + "7") === i, s"idx $i ref ${Xlsx.colRef(i)}")
@@ -21,42 +18,48 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("write → read roundtrip preserves strings, numbers, nulls, Unicode") {
-    import spark.implicits._
-    val df = Seq(
-      ("Power bank Xiaomi", Some(12.5), Some(44001L), "хит & <спец> \"кавычки\""),
-      ("Кабель\nдве строки", None, None, "хвостовой пробел  "),
-      (null, Some(0.0), Some(-7L), null))
-      .toDF("name", "price", "article", "note")
-    val path = tmp("rt.xlsx")
-    Xlsx.write(Seq(("data", df)), path)
-    val back = Xlsx.read(spark, path)
-    assert(back.columns.toSeq === Seq("name", "price", "article", "note"))
-    val got = back.orderBy("name").collect().map(_.toSeq)
-    val want = df
-      .select(df.columns.map(c => col(c).cast("string")).toIndexedSeq: _*)
-      .orderBy("name").collect().map(_.toSeq)
-    assert(got.toSeq === want.toSeq)
+    SparkTestBase.withTempDir("xlsx") { dir =>
+      import spark.implicits._
+      val df = Seq(
+        ("Power bank Xiaomi", Some(12.5), Some(44001L), "хит & <спец> \"кавычки\""),
+        ("Кабель\nдве строки", None, None, "хвостовой пробел  "),
+        (null, Some(0.0), Some(-7L), null))
+        .toDF("name", "price", "article", "note")
+      val path = s"$dir/rt.xlsx"
+      Xlsx.write(Seq(("data", df)), path)
+      val back = Xlsx.read(spark, path)
+      assert(back.columns.toSeq === Seq("name", "price", "article", "note"))
+      val got = back.orderBy("name").collect().map(_.toSeq)
+      val want = df
+        .select(df.columns.map(c => col(c).cast("string")).toIndexedSeq: _*)
+        .orderBy("name").collect().map(_.toSeq)
+      assert(got.toSeq === want.toSeq)
+    }
   }
 
   test("empty header cells surface as pandas-style Unnamed: N") {
-    import spark.implicits._
-    val df = Seq(("a", "b", "c")).toDF("", "real", " ")
-    val path = tmp("unnamed.xlsx")
-    Xlsx.write(Seq(("s", df)), path)
-    assert(Xlsx.read(spark, path).columns.toSeq === Seq("Unnamed: 0", "real", "Unnamed: 2"))
+    SparkTestBase.withTempDir("xlsx") { dir =>
+      import spark.implicits._
+      val df = Seq(("a", "b", "c")).toDF("", "real", " ")
+      val path = s"$dir/unnamed.xlsx"
+      Xlsx.write(Seq(("s", df)), path)
+      assert(Xlsx.read(spark, path).columns.toSeq === Seq("Unnamed: 0", "real", "Unnamed: 2"))
+    }
   }
 
   test("multi-sheet report workbook: one sheet per dataset, read back by index") {
-    val report = SparkEntry.queries("s5_report_summary")(spark, sfDir)
-    val matches = SparkEntry.queries("j1_article_match")(spark, sfDir).limit(50)
-    val path = tmp("report.xlsx")
-    Xlsx.write(Seq(("Сводка", report), ("Совпадения", matches)), path)
-    val s1 = Xlsx.read(spark, path, sheet = 1)
-    assert(s1.columns.toSeq === report.columns.toSeq)
-    assert(s1.count() === report.count())
-    val s2 = Xlsx.read(spark, path, sheet = 2)
-    assert(s2.columns.toSeq === matches.columns.toSeq)
-    assert(s2.count() === 50)
+    SparkTestBase.withTempDir("xlsx") { dir =>
+      val report = SparkEntry.queries("s5_report_summary")(spark, sfDir)
+      val matches = SparkEntry.queries("j1_article_match")(spark, sfDir).limit(50)
+      val path = s"$dir/report.xlsx"
+      Xlsx.write(Seq(("Сводка", report), ("Совпадения", matches)), path)
+      val s1 = Xlsx.read(spark, path, sheet = 1)
+      assert(s1.columns.toSeq === report.columns.toSeq)
+      assert(s1.count() === report.count())
+      val s2 = Xlsx.read(spark, path, sheet = 2)
+      assert(s2.columns.toSeq === matches.columns.toSeq)
+      assert(s2.count() === 50)
+    }
   }
 
   test("committed xlsx fixture decodes to exactly the CSV fixture's content") {
@@ -69,10 +72,12 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("writer refuses data that cannot fit an xlsx sheet") {
-    val big = spark.range(1048576).toDF("id")
-    val e = intercept[IllegalArgumentException](
-      Xlsx.write(Seq(("too-big", big)), tmp("big.xlsx")))
-    assert(e.getMessage.contains("parquet"))
+    SparkTestBase.withTempDir("xlsx") { dir =>
+      val big = spark.range(1048576).toDF("id")
+      val e = intercept[IllegalArgumentException](
+        Xlsx.write(Seq(("too-big", big)), s"$dir/big.xlsx"))
+      assert(e.getMessage.contains("parquet"))
+    }
   }
 
   // ---- formatting-preserving rewrite (S6/S7 writeback) -------------------
@@ -138,52 +143,54 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("rewrite updates price cells while formatting survives byte-for-byte") {
-    val src = tmp("styled.xlsx")
-    val dst = tmp("updated.xlsx")
-    writeStyledFixture(src)
-    Xlsx.rewrite(src, dst, Map("B2" -> "149.5", "B3" -> "75"))
+    SparkTestBase.withTempDir("xlsx") { dir =>
+      val src = s"$dir/styled.xlsx"
+      val dst = s"$dir/updated.xlsx"
+      writeStyledFixture(src)
+      Xlsx.rewrite(src, dst, Map("B2" -> "149.5", "B3" -> "75"))
 
-    // the price update itself took
-    val rows = Xlsx.read(spark, dst).collect()
-    assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq ===
-      Seq(("Кабель", "149.5"), ("Адаптер", "75")))
+      // the price update itself took
+      val rows = Xlsx.read(spark, dst).collect()
+      assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq ===
+        Seq(("Кабель", "149.5"), ("Адаптер", "75")))
 
-    // formatting: styles.xml (the format definitions) byte-identical...
-    assert(java.util.Arrays.equals(entryBytes(dst, "xl/styles.xml"),
-      entryBytes(src, "xl/styles.xml")), "styles.xml must pass through untouched")
-    // ...and every cell keeps its style index, including the two patched
-    val sheet = new String(entryBytes(dst, "xl/worksheets/sheet1.xml"), "UTF-8")
-    def cellXml(ref: String): String =
-      s"""<c r="$ref"[^>]*>.*?</c>""".r.findFirstIn(sheet)
-        .getOrElse(fail(s"cell $ref missing from rewritten sheet"))
-    assert(cellXml("B2").contains("s=\"2\"") && cellXml("B2").contains("<v>149.5</v>"))
-    assert(cellXml("B3").contains("s=\"2\"") && cellXml("B3").contains("<v>75</v>"))
-    assert(cellXml("A1").contains("s=\"1\"") && cellXml("A1").contains("Товар"))
-    assert(cellXml("A2").contains("Кабель"), "untouched cells pass through")
+      // formatting: styles.xml (the format definitions) byte-identical...
+      assert(java.util.Arrays.equals(entryBytes(dst, "xl/styles.xml"),
+        entryBytes(src, "xl/styles.xml")), "styles.xml must pass through untouched")
+      // ...and every cell keeps its style index, including the two patched
+      val sheet = new String(entryBytes(dst, "xl/worksheets/sheet1.xml"), "UTF-8")
+      def cellXml(ref: String): String =
+        s"""<c r="$ref"[^>]*>.*?</c>""".r.findFirstIn(sheet)
+          .getOrElse(fail(s"cell $ref missing from rewritten sheet"))
+      assert(cellXml("B2").contains("s=\"2\"") && cellXml("B2").contains("<v>149.5</v>"))
+      assert(cellXml("B3").contains("s=\"2\"") && cellXml("B3").contains("<v>75</v>"))
+      assert(cellXml("A1").contains("s=\"1\"") && cellXml("A1").contains("Товар"))
+      assert(cellXml("A2").contains("Кабель"), "untouched cells pass through")
 
-    // a typo'd target must fail loudly, not silently skip the update
-    val e = intercept[IllegalArgumentException](
-      Xlsx.rewrite(src, tmp("bad.xlsx"), Map("B2" -> "1", "Z99" -> "2")))
-    assert(e.getMessage.contains("Z99"))
-    // ...and so must a missing sheet part (before any output is written)
-    val e2 = intercept[IllegalArgumentException](
-      Xlsx.rewrite(src, tmp("bad2.xlsx"), Map("B2" -> "1"), sheet = 7))
-    assert(e2.getMessage.contains("sheet7"))
+      // a typo'd target must fail loudly, not silently skip the update
+      val e = intercept[IllegalArgumentException](
+        Xlsx.rewrite(src, s"$dir/bad.xlsx", Map("B2" -> "1", "Z99" -> "2")))
+      assert(e.getMessage.contains("Z99"))
+      // ...and so must a missing sheet part (before any output is written)
+      val e2 = intercept[IllegalArgumentException](
+        Xlsx.rewrite(src, s"$dir/bad2.xlsx", Map("B2" -> "1"), sheet = 7))
+      assert(e2.getMessage.contains("sheet7"))
 
-    // a whole-column update (the writeback of a repriced list): every
-    // cell of the price column lands, every other cell is unchanged
-    import spark.implicits._
-    val n = 3000
-    val list = (1 to n).map(i => (s"item $i", i.toDouble, s"note $i")).toDF("name", "price", "note")
-    val listSrc = tmp("list.xlsx")
-    val listDst = tmp("list_updated.xlsx")
-    Xlsx.write(Seq(("list", list)), listSrc)
-    Xlsx.rewrite(listSrc, listDst,
-      (1 to n).map(i => s"B${i + 1}" -> s"${i * 10}").toMap)
-    val before = Xlsx.read(spark, listSrc).collect().map(r => (r.getString(0), r.getString(2)))
-    val after = Xlsx.read(spark, listDst).collect()
-    assert(after.length === n)
-    assert(after.map(_.getString(1)).toSeq === (1 to n).map(i => s"${i * 10}"))
-    assert(after.map(r => (r.getString(0), r.getString(2))).toSeq === before.toSeq)
+      // a whole-column update (the writeback of a repriced list): every
+      // cell of the price column lands, every other cell is unchanged
+      import spark.implicits._
+      val n = 3000
+      val list = (1 to n).map(i => (s"item $i", i.toDouble, s"note $i")).toDF("name", "price", "note")
+      val listSrc = s"$dir/list.xlsx"
+      val listDst = s"$dir/list_updated.xlsx"
+      Xlsx.write(Seq(("list", list)), listSrc)
+      Xlsx.rewrite(listSrc, listDst,
+        (1 to n).map(i => s"B${i + 1}" -> s"${i * 10}").toMap)
+      val before = Xlsx.read(spark, listSrc).collect().map(r => (r.getString(0), r.getString(2)))
+      val after = Xlsx.read(spark, listDst).collect()
+      assert(after.length === n)
+      assert(after.map(_.getString(1)).toSeq === (1 to n).map(i => s"${i * 10}"))
+      assert(after.map(r => (r.getString(0), r.getString(2))).toSeq === before.toSeq)
+    }
   }
 }

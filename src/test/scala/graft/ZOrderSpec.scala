@@ -28,38 +28,39 @@ class ZOrderSpec extends AnyFunSuite {
       .select(col("l_orderkey"),
         expr("l_partkey & 65535").as("x"), expr("l_suppkey & 65535").as("y"))
       .withColumn("z", PipelineQueries.zOrderKey("x", "y"))
-    val base = java.nio.file.Files.createTempDirectory("graft_zorder").toString
-    // 16 files per layout; one row group each at this size, so row-group
-    // pruning == file-level pruning here
-    li.repartitionByRange(16, col("z")).sortWithinPartitions("z")
-      .write.mode("overwrite").parquet(s"$base/zorder")
-    li.repartitionByRange(16, col("l_orderkey")).sortWithinPartitions("l_orderkey")
-      .write.mode("overwrite").parquet(s"$base/linear")
+    SparkTestBase.withTempDir("graft_zorder") { base =>
+      // 16 files per layout; one row group each at this size, so row-group
+      // pruning == file-level pruning here
+      li.repartitionByRange(16, col("z")).sortWithinPartitions("z")
+        .write.mode("overwrite").parquet(s"$base/zorder")
+      li.repartitionByRange(16, col("l_orderkey")).sortWithinPartitions("l_orderkey")
+        .write.mode("overwrite").parquet(s"$base/linear")
 
-    // box covering ~1/16 of each dimension's observed range
-    val Array(r) = li.agg(max("x"), max("y")).collect()
-    val (mx, my) = (r.getLong(0), r.getLong(1))
-    def probe(dir: String): (Long, Long) = {
-      val df = spark.read.parquet(s"$base/$dir")
-        .filter(col("x").between(mx / 2, mx / 2 + math.max(1, mx / 16)) &&
-          col("y").between(my / 2, my / 2 + math.max(1, my / 16)))
-      val n = df.count()
-      val scanned = {
-        val d2 = spark.read.parquet(s"$base/$dir")
+      // box covering ~1/16 of each dimension's observed range
+      val Array(r) = li.agg(max("x"), max("y")).collect()
+      val (mx, my) = (r.getLong(0), r.getLong(1))
+      def probe(dir: String): (Long, Long) = {
+        val df = spark.read.parquet(s"$base/$dir")
           .filter(col("x").between(mx / 2, mx / 2 + math.max(1, mx / 16)) &&
             col("y").between(my / 2, my / 2 + math.max(1, my / 16)))
-        d2.collect()
-        scanRows(d2.queryExecution.executedPlan)
+        val n = df.count()
+        val scanned = {
+          val d2 = spark.read.parquet(s"$base/$dir")
+            .filter(col("x").between(mx / 2, mx / 2 + math.max(1, mx / 16)) &&
+              col("y").between(my / 2, my / 2 + math.max(1, my / 16)))
+          d2.collect()
+          scanRows(d2.queryExecution.executedPlan)
+        }
+        (n, scanned)
       }
-      (n, scanned)
+      val (nZ, scannedZ) = probe("zorder")
+      val (nL, scannedL) = probe("linear")
+      assert(nZ === nL, "layouts must return identical results")
+      // the linear layout reads essentially everything (every file's x/y
+      // stats span the full range); z-order must scan at most half of it
+      assert(scannedZ * 2 <= scannedL,
+        s"z-order layout scanned $scannedZ rows vs linear $scannedL — no pruning win")
+      info(s"box predicate: z-order scanned $scannedZ rows, linear scanned $scannedL, result $nZ rows")
     }
-    val (nZ, scannedZ) = probe("zorder")
-    val (nL, scannedL) = probe("linear")
-    assert(nZ === nL, "layouts must return identical results")
-    // the linear layout reads essentially everything (every file's x/y
-    // stats span the full range); z-order must scan at most half of it
-    assert(scannedZ * 2 <= scannedL,
-      s"z-order layout scanned $scannedZ rows vs linear $scannedL — no pruning win")
-    info(s"box predicate: z-order scanned $scannedZ rows, linear scanned $scannedL, result $nZ rows")
   }
 }
